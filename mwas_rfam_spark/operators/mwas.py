@@ -15,19 +15,20 @@ Spark-first re-expression, designed for the 100 TB case:
   set's *minority side* once (|members| rows), then derive the majority
   side as total − minority. Work drops from O(sets × biosamples) to
   O(sets × |minority|) with implicit zeros contributing nothing.
-* **Tests as vectorized kernels.** Welch t + df are closed-form Spark SQL
-  over the summary stats; only the t-distribution tail and the permutation
-  resampling run in Arrow-batched pandas UDFs, keyed (bioproject, group,
-  set_id) — embarrassingly parallel, which is exactly what the reference
-  lacked (its permutation tests dominate runtime, mwas_results_analyze.py:62-65).
-* Statistic-signature memoization (mg:350,396-399) becomes a distinct-then-
-  join on the summary-stat key, and is applied across groups, not per-group.
+* **Tests as one vectorized kernel pass.** Welch t + df are closed-form
+  Spark SQL over the summary stats; the t-distribution tail and the
+  permutation resampling run together in ONE Arrow-native cogrouped
+  kernel per (bioproject, group) — embarrassingly parallel, which is
+  exactly what the reference lacked (its permutation tests dominate
+  runtime, mwas_results_analyze.py:62-65).
+* Statistic-signature memoization (mg:350,396-399) is replaced by
+  vectorization: the Welch tail is one numpy call over all of a group's
+  t-test rows, and one shared permutation null serves all of its sets.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,7 +49,9 @@ _LIVE_PERSISTS: list[DataFrame] = []
 
 
 def _materialize(df: DataFrame, cfg: MwasConfig) -> DataFrame:
-    """Pin a multiply-consumed subplan.
+    """Pin a multiply-consumed subplan; a relation that is already an
+    eager checkpoint (e.g. the server's pinned metadata) is returned
+    as-is instead of being copied again.
 
     Default: ``localCheckpoint`` — eager (so fan-out branches can never
     race an unsettled cache) and lineage-truncating (so every downstream
@@ -60,6 +63,9 @@ def _materialize(df: DataFrame, cfg: MwasConfig) -> DataFrame:
     callers that fan out must settle it themselves (they do — the two
     count() settles below).
     """
+    plan = df._jdf.logicalPlan()
+    if plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().isCheckpointed():
+        return df
     if cfg.use_local_checkpoint:
         df = df.localCheckpoint()
     else:
@@ -125,24 +131,26 @@ def resolve_and_normalize(
 
 def biosample_rollup(resolved: DataFrame) -> DataFrame:
     """A4 — mean RPM per (bio_project, group, bio_sample) over its runs
-    (mg:503-518: np.mean of per-run normalized values)."""
+    (mg:503-518: np.mean of per-run normalized values), plus the run
+    count ``n_runs`` the group skip rule sums."""
     return resolved.groupBy("bio_project", "group", "bio_sample").agg(
-        F.avg("rpm").alias("rpm")
+        F.avg("rpm").alias("rpm"), F.count("*").alias("n_runs")
     )
 
 
-def group_skip_flags(resolved: DataFrame, cfg: MwasConfig) -> DataFrame:
+def group_skip_flags(rollup: DataFrame, cfg: MwasConfig) -> DataFrame:
     """Group-level skip rule (mg:483-491): a group with fewer provided rows
     than the threshold is processed with skip_tests=True (descriptive rows
     only). NB the reference counts post-fillna non-null rows — i.e. ALL
     rows — despite the 'nonzeros' name (SURVEY.md §7 parity flag); we
-    reproduce that row-count semantics.
+    reproduce that row-count semantics by summing the rollup's per-
+    biosample ``n_runs``, so the resolved rows need no pin of their own.
     """
     threshold = (
         cfg.group_nonzeros_threshold if cfg.implicit_zeros else cfg.min_cohort_for_permutation
     )
-    return resolved.groupBy("bio_project", "group").agg(
-        (F.count("*") < F.lit(threshold)).alias("skip_tests")
+    return rollup.groupBy("bio_project", "group").agg(
+        (F.sum("n_runs") < F.lit(threshold)).alias("skip_tests")
     )
 
 
@@ -216,6 +224,8 @@ def cohort_stats(
     n_all = F.col("n") if cfg.implicit_zeros else F.col("n_obs")
     n_m = F.col("n_members") if cfg.implicit_zeros else F.col("n_obs_m")
 
+    # minority side = the members; the true side is the minority for
+    # include sets and its complement (total − minority) otherwise
     pairs = (
         sets_meta.join(ref_df.select("bioproject", "n"), "bioproject")
         .join(
@@ -224,23 +234,30 @@ def cohort_stats(
         )
         .join(member_obs, ["bioproject", "group", "set_id"], "left")
         .na.fill({"n_obs_m": 0, "sum_m": 0.0, "ss_m": 0.0})
-        .withColumn("n_all", n_all)
-        .withColumn("n_m", n_m)
-        .withColumn("n_true", F.when(F.col("include"), F.col("n_m")).otherwise(F.col("n_all") - F.col("n_m")))
-        .withColumn("n_false", F.col("n_all") - F.col("n_true"))
-        .withColumn("sum_true", F.when(F.col("include"), F.col("sum_m")).otherwise(F.col("sum_all") - F.col("sum_m")))
-        .withColumn("sum_false", F.col("sum_all") - F.col("sum_true"))
-        .withColumn("ss_true", F.when(F.col("include"), F.col("ss_m")).otherwise(F.col("ss_all") - F.col("ss_m")))
-        .withColumn("ss_false", F.col("ss_all") - F.col("ss_true"))
+        .withColumns(
+            {
+                "n_true": F.when(F.col("include"), n_m).otherwise(n_all - n_m),
+                "sum_true": F.when(F.col("include"), F.col("sum_m")).otherwise(
+                    F.col("sum_all") - F.col("sum_m")
+                ),
+                "ss_true": F.when(F.col("include"), F.col("ss_m")).otherwise(
+                    F.col("ss_all") - F.col("ss_m")
+                ),
+            }
+        )
     )
+    n_true, sum_true, ss_true = F.col("n_true"), F.col("sum_true"), F.col("ss_true")
+    n_false = n_all - n_true
+    sum_false = F.col("sum_all") - sum_true
+    ss_false = F.col("ss_all") - ss_true
 
-    def _mean(s: str, n: str) -> Column:
-        return F.when(F.col(n) > 0, F.col(s) / F.col(n)).otherwise(F.lit(None))
+    def _mean(s: Column, n: Column) -> Column:
+        return F.when(n > 0, s / n).otherwise(F.lit(None))
 
-    def _sd(ss: str, s: str, n: str) -> Column:
-        mean = F.col(s) / F.col(n)
-        var = F.greatest(F.col(ss) / F.col(n) - mean * mean, F.lit(0.0))
-        return F.when(F.col(n) > 0, F.sqrt(var)).otherwise(F.lit(None))
+    def _sd(ss: Column, s: Column, n: Column) -> Column:
+        mean = s / n
+        var = F.greatest(ss / n - mean * mean, F.lit(0.0))
+        return F.when(n > 0, F.sqrt(var)).otherwise(F.lit(None))
 
     return pairs.select(
         F.col("bioproject").alias("bio_project"),
@@ -252,11 +269,11 @@ def cohort_stats(
         "members",
         "n_obs_m",
         "n_true",
-        "n_false",
-        _mean("sum_true", "n_true").alias("mean_rpm_true"),
-        _mean("sum_false", "n_false").alias("mean_rpm_false"),
-        _sd("ss_true", "sum_true", "n_true").alias("sd_rpm_true"),
-        _sd("ss_false", "sum_false", "n_false").alias("sd_rpm_false"),
+        n_false.alias("n_false"),
+        _mean(sum_true, n_true).alias("mean_rpm_true"),
+        _mean(sum_false, n_false).alias("mean_rpm_false"),
+        _sd(ss_true, sum_true, n_true).alias("sd_rpm_true"),
+        _sd(ss_false, sum_false, n_false).alias("sd_rpm_false"),
     )
 
 
@@ -265,15 +282,7 @@ def cohort_stats(
 # ---------------------------------------------------------------------------
 
 
-@F.pandas_udf(T.DoubleType())
-def welch_p_value(t_stat: pd.Series, df: pd.Series) -> pd.Series:
-    """Two-sided p from the Welch t statistic — Arrow-vectorized tail of
-    Student's t (the only non-closed-form piece of T1)."""
-    p = 2.0 * student_t_sf(np.abs(t_stat.to_numpy(np.float64)), df.to_numpy(np.float64))
-    return pd.Series(p)
-
-
-_PERM_GROUP_RESULT = T.StructType(
+_TEST_RESULT = T.StructType(
     [
         T.StructField("bio_project", T.StringType()),
         T.StructField("group", T.StringType()),
@@ -286,91 +295,28 @@ _PERM_GROUP_RESULT = T.StructType(
 )
 
 
-def _make_grouped_permutation_fn(n_resamples: int, base_seed: int):
-    """Per-(bio_project, group) permutation kernel for applyInPandas.
+def _make_grouped_test_fn(n_resamples: int, base_seed: int):
+    """Per-(bio_project, group) test kernel for ``cogroup(...).applyInArrow``:
+    ONE Python pass gives every tested row of the group its p-value.
 
-    Every set within a group splits the SAME pooled value vector, so one
-    shared permutation-matrix pass (prefix-cumsum trick in
-    grouped_permutation_mean_diff) serves all of the group's tests —
-    the per-test resampling cost the reference pays (mg:413-419) is
-    amortized across sets. Seeded per (bio_project, group): evaluating
-    any subset of sets reproduces identical p-values.
+    The left side holds the group's tested rows (``is_t`` marks the
+    Welch rows, whose ``stat``/``welch_df`` come from SQL); the right
+    side holds the group's pooled observed values (``obs_rpm``, one row)
+    when any row takes the permutation test. Cogrouped, not joined:
+    joining the pooled array onto every set row would hold |sets| copies
+    of an up-to-cap-sized vector in one Arrow batch, defeating
+    max_group_observations (r11 review finding).
+
+    * Welch rows: p = 2·sf(|t|, df), one vectorized call over the group.
+      A NULL t (no stats) keeps a NULL p; t = NaN (0/0) gives p = NaN.
+    * Permutation rows: every set of a group splits the SAME pooled
+      vector, so one shared permutation-matrix pass (prefix-cumsum trick
+      in grouped_permutation_mean_diff) serves all of them — the
+      per-test resampling cost the reference pays (mg:413-419) is
+      amortized across sets. Seeded per (bio_project, group): evaluating
+      any subset of sets reproduces identical p-values. With no pooled
+      row the permutation rows yield no output row (p stays NULL).
     """
-    import hashlib
-
-    def kernel(key: tuple, pdf: pd.DataFrame, vals: pd.DataFrame) -> pd.DataFrame:
-        import time
-
-        # cogrouped: `pdf` holds the group's per-SET rows, `vals` its ONE
-        # (obs_rpm) row — joining the pooled array onto every set row
-        # used to hold |sets| copies of an up-to-cap-sized vector in a
-        # single Arrow batch, defeating max_group_observations (r11
-        # review finding). A group missing either side yields no rows.
-        if len(pdf) == 0 or len(vals) == 0:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype="object") for f in _PERM_GROUP_RESULT}
-            )
-        t0 = time.perf_counter()
-        bp, group = key
-        seed_hex = hashlib.sha256(f"{bp}|{group}".encode()).hexdigest()[:15]
-        seed = (int(seed_hex, 16) ^ base_seed) & 0x7FFFFFFFFFFFFFFF
-        # pooled = the group's full value vector: observed rpms padded with
-        # implicit zeros to the cohort universe size, in canonical sorted
-        # order. Identical for every set row of the group by construction.
-        n_tot = int(pdf["n_true"].iloc[0]) + int(pdf["n_false"].iloc[0])
-        obs = np.asarray(vals["obs_rpm"].iloc[0], dtype=np.float64)
-        pooled = np.zeros(n_tot, dtype=np.float64)
-        pooled[: obs.shape[0]] = obs
-        pooled = np.sort(pooled)
-        n_xs = pdf["n_true"].to_numpy(np.int64)
-        observeds = pdf["observed"].to_numpy(np.float64)
-        ps = grouped_permutation_mean_diff(
-            pooled, n_xs, observeds, n_resamples, np.random.default_rng(seed)
-        )
-        # T5 telemetry (reference mg:354-356,437-438 emits per-test wall
-        # time + tracemalloc peak): the shared-null pass is amortized, so
-        # per-test runtime = group kernel time / #tests; bytes = the
-        # permutation buffer high-water mark
-        elapsed = (time.perf_counter() - t0) / max(len(pdf), 1)
-        chunk = perm_chunk_rows(n_resamples, n_tot)
-        kernel_bytes = int(chunk * n_tot * 8)
-        return pd.DataFrame(
-            {
-                "bio_project": pdf["bio_project"].astype(str),
-                "group": pdf["group"].astype(str),
-                "set_id": pdf["set_id"].astype(str),
-                "stat": observeds,
-                "p": ps,
-                "kernel_seconds": elapsed,
-                "kernel_bytes": kernel_bytes,
-            }
-        )
-
-    return kernel
-
-
-#: permutation-wave Python boundary: Arrow-native cogroup (Spark 4
-#: ``applyInArrow``) by default — the kernel is pure numpy over the
-#: group's arrays, so the pandas DataFrame construction/teardown per
-#: group (both cogroup sides + the result frame) was pure overhead on
-#: top of the Arrow batches that cross the boundary either way
-#: (guide §4; r14 probe: tools/probe_perm_arrow.py). Env knob for the
-#: probe's A/B and as an escape hatch; the pandas twin stays the
-#: fallback on any Spark without cogrouped applyInArrow.
-def _perm_use_arrow() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_PERM_ARROW", "1") != "0"
-
-
-def _make_grouped_permutation_arrow_fn(n_resamples: int, base_seed: int):
-    """Arrow-native twin of :func:`_make_grouped_permutation_fn` for
-    ``cogroup(...).applyInArrow`` — identical statistics by
-    construction (same seed derivation, same pooled-vector assembly,
-    same numpy kernel on the same float64 arrays); only the
-    batch↔Python conversion differs (pyarrow column views instead of
-    pandas frames). Telemetry semantics match the pandas twin: elapsed
-    is measured from after the empty check, amortized per set row."""
     import hashlib
 
     def kernel(key: tuple, left, right):
@@ -378,60 +324,55 @@ def _make_grouped_permutation_arrow_fn(n_resamples: int, base_seed: int):
 
         import pyarrow as pa
 
-        if left.num_rows == 0 or right.num_rows == 0:
-            return pa.table(
-                {
-                    "bio_project": pa.array([], pa.string()),
-                    "group": pa.array([], pa.string()),
-                    "set_id": pa.array([], pa.string()),
-                    "stat": pa.array([], pa.float64()),
-                    "p": pa.array([], pa.float64()),
-                    "kernel_seconds": pa.array([], pa.float64()),
-                    "kernel_bytes": pa.array([], pa.int64()),
-                }
-            )
-        t0 = time.perf_counter()
-        bp = key[0].as_py()
-        group = key[1].as_py()
-        seed_hex = hashlib.sha256(f"{bp}|{group}".encode()).hexdigest()[:15]
-        seed = (int(seed_hex, 16) ^ base_seed) & 0x7FFFFFFFFFFFFFFF
-        n_xs = np.asarray(
-            left.column("n_true").to_numpy(zero_copy_only=False), dtype=np.int64
-        )
-        n_tot = int(n_xs[0]) + int(left.column("n_false")[0].as_py())
-        # ListScalar.values: the row's flat double array, no Python list
-        obs = np.asarray(
-            right.column("obs_rpm")[0].values.to_numpy(zero_copy_only=False),
-            dtype=np.float64,
-        )
-        pooled = np.zeros(n_tot, dtype=np.float64)
-        pooled[: obs.shape[0]] = obs
-        pooled = np.sort(pooled)
-        observeds = np.asarray(
-            left.column("observed").to_numpy(zero_copy_only=False), dtype=np.float64
-        )
-        ps = grouped_permutation_mean_diff(
-            pooled, n_xs, observeds, n_resamples, np.random.default_rng(seed)
-        )
-        elapsed = (time.perf_counter() - t0) / max(left.num_rows, 1)
-        chunk = perm_chunk_rows(n_resamples, n_tot)
-        kernel_bytes = int(chunk * n_tot * 8)
         m = left.num_rows
-        return pa.table(
+        is_t = np.asarray(left.column("is_t").to_numpy(zero_copy_only=False), dtype=bool)
+        stat = np.asarray(left.column("stat").to_numpy(zero_copy_only=False), dtype=np.float64)
+        p = np.full(m, np.nan)
+        seconds = np.zeros(m)
+        nbytes = np.zeros(m, dtype=np.int64)
+        if is_t.any():
+            dfree = left.column("welch_df").to_numpy(zero_copy_only=False)
+            p[is_t] = 2.0 * student_t_sf(np.abs(stat[is_t]), dfree[is_t])
+        perm = ~is_t
+        if perm.any() and right.num_rows:
+            # T5 telemetry (reference mg:354-356,437-438 emits per-test
+            # wall time + tracemalloc peak): the shared-null pass is
+            # amortized, so per-test runtime = group kernel time / #tests;
+            # bytes = the permutation buffer high-water mark
+            t0 = time.perf_counter()
+            seed_hex = hashlib.sha256(f"{key[0].as_py()}|{key[1].as_py()}".encode()).hexdigest()[:15]
+            seed = (int(seed_hex, 16) ^ base_seed) & 0x7FFFFFFFFFFFFFFF
+            n_xs = np.asarray(left.column("n_true").to_numpy(zero_copy_only=False), dtype=np.int64)
+            # pooled = the group's full value vector: observed rpms padded
+            # with implicit zeros to the cohort universe size, in canonical
+            # sorted order (ListScalar.values: the flat array, no Python list)
+            n_tot = int(n_xs[0]) + int(left.column("n_false")[0].as_py())
+            obs = np.asarray(
+                right.column("obs_rpm")[0].values.to_numpy(zero_copy_only=False),
+                dtype=np.float64,
+            )
+            pooled = np.zeros(n_tot, dtype=np.float64)
+            pooled[: obs.shape[0]] = obs
+            pooled = np.sort(pooled)
+            p[perm] = grouped_permutation_mean_diff(
+                pooled, n_xs[perm], stat[perm], n_resamples, np.random.default_rng(seed)
+            )
+            seconds[perm] = (time.perf_counter() - t0) / int(perm.sum())
+            nbytes[perm] = perm_chunk_rows(n_resamples, n_tot) * n_tot * 8
+        out = pa.table(
             {
                 "bio_project": left.column("bio_project"),
                 "group": left.column("group"),
                 "set_id": left.column("set_id"),
-                "stat": left.column("observed"),
-                "p": pa.array(ps, type=pa.float64()),
-                "kernel_seconds": pa.array(
-                    np.full(m, elapsed, dtype=np.float64)
-                ),
-                "kernel_bytes": pa.array(
-                    np.full(m, kernel_bytes, dtype=np.int64)
-                ),
+                "stat": left.column("stat"),
+                "p": pa.array(p, mask=left.column("stat").is_null().to_numpy(zero_copy_only=False)),
+                "kernel_seconds": pa.array(seconds),
+                "kernel_bytes": pa.array(nbytes),
             }
         )
+        if right.num_rows == 0 and not is_t.all():
+            out = out.filter(pa.array(is_t))
+        return out
 
     return kernel
 
@@ -479,8 +420,8 @@ def _welch_columns(df: DataFrame) -> DataFrame:
     den1 = F.when(F.col("n_true") > 1, vn1**2 / (F.col("n_true") - 1))
     den2 = F.when(F.col("n_false") > 1, vn2**2 / (F.col("n_false") - 1))
     dfree = F.when(vsum > 0, vsum**2 / (den1 + den2))
-    return df.withColumn("test_statistic", t).withColumn(
-        "welch_df", F.coalesce(dfree, F.lit(1.0))
+    return df.withColumns(
+        {"test_statistic": t, "welch_df": F.coalesce(dfree, F.lit(1.0))}
     )
 
 
@@ -519,54 +460,43 @@ def run_tests(
         .filter(~((F.col("mean_rpm_true") == 0) & (F.col("mean_rpm_false") == 0)))
         .withColumn("skip_tests", F.col("skip_tests") | F.lit(cfg.skip_tests))
     )
-    # three branches (t-test / permutation / skipped) consume `base`; without
-    # pinning, each branch re-executes the full upstream pipeline
-    # (catalog join → rollup → cohort stats) — materialize once
+    # the kernel input, the pooled-vector eligibility and the final join
+    # all consume `base`; without pinning, each re-executes the full
+    # upstream pipeline (catalog join → rollup → cohort stats)
     base = _materialize(base, cfg)
 
     use_t_test = (
         F.least(F.col("n_true"), F.col("n_false")) < cfg.min_cohort_for_permutation
     ) | F.lit(cfg.t_test_only)
 
-    # --- t-test branch: memoized on the summary-stat signature (A8) -------
-    t_branch = _welch_columns(
-        base.filter(~F.col("skip_tests") & use_t_test)
+    # one row per tested cohort: Welch t/df from SQL for t-test rows, the
+    # observed mean difference for permutation rows. The kernel needs only
+    # (pooled group values, per-set cohort size, per-set observed mean
+    # difference) — the per-set true/false VALUE arrays the reference
+    # materializes (mg:365-372) are never built.
+    tested = _welch_columns(base.filter(~F.col("skip_tests"))).select(
+        "bio_project",
+        "group",
+        "set_id",
+        "n_true",
+        "n_false",
+        use_t_test.alias("is_t"),
+        F.when(use_t_test, F.col("test_statistic"))
+        .otherwise(F.col("mean_rpm_true") - F.col("mean_rpm_false"))
+        .alias("stat"),
+        "welch_df",
     )
-    sig_cols = ["n_true", "n_false", "mean_rpm_true", "mean_rpm_false", "sd_rpm_true", "sd_rpm_false"]
-    distinct_sigs = t_branch.select("test_statistic", "welch_df", *sig_cols).distinct()
-    sig_p = distinct_sigs.withColumn(
-        "p_value", welch_p_value(F.abs(F.col("test_statistic")), F.col("welch_df"))
-    ).drop("test_statistic", "welch_df")
-    # closed-form t-test cost is sub-microsecond per row — telemetry 0
-    # (the reference's nonzero times there measure scipy call overhead)
-    t_done = (
-        t_branch.join(sig_p, sig_cols, "left")
-        .withColumn("status", F.lit("t_test"))
-        .withColumn("runtime_seconds", F.lit(0.0))
-        .withColumn("memory_usage_bytes", F.lit(0).cast("long"))
-    )
-
-    # --- permutation branch -----------------------------------------------
-    # The kernel needs only (pooled group values, per-set cohort size,
-    # per-set observed mean difference) — the per-set true/false VALUE
-    # arrays the reference materializes (mg:365-372) are never built:
-    # observed = mean_rpm_true - mean_rpm_false comes from the subtraction
-    # aggregates, and the null depends only on the group's pooled vector.
-    perm_base = base.filter(~F.col("skip_tests") & ~use_t_test)
-    if cfg.t_test_only:
-        # short-circuit: no row can reach the permutation branch, so don't
-        # build the pooled-vector aggregation at all (Catalyst folds the
-        # false-filtered branch to an empty LocalRelation)
-        perm_base = perm_base.filter(F.lit(False))
     # pooled vectors ONLY for permutation-eligible groups: without the
     # semi-join the collect_list materialized a potentially multi-
     # million-element array per group for groups no kernel would ever
-    # read (most rows take the t branch at the default thresholds —
+    # read (most rows take the t-test at the default thresholds —
     # r11 review finding)
     # renamed keys: eligible and rollup share upstream lineage (both
     # trace to the rollup), and a name-based semi-join trips the
     # ambiguous-self-join analyzer when lineage is not checkpoint-cut
-    eligible = perm_base.select(
+    # under t_test_only `is_t` is the literal true, so Catalyst folds
+    # this side to an empty relation and never builds the aggregation.
+    eligible = tested.filter(~F.col("is_t")).select(
         F.col("bio_project").alias("__e_bp"), F.col("group").alias("__e_g")
     ).distinct()
     group_vals = (
@@ -583,14 +513,6 @@ def run_tests(
         )
         .groupBy("bio_project", "group")
         .agg(F.collect_list("rpm").alias("obs_rpm"))
-    )
-    pm = perm_base.select(
-        "bio_project",
-        "group",
-        "set_id",
-        "n_true",
-        "n_false",
-        (F.col("mean_rpm_true") - F.col("mean_rpm_false")).alias("observed"),
     )
     if cfg.max_group_observations is not None:
         # the pooled vector is the one row bounded by biosamples-per-
@@ -623,80 +545,49 @@ def run_tests(
                 ).cast("array<double>")
             ),
         )
-    # one Arrow-batched kernel call per (bio_project, group): the shared
-    # permutation-null pass amortizes resampling across all of a group's
-    # sets (see _make_grouped_permutation_fn). The explicit repartition
-    # spreads groups evenly over 2×cores partitions — the natural hash
-    # layout packs several CPU-heavy groups per partition and AQE keeps
-    # that skew (bytes are tiny; the cost is compute, which AQE can't see).
-    n_part = max(stats_df.sparkSession.sparkContext.defaultParallelism * 2, 8)
+    # one Arrow-native kernel call per (bio_project, group) gives every
+    # tested row its p-value (see _make_grouped_test_fn). The explicit
+    # repartition spreads groups evenly over ONE wave of tasks
+    # (defaultParallelism partitions): the natural hash layout packs
+    # several CPU-heavy groups per partition and AQE keeps that skew
+    # (bytes are tiny; the cost is compute, which AQE can't see), while
+    # every extra wave pays the Python workers' per-task start-up again.
+    n_part = stats_df.sparkSession.sparkContext.defaultParallelism
     # fresh attribute ids on the values side: both cogroup sides trace
-    # to the rollup, and flatMapCoGroupsInPandas (unlike a name-list
-    # join) has no disambiguation rule for shared-lineage columns;
-    # cogroup matches keys by POSITION, so the rename is free
+    # to the rollup, and a cogroup (unlike a name-list join) has no
+    # disambiguation rule for shared-lineage columns; cogroup matches
+    # keys by POSITION, so the rename is free
     gv = group_vals.select(
         F.col("bio_project").alias("__gv_bp"),
         F.col("group").alias("__gv_g"),
         "obs_rpm",
     )
-    cogrouped = (
-        pm.repartition(n_part, "bio_project", "group")
+    tested_p = (
+        tested.repartition(n_part, "bio_project", "group")
         .groupBy("bio_project", "group")
         .cogroup(
-            gv.repartition(n_part, "__gv_bp", "__gv_g").groupBy(
-                "__gv_bp", "__gv_g"
-            )
+            gv.repartition(n_part, "__gv_bp", "__gv_g").groupBy("__gv_bp", "__gv_g")
         )
-    )
-    # Arrow-native kernel by default (identical statistics, less
-    # per-group conversion overhead — see _perm_use_arrow); pandas twin
-    # kept as the fallback/escape hatch
-    if _perm_use_arrow() and hasattr(cogrouped, "applyInArrow"):
-        perm_res = cogrouped.applyInArrow(
-            _make_grouped_permutation_arrow_fn(
-                cfg.permutation_resamples, cfg.permutation_seed
-            ),
-            _PERM_GROUP_RESULT,
+        .applyInArrow(
+            _make_grouped_test_fn(cfg.permutation_resamples, cfg.permutation_seed),
+            _TEST_RESULT,
         )
-    else:
-        perm_res = cogrouped.applyInPandas(
-            _make_grouped_permutation_fn(
-                cfg.permutation_resamples, cfg.permutation_seed
-            ),
-            _PERM_GROUP_RESULT,
-        )
-    perm_done = (
-        perm_base.join(perm_res, ["bio_project", "group", "set_id"], "left")
-        .withColumn("test_statistic", F.col("stat"))
-        .withColumn("p_value", F.col("p"))
-        .withColumn("welch_df", F.lit(None).cast("double"))
-        .withColumn("status", F.lit("permutation_test"))
-        .withColumn("runtime_seconds", F.coalesce("kernel_seconds", F.lit(0.0)))
-        .withColumn("memory_usage_bytes", F.coalesce("kernel_bytes", F.lit(0)).cast("long"))
-        .drop("stat", "p", "kernel_seconds", "kernel_bytes")
     )
 
-    # --- skipped branch (mg:390-394, skip_tests=True rows) ----------------
-    skipped = (
-        base.filter(F.col("skip_tests"))
-        .withColumn("test_statistic", F.lit(None).cast("double"))
-        .withColumn("welch_df", F.lit(None).cast("double"))
-        .withColumn("p_value", F.lit(None).cast("double"))
-        .withColumn("status", F.lit("skipped_statistical_testing"))
-        .withColumn("runtime_seconds", F.lit(0.0))
-        .withColumn("memory_usage_bytes", F.lit(0).cast("long"))
-    )
-
-    out_cols = [
+    # skipped rows (mg:390-394) and permutation rows without a pooled
+    # vector find no kernel row: NULL statistic and p, zero telemetry
+    all_rows = base.join(tested_p, ["bio_project", "group", "set_id"], "left").select(
         "bio_project", "group", "set_id", "attributes", "values", "include",
         "members", "n_true", "n_false", "mean_rpm_true", "mean_rpm_false",
-        "sd_rpm_true", "sd_rpm_false", "test_statistic", "p_value", "status",
-        "runtime_seconds", "memory_usage_bytes",
-    ]
-    all_rows = (
-        t_done.select(*out_cols)
-        .unionByName(perm_done.select(*out_cols))
-        .unionByName(skipped.select(*out_cols))
+        "sd_rpm_true", "sd_rpm_false",
+        F.col("stat").alias("test_statistic"),
+        F.col("p").alias("p_value"),
+        F.when(F.col("skip_tests"), F.lit("skipped_statistical_testing"))
+        .when(use_t_test, F.lit("t_test"))
+        .otherwise(F.lit("permutation_test"))
+        .alias("status"),
+        F.coalesce("kernel_seconds", F.lit(0.0)).alias("runtime_seconds"),
+        F.coalesce("kernel_bytes", F.lit(0)).cast("long").alias("memory_usage_bytes"),
     )
     return finalize_results(all_rows, ref_df, cfg)
 
@@ -782,17 +673,22 @@ def finalize_results(
             "bio_project",
             "left",
         )
-        .withColumn("status", F.concat(F.col("status"), F.lit("; significant")))
-        .withColumn("fold_change", fold_change)
-        .withColumn("true_biosamples", F.when(F.col("include"), pre_true).otherwise(pre_false))
-        .withColumn("false_biosamples", F.when(F.col("include"), pre_false).otherwise(pre_true))
+        .withColumns(
+            {
+                "status": F.concat(F.col("status"), F.lit("; significant")),
+                "fold_change": fold_change,
+                "true_biosamples": F.when(F.col("include"), pre_true).otherwise(pre_false),
+                "false_biosamples": F.when(F.col("include"), pre_false).otherwise(pre_true),
+            }
+        )
         .drop("biosamples_ref")
     )
-    rest = (
-        rows.filter(~significant | F.col("p_value").isNull())
-        .withColumn("fold_change", fold_change)
-        .withColumn("true_biosamples", F.lit(""))
-        .withColumn("false_biosamples", F.lit(""))
+    rest = rows.filter(~significant | F.col("p_value").isNull()).withColumns(
+        {
+            "fold_change": fold_change,
+            "true_biosamples": F.lit(""),
+            "false_biosamples": F.lit(""),
+        }
     )
     out = sig.unionByName(rest)
     selected = out.select(
@@ -837,14 +733,14 @@ def run_mwas(
 ) -> DataFrame:
     """End-to-end MWAS: the reference's whole §3.1 lifecycle as one plan.
 
-    Shared subplans are persisted (spill-safe): ``resolved`` feeds the
-    rollup and the skip flags, ``rollup`` feeds cohort stats and the
-    permutation value arrays, and the metadata relations are joined at
-    three points — without persistence each consumer re-executes the
-    whole upstream pipeline.
+    Shared subplans are persisted (spill-safe): ``rollup`` feeds cohort
+    stats, the skip flags and the permutation value arrays, and the
+    metadata relations are joined at three points — without persistence
+    each consumer re-executes the whole upstream pipeline. Metadata that
+    arrives already checkpointed (the server's) is not copied again.
 
     EAGER: constructing the result executes the pipeline (including the
-    permutation kernel) — each shared subplan is materialized before its
+    test kernel) — each shared subplan is materialized before its
     fan-out, since branches racing an unsettled cache inside one action
     were measured recomputing the kernel concurrently (~2× end-to-end).
     With the default ``use_local_checkpoint`` the materialization also
@@ -857,35 +753,25 @@ def run_mwas(
     be re-queried cheaply; call :func:`release_mwas_persists` once the
     output is written to let them be freed.
     """
-    if cfg.use_local_checkpoint:
-        # The three pinned chains are independent (resolved→rollup reads
-        # input+catalog; sets/ref read the metadata relation), but each
-        # eager localCheckpoint is a blocking job — run serially the
-        # cluster idles through three job tails. Overlap them from a
-        # small thread pool (guide §2.6: actions are only sequential
-        # because the driver calls them sequentially); results are
-        # byte-identical, only job scheduling changes.
-        from concurrent.futures import ThreadPoolExecutor
+    # The three pins are independent (the rollup reads input+catalog;
+    # sets/ref read the metadata relation), but each eager
+    # localCheckpoint is a blocking job — run serially the cluster idles
+    # through three job tails. Overlap them from a small thread pool
+    # (guide §2.6: actions are only sequential because the driver calls
+    # them sequentially); results are byte-identical, only job
+    # scheduling changes.
+    from concurrent.futures import ThreadPoolExecutor
 
-        def _chain_rollup() -> tuple[DataFrame, DataFrame]:
-            resolved = _materialize(
-                resolve_and_normalize(input_df, catalog_df, cfg), cfg
-            )
-            return resolved, _materialize(biosample_rollup(resolved), cfg)
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            fut_roll = pool.submit(_chain_rollup)
-            fut_sets = pool.submit(_materialize, sets_df, cfg)
-            fut_ref = pool.submit(_materialize, ref_df, cfg)
-            resolved, rollup = fut_roll.result()
-            sets_df = fut_sets.result()
-            ref_df = fut_ref.result()
-    else:
-        resolved = _materialize(resolve_and_normalize(input_df, catalog_df, cfg), cfg)
-        rollup = _materialize(biosample_rollup(resolved), cfg)
-        sets_df = _materialize(sets_df, cfg)
-        ref_df = _materialize(ref_df, cfg)
-    skip_flags = group_skip_flags(resolved, cfg)
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        rollup, sets_df, ref_df = pool.map(
+            lambda df: _materialize(df, cfg),
+            [
+                biosample_rollup(resolve_and_normalize(input_df, catalog_df, cfg)),
+                sets_df,
+                ref_df,
+            ],
+        )
+    skip_flags = group_skip_flags(rollup, cfg)
     # stats_df has exactly ONE consumer — run_tests' `base`, which is
     # itself materialized right after joining in the skip flags — so a
     # separate stats materialization is a redundant extra job wave (plan
@@ -894,7 +780,7 @@ def run_mwas(
     # r13 opt round). The checkpoint path lets `base`'s checkpoint
     # compute cohort_stats inline; the persist fallback keeps the
     # explicit settle (its lazy caches would otherwise race in the
-    # three-branch fan-out).
+    # kernel/join fan-out).
     stats_df = cohort_stats(rollup, sets_df, ref_df, cfg)
     if not cfg.use_local_checkpoint:
         stats_df = _materialize(stats_df, cfg)

@@ -212,8 +212,9 @@ def make_server(
                 # pinned-subplan registry (mwas._LIVE_PERSISTS) is
                 # process-global, so releasing after one request would
                 # otherwise unpersist another thread's in-flight
-                # subplans. Without the release every POST pinned ~7
-                # materialized relations for the server's lifetime —
+                # subplans. Without the release every POST pinned its
+                # materialized relations (rollup, cohort rows, results)
+                # for the server's lifetime —
                 # the exact leak release_mwas_persists exists to
                 # prevent, and the long-running server is the one
                 # caller that never called it (r11 review finding; the

@@ -235,7 +235,7 @@ def run_request_batch(spark: SparkSession, rows: list[dict], catalog_df: DataFra
     from ..sources.readers import input_from_rows
 
     df = input_from_rows(spark, rows)
-    return biosample_rollup(resolve_and_normalize(df, catalog_df))
+    return biosample_rollup(resolve_and_normalize(df, catalog_df)).drop("n_runs")
 
 
 def streaming_exact_dedup(

@@ -200,14 +200,9 @@ def test_pack_documents_chunking(spark):
         assert ordinals == list(range(1, len(ordinals) + 1))  # contiguous
 
 
-def test_t_only_plan_has_no_permutation_kernel(spark):
-    """t_test_only must fold the permutation branch away entirely — no
-    FlatMapGroupsInPandas (the applyInPandas kernel) and no pooled-vector
-    collect_list aggregation in the physical plan."""
-    from mwas_rfam_spark.operators.mwas import run_tests  # noqa: F401 (import check)
-    from mwas_rfam_spark.operators.condense import condense_metadata
-    from mwas_rfam_spark.operators.mwas import run_mwas
-
+def _six_sample_mwas_inputs(spark):
+    """(input, catalog, sets, ref) for one BioProject of six biosamples
+    split 3/3 by one attribute."""
     input_df = spark.createDataFrame(
         [(f"R{i}", "g1", float(10 * i)) for i in range(1, 7)], INPUT_SCHEMA
     )
@@ -219,12 +214,64 @@ def test_t_only_plan_has_no_permutation_kernel(spark):
         ["biosample_id", "t1"],
     )
     sets_df, ref_df = condense_metadata(melt_wide_metadata(wide, "P1"))
-    out = run_mwas(input_df, catalog_df, sets_df, ref_df, MwasConfig(t_test_only=True))
-    plan = _physical(out)
-    assert "FlatMapGroupsInPandas" not in plan
-    # the pooled-vector aggregation must be folded away too (collect_list
-    # still appears legitimately in condense/finalize for member arrays)
-    assert "obs_rpm" not in plan
+    return input_df, catalog_df, sets_df, ref_df
+
+
+def test_t_only_plan_has_no_permutation_kernel(spark):
+    """t_test_only must fold the permutation side away entirely: no
+    pooled-vector (obs_rpm) collect_list aggregation in the physical
+    plan. The plan is read under use_local_checkpoint=False, whose lazy
+    persists keep the lineage in the plan (eager checkpoints would cut
+    it, and the check could not fail); the default config's plan is
+    the positive control."""
+    from mwas_rfam_spark.operators.mwas import release_mwas_persists, run_mwas
+
+    input_df, catalog_df, sets_df, ref_df = _six_sample_mwas_inputs(spark)
+
+    def plan(**kw):
+        out = run_mwas(
+            input_df, catalog_df, sets_df, ref_df,
+            MwasConfig(use_local_checkpoint=False, **kw),
+        )
+        try:
+            return _physical(out)
+        finally:
+            release_mwas_persists()
+
+    # the one test kernel runs either way (it computes the Welch tail)
+    t_only = plan(t_test_only=True)
+    default = plan()
+    assert "FlatMapCoGroupsInArrow" in t_only and "FlatMapCoGroupsInArrow" in default
+    # collect_list still appears legitimately in condense for member
+    # arrays, and the kernel's argument list names obs_rpm either way
+    # (its values side is an empty relation under t_test_only), so the
+    # pooled-vector aggregation is recognised by what it collects
+    assert "collect_list(rpm" not in t_only
+    assert "collect_list(rpm" in default
+
+
+def test_run_mwas_does_not_repin_checkpointed_inputs(spark):
+    """Metadata that arrives already checkpointed (the server's) is used
+    as-is: run_mwas pins only its own relations (rollup, cohort rows,
+    results), and the output matches a run over lazy metadata, which
+    run_mwas pins itself."""
+    from mwas_rfam_spark.operators import mwas as mwas_mod
+
+    input_df, catalog_df, sets_df, ref_df = _six_sample_mwas_inputs(spark)
+    cfg = MwasConfig(t_test_only=True)
+
+    def run(sets, ref):
+        rows = sorted(
+            tuple(r) for r in mwas_mod.run_mwas(input_df, catalog_df, sets, ref, cfg).collect()
+        )
+        n_pins = len(mwas_mod._LIVE_PERSISTS)
+        mwas_mod.release_mwas_persists()
+        return rows, n_pins
+
+    lazy_rows, lazy_pins = run(sets_df, ref_df)
+    pinned_rows, pinned_pins = run(sets_df.localCheckpoint(), ref_df.localCheckpoint())
+    assert (lazy_pins, pinned_pins) == (5, 3)
+    assert pinned_rows == lazy_rows and lazy_rows
 
 
 def test_interval_join_within(spark):

@@ -154,8 +154,9 @@ def test_config_from_params_coercion():
 
 def test_server_releases_mwas_persists(server_url):
     """r11 review finding: the long-running server never called
-    release_mwas_persists, pinning ~7 materialized relations per POST
-    forever; the handler now releases inside the serialized section."""
+    release_mwas_persists, pinning every POST's materialized relations
+    (rollup, cohort rows, results) forever; the handler now releases
+    inside the serialized section."""
     import json
     import urllib.request
 

@@ -189,3 +189,129 @@ def test_permutation_kernels_refuse_non_finite_inputs():
         grouped_permutation_mean_diff(
             np.append(big, np.nan), [20], [0.1], 50, 0
         )
+
+
+# --- the one-pass per-group test kernel (operators.mwas) --------------------
+# The kernel is called exactly as cogroup(...).applyInArrow calls it: key
+# scalars, the group's tested rows on the left, its pooled values (one row
+# or none) on the right.
+
+
+def _kernel_left(rows, bp="P1", group="g1"):
+    """rows: (set_id, n_true, n_false, is_t, stat, welch_df)."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows))
+    return pa.table(
+        {
+            "bio_project": pa.array([bp] * len(rows), pa.string()),
+            "group": pa.array([group] * len(rows), pa.string()),
+            "set_id": pa.array(cols[0], pa.string()),
+            "n_true": pa.array(cols[1], pa.int64()),
+            "n_false": pa.array(cols[2], pa.int64()),
+            "is_t": pa.array(cols[3], pa.bool_()),
+            "stat": pa.array(cols[4], pa.float64()),
+            "welch_df": pa.array(cols[5], pa.float64()),
+        }
+    )
+
+
+def _kernel_right(obs=None, bp="P1", group="g1"):
+    import pyarrow as pa
+
+    vals = [] if obs is None else [list(obs)]
+    return pa.table(
+        {
+            "__gv_bp": pa.array([bp] * len(vals), pa.string()),
+            "__gv_g": pa.array([group] * len(vals), pa.string()),
+            "obs_rpm": pa.array(vals, pa.list_(pa.float64())),
+        }
+    )
+
+
+def _run_kernel(left, right, n_resamples=200, seed=7, bp="P1", group="g1"):
+    import pyarrow as pa
+
+    from mwas_rfam_spark.operators.mwas import _make_grouped_test_fn
+
+    kernel = _make_grouped_test_fn(n_resamples, seed)
+    return kernel((pa.scalar(bp), pa.scalar(group)), left, right).to_pydict()
+
+
+def test_kernel_t_only_group_gets_welch_p():
+    """A group whose rows all take the t-test, with no pooled vector:
+    every row's p is welch_ttest_from_stats' p for that row's stats."""
+    stats = [(5.0, 1.5, 4, 3.0, 2.0, 9), (1.0, 0.5, 3, 1.2, 0.1, 10), (2.0, 3.0, 6, 9.0, 1.0, 7)]
+    rows = []
+    for i, (m1, s1, n1, m2, s2, n2) in enumerate(stats):
+        t, df, _ = welch_ttest_from_stats(m1, s1, n1, m2, s2, n2)
+        rows.append((f"s{i}", n1, n2, True, float(t), float(df)))
+    out = _run_kernel(_kernel_left(rows), _kernel_right())
+    assert out["set_id"] == ["s0", "s1", "s2"]
+    for i, (m1, s1, n1, m2, s2, n2) in enumerate(stats):
+        t, _, p = welch_ttest_from_stats(m1, s1, n1, m2, s2, n2)
+        assert out["stat"][i] == float(t)
+        assert out["p"][i] == pytest.approx(float(p), rel=1e-12, abs=0)
+    assert out["kernel_seconds"] == [0.0, 0.0, 0.0]
+    assert out["kernel_bytes"] == [0, 0, 0]
+
+
+def test_kernel_perm_rows_without_pooled_side_yield_no_row():
+    """Permutation rows with an empty pooled side get no kernel row, so
+    their p stays NULL after the join back; t-test rows of the same
+    group still get theirs."""
+    perm_only = [("s0", 6, 20, False, 0.4, 1.0), ("s1", 8, 18, False, -0.2, 1.0)]
+    out = _run_kernel(_kernel_left(perm_only), _kernel_right())
+    assert out["set_id"] == []
+
+    t, df, p = welch_ttest_from_stats(5.0, 1.0, 4, 3.0, 2.0, 22)
+    mixed = perm_only + [("s2", 4, 22, True, float(t), float(df))]
+    out = _run_kernel(_kernel_left(mixed), _kernel_right())
+    assert out["set_id"] == ["s2"]
+    assert out["p"][0] == pytest.approx(float(p), rel=1e-12, abs=0)
+
+
+def test_kernel_mixed_group_perm_p_matches_grouped_kernel():
+    """In a mixed group the permutation p-values are exactly
+    grouped_permutation_mean_diff over the same pooled vector (observed
+    values zero-padded to n_true + n_false, sorted) with the documented
+    per-group seed: sha256("bp|group")[:15] XOR base seed."""
+    import hashlib
+
+    from mwas_rfam_spark.functions.stattests import grouped_permutation_mean_diff
+
+    rng = np.random.default_rng(3)
+    obs = rng.gamma(2.0, 5.0, size=18)
+    n = 30
+    t, df, p_t = welch_ttest_from_stats(4.0, 1.0, 3, 2.0, 1.5, n - 3)
+    rows = [
+        ("a", 10, n - 10, False, 1.25, 1.0),
+        ("b", 3, n - 3, True, float(t), float(df)),
+        ("c", 12, n - 12, False, -0.75, 1.0),
+        ("d", 10, n - 10, False, 2.5, 1.0),
+    ]
+    out = _run_kernel(_kernel_left(rows), _kernel_right(obs), n_resamples=500, seed=11)
+    assert out["set_id"] == ["a", "b", "c", "d"]
+
+    seed_hex = hashlib.sha256(b"P1|g1").hexdigest()[:15]
+    seed = (int(seed_hex, 16) ^ 11) & 0x7FFFFFFFFFFFFFFF
+    pooled = np.sort(np.concatenate([obs, np.zeros(n - obs.size)]))
+    want = grouped_permutation_mean_diff(
+        pooled, [10, 12, 10], [1.25, -0.75, 2.5], 500, np.random.default_rng(seed)
+    )
+    assert [out["p"][i] for i in (0, 2, 3)] == list(want)
+    assert out["p"][1] == pytest.approx(float(p_t), rel=1e-12, abs=0)
+    assert out["stat"] == [1.25, float(t), -0.75, 2.5]
+    # telemetry only on the permutation rows
+    assert out["kernel_bytes"][1] == 0 and out["kernel_seconds"][1] == 0.0
+    assert all(out["kernel_bytes"][i] > 0 for i in (0, 2, 3))
+
+
+def test_kernel_nan_t_gives_nan_p():
+    """Both SDs 0 with equal means: t = 0/0 = NaN (df 1) and p = NaN,
+    as scipy gives — not NULL."""
+    t, df, p = welch_ttest_from_stats(2.0, 0.0, 3, 2.0, 0.0, 4)
+    assert math.isnan(t) and math.isnan(p)
+    out = _run_kernel(_kernel_left([("s0", 3, 4, True, float(t), float(df))]), _kernel_right())
+    assert math.isnan(out["stat"][0])
+    assert out["p"][0] is not None and math.isnan(out["p"][0])
