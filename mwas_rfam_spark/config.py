@@ -60,7 +60,11 @@ class MwasConfig:
     # blocks are NOT fault-tolerant: on a cluster where executor loss
     # must not fail the job, set False to fall back to persist+settle
     # (recomputable lineage), or call sc.setCheckpointDir and swap in
-    # reliable checkpoints.
+    # reliable checkpoints. Scope: only the MWAS pipeline honours this
+    # flag (`operators.mwas.run_mwas` and the steps it runs, and
+    # `finalize_results`). Dedup, drift, evaluation, retrieval,
+    # quantization, sinks, streaming and the `curate` CLI pin with
+    # localCheckpoint whatever it is set to.
     use_local_checkpoint: bool = True
 
 

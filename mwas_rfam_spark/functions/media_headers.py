@@ -1,6 +1,6 @@
 """Header-only MP3 / MP4 metadata from stdlib primitives.
 
-The container ships no audio/video wheels (no soundfile/PyAV), but both
+The engine decodes media with stdlib codecs only, and both
 formats expose duration / bitrate / sample-rate / dimensions in plain
 framed headers that need NO entropy decoding:
 
@@ -18,7 +18,7 @@ framed headers that need NO entropy decoding:
 These are the "degrade to real metadata" backends for
 `operators.multimodal.extract_audio_features` (MP3 branch) and
 `video_metadata` (MP4 branch) — full sample/frame DECODE of these
-formats still requires the missing wheels and still raises a named
+formats is outside the stdlib decoders' reach and raises a named
 NotImplementedError (reference for the media family:
 mwas_rfam main repo has no media layer at all; this extends the
 engine's training-data surface).

@@ -416,19 +416,30 @@ def minhash_signatures(
     overflow checking never trips. One aggregate pass per doc.
     """
     sh = word_shingles(docs, n, text_col, id_col)
+    hashed = sh.select("id", *_km_hash_pair())
+    agg = hashed.groupBy("id").agg(*_km_mins(num_hashes))
+    return agg.select("id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
+
+
+def _km_hash_pair():
+    """(h1, h2) Kirsch–Mitzenmacher halves of ONE xxhash64 per shingle:
+    h1 the high 32 bits, h2 an odd 31-bit stride — the hash family of
+    :func:`minhash_signatures` and the global corpus MinHash."""
     base = F.xxhash64("shingle")
     h1 = F.shiftrightunsigned(base, 32)
     h2 = F.shiftrightunsigned(base, 1).bitwiseAND(F.lit(0x7FFFFFFE)) + 1  # odd, 31-bit
-    hashed = sh.select("id", h1.alias("h1"), h2.alias("h2"))
-    # min-expressions built as parsed SQL strings: the per-operator py4j
-    # Column construction cost num_hashes × ~6 driver round-trips per
-    # PLANNING of this query (see simhash64's rationale, r13 opt round)
-    mins = [
+    return h1.alias("h1"), h2.alias("h2")
+
+
+def _km_mins(num_hashes: int):
+    """min over h_i = (h1 + i·h2) mod 2^32, one aggregate per slot.
+    Built as parsed SQL strings: the per-operator py4j Column
+    construction cost num_hashes × ~6 driver round-trips per PLANNING
+    of the query (see simhash64's rationale, r13 opt round)."""
+    return [
         F.expr(f"min((h1 + {i} * h2) & 4294967295)").alias(f"h{i}")
         for i in range(num_hashes)
     ]
-    agg = hashed.groupBy("id").agg(*mins)
-    return agg.select("id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
 
 
 # Version of the PERSISTED banding scheme: the (band, bucket) keys a
@@ -509,22 +520,30 @@ def minhash_lsh_pairs(
     Returns (id_a, id_b, est_jaccard >= threshold).
     """
     assert num_hashes % bands == 0
-    rows = num_hashes // bands
     # checkpoint: consumed by the band explode AND both estimate joins
     sigs = minhash_signatures(docs, num_hashes, n, text_col, id_col).localCheckpoint()
-    cand = _band_candidates(_band_buckets(sigs, bands, rows, "sha2"))
-    est = (
+    return _lsh_estimate_pairs(sigs, num_hashes, bands, threshold, "sha2")
+
+
+def _lsh_estimate_pairs(
+    sigs: DataFrame, num_hashes: int, bands: int, threshold: float, bucket_hash: str
+) -> DataFrame:
+    """The LSH tail both pair finders share, after their signature pin:
+    band-bucket candidates (:func:`_band_candidates`), the estimated
+    Jaccard (fraction of equal signature slots) joined on for both ids,
+    and the threshold. ``bucket_hash`` as in :func:`_band_buckets`."""
+    cand = _band_candidates(_band_buckets(sigs, bands, num_hashes // bands, bucket_hash))
+    return (
         cand.join(sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
         .join(sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
         .withColumn(
             "est_jaccard",
             F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-            / F.lit(num_hashes),
+            / F.lit(float(num_hashes)),
         )
         .where(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-    return est
 
 
 def minhash_lsh_pairs_md5(
@@ -544,7 +563,6 @@ def minhash_lsh_pairs_md5(
     Returns (id_a, id_b, est_jaccard >= threshold).
     """
     assert num_hashes % bands == 0
-    rows = num_hashes // bands
     sh = word_shingles(docs, n, text_col, id_col)
     # hash each DISTINCT shingle once and join back, instead of hashing
     # per (doc, shingle) occurrence: shingles repeat heavily across
@@ -583,18 +601,7 @@ def minhash_lsh_pairs_md5(
         # checkpoint: the signature relation must not re-plan/re-run per consumer
         .localCheckpoint()
     )
-    cand = _band_candidates(_band_buckets(sigs, bands, rows, "md5"))
-    return (
-        cand.join(sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
-        .join(sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
-        .withColumn(
-            "est_jaccard",
-            F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-            / F.lit(float(num_hashes)),
-        )
-        .where(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    return _lsh_estimate_pairs(sigs, num_hashes, bands, threshold, "md5")
 
 
 def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -617,25 +624,11 @@ def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     the old sum(±1) > 0 rule (cross-checked row-identical at sf0.1).
     Returns (id, simhash BIGINT).
     """
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(_token_array(F.col(text_col))).alias("tok"),
-    ).withColumn("h", F.xxhash64("tok"))
-    packed = [
-        F.expr(
-            f"sum((shiftright(h, {g}) & 1)"
-            f" + shiftleft(shiftright(h, {g + 32}) & 1, 32))"
-        ).alias(f"p{g}")
-        for g in range(32)
-    ]
-    votes = toks.groupBy("id").agg(F.count("*").alias("n"), *packed)
-    terms = []
-    for b in range(64):
-        ones = f"(p{b} & 4294967295)" if b < 32 else f"shiftright(p{b - 32}, 32)"
-        terms.append(
-            f"if(2 * {ones} > n, shiftleft(cast(1 as bigint), {b}), cast(0 as bigint))"
-        )
-    return votes.select("id", F.expr(" | ".join(terms)).alias("simhash"))
+    return _simhash_votes(
+        docs, text_col, id_col, F.xxhash64("tok"), n_bits=64,
+        bit=lambda b: f"(shiftright(h, {b}) & 1)",
+        weight=lambda b: f"shiftleft(cast(1 as bigint), {b})",
+    )
 
 
 def simhash32_md5(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -647,35 +640,46 @@ def simhash32_md5(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     md5(token). Long-form per-bit vote aggregation as in simhash64.
     Returns (id, simhash BIGINT in [0, 2^32)).
     """
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(_token_array(F.col(text_col))).alias("tok"),
-    ).withColumn("h", F.md5("tok"))
 
-    # Lane-packed vote counters and string-built expressions, exactly as
-    # in :func:`simhash64` (see the rationale there): aggregate g of 16
-    # carries ones-counts for bit g (low lane) and bit g+16 (high lane).
     # bit(b) = floor(digit/2^(3-b%4)) % 2 with digit = instr(hex)-1 in
     # 0..15; integer `div` is identical to the old float floor-divide on
-    # that domain.
+    # that domain. Bit b lands at position 31-b (hex digit order).
     def bit(b: int) -> str:
         d = f"(instr('0123456789abcdef', substring(h, {b // 4 + 1}, 1)) - 1)"
         return f"(({d} div {2 ** (3 - b % 4)}) % 2)"
 
+    return _simhash_votes(
+        docs, text_col, id_col, F.md5("tok"), n_bits=32,
+        bit=bit,
+        weight=lambda b: f"cast({1 << (31 - b)} as bigint)",
+    )
+
+
+def _simhash_votes(docs, text_col, id_col, token_hash, n_bits, bit, weight):
+    """The lane-packed vote-and-reassemble body both SimHash variants
+    share: explode tokens, hash each with ``token_hash`` (column ``h``),
+    count per-document votes for each of ``n_bits`` bits — ``bit(b)`` is
+    the SQL 0/1 expression for bit b of ``h`` — and set ``weight(b)``
+    (a SQL bigint) in the result iff 2*ones_b > tokens. Aggregate g of
+    n_bits/2 carries the ones-count of bit g in its low 32-bit lane and
+    of bit g + n_bits/2 in its high lane (see :func:`simhash64`)."""
+    toks = docs.select(
+        F.col(id_col).alias("id"),
+        F.explode(_token_array(F.col(text_col))).alias("tok"),
+    ).withColumn("h", token_hash)
+    half = n_bits // 2
     packed = [
         F.expr(
-            f"sum(cast({bit(g)} as bigint) + shiftleft(cast({bit(g + 16)} as bigint), 32))"
+            f"sum(cast({bit(g)} as bigint) + shiftleft(cast({bit(g + half)} as bigint), 32))"
         ).alias(f"p{g}")
-        for g in range(16)
+        for g in range(half)
     ]
     votes = toks.groupBy("id").agg(F.count("*").alias("n"), *packed)
     terms = []
-    for b in range(32):
-        ones = f"(p{b} & 4294967295)" if b < 16 else f"shiftright(p{b - 16}, 32)"
-        terms.append(
-            f"if(2 * {ones} > n, cast({1 << (31 - b)} as bigint), cast(0 as bigint))"
-        )
-    return votes.select("id", F.expr(" + ".join(terms)).alias("simhash"))
+    for b in range(n_bits):
+        ones = f"(p{b} & 4294967295)" if b < half else f"shiftright(p{b - half}, 32)"
+        terms.append(f"if(2 * {ones} > n, {weight(b)}, cast(0 as bigint))")
+    return votes.select("id", F.expr(" | ".join(terms)).alias("simhash"))
 
 
 def simhash_near_dup_pairs(
@@ -1212,17 +1216,7 @@ def _global_minhash_row(docs, num_hashes: int, n: int, text_col: str, id_col: st
     minhash_signatures (masked to 32 bits so i*h2 never overflows ANSI
     long arithmetic); all map-side combine, one row collected."""
     sh = word_shingles(docs, n, text_col, id_col).select("shingle").distinct()
-    base = F.xxhash64("shingle")
-    h1 = F.shiftrightunsigned(base, 32)
-    h2 = F.shiftrightunsigned(base, 1).bitwiseAND(F.lit(0x7FFFFFFE)) + 1
-    hashed = sh.select(h1.alias("h1"), h2.alias("h2"))
-    # parsed-SQL min expressions (py4j construction cost — simhash64)
-    return hashed.agg(
-        *[
-            F.expr(f"min((h1 + {i} * h2) & 4294967295)").alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    ).collect()[0]
+    return sh.select(*_km_hash_pair()).agg(*_km_mins(num_hashes)).collect()[0]
 
 
 def corpus_signature(

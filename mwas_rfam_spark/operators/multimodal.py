@@ -10,13 +10,14 @@ columns at all; a 100 TB training-data pipeline does. Design rules:
   filters on ``media_type`` never materializes payloads of other types).
 * Decode / feature-extract / resize / frame-sample run as
   ``mapInPandas`` stages: Arrow batches in, Arrow batches out, schema
-  declared up front. The full-fat codec wheels (PIL / soundfile / av)
-  are NOT in this container, so each family prefers them when present
-  and falls back to a REAL in-container decoder — PNG+GIF+JPEG (baseline and progressive)
-  for images (functions/png_codec, functions/gif_codec,
-  functions/jpeg_codec), ``wave`` for audio, animated GIF for video
-  frame-sampling — raising a clearly-named NotImplementedError only for
-  formats outside those decoders' reach. A deterministic sha256-derived fake (``fake=True``) remains
+  declared up front. The real path has ONE implementation per family,
+  the in-repo stdlib decoders — PNG+GIF+JPEG (baseline and
+  progressive) for images (functions/png_codec, functions/gif_codec,
+  functions/jpeg_codec), ``wave``/MP3 frame headers for audio, animated
+  GIF and MJPEG/uncompressed AVI for video frame-sampling — so output
+  never depends on which codec wheels are installed. Formats outside
+  those decoders' reach raise a NotImplementedError naming the formats
+  covered. A deterministic sha256-derived fake (``fake=True``) remains
   for oracle-checkable plumbing tests.
 * The fake is a pure function of the payload hash, reproducible in ANSI
   SQL, so even the Python ``mapInPandas`` stage is oracle-checkable.
@@ -130,110 +131,24 @@ def _fake_dims(digest_hex: str) -> tuple[int, int, int]:
 def _real_decode_dims(payload: bytes) -> tuple[int, int, int]:
     """Real-codec single-image decode → (width, height, channels).
 
-    Preference order: PIL when the wheel exists (every format), else the
-    pure-stdlib PNG decoder (functions/png_codec — zlib+struct, full
-    filter support; the r4 verdict's stretch task), else
-    NotImplementedError naming the missing codec. The ordering means the
-    SAME pipeline code upgrades transparently when real wheels appear."""
-    try:
-        from PIL import Image  # type: ignore
-    except ImportError:
-        Image = None
-    if Image is not None:
-        # try covers only the import — decode errors must surface
-        import io
-
-        with Image.open(io.BytesIO(payload)) as im:
-            # report the channels the PIXEL path would emit: modes
-            # outside the 8-bit-interleaved set decode via convert(RGB)
-            # there, so a palette GIF must be 3 here too — the stdlib
-            # fallback already says 3, and the channels column must not
-            # change with wheel presence (r12 review finding)
-            c = (
-                len(im.getbands())
-                if im.mode in ("L", "LA", "RGB", "RGBA")
-                else 3
-            )
-            return im.width, im.height, c
-    from mwas_rfam_spark.functions.gif_codec import decode_gif, is_gif
+    JPEG dims come header-only from SOF (no entropy decode); every other
+    format goes through :func:`_real_decode_pixels`, so the dims and
+    pixel paths can never disagree about what decodes."""
     from mwas_rfam_spark.functions.jpeg_codec import is_jpeg, jpeg_dims
-    from mwas_rfam_spark.functions.png_codec import decode_png, is_png
 
-    if is_png(payload):
-        w, h, c, _px = decode_png(payload)
-        return w, h, c
-    if is_gif(payload):
-        w, h, _frames = decode_gif(payload)
-        return w, h, 3  # composited canvas is RGB
     if is_jpeg(payload):
-        # header-only: dims live in SOF0, no need to entropy-decode
         return jpeg_dims(payload)
-    raise NotImplementedError(
-        "real image decode: PIL/pillow not in this container and the "
-        "payload is none of PNG/GIF/JPEG (the stdlib decoders stop there)"
-    )
+    return _real_decode_pixels(payload)[:3]
 
 
 def _real_decode_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Real-codec decode → (width, height, channels, raw pixels) with
-    the SAME precedence as :func:`_real_decode_dims` (PIL when
-    installed — every format — else the stdlib PNG/GIF codecs), so the
-    dims and pixel paths can never disagree about what decodes. For
-    animated GIFs the pixel bytes are ALL composited frames
-    concatenated — a first-frame-only fingerprint would collide a
-    static image with an animation sharing its title frame."""
-    try:
-        from PIL import Image  # type: ignore
-    except ImportError:
-        Image = None
-    if Image is not None:
-        import io
-
-        with Image.open(io.BytesIO(payload)) as im:
-            # palette modes must decode to channel VALUES, not palette
-            # indices — raw 'P' bytes would make every downstream
-            # fingerprint (pixel sha, dHash luma) depend on palette
-            # order and disagree with the stdlib codecs, which always
-            # emit real channels. Multi-frame payloads concatenate all
-            # frames, matching the stdlib GIF path.
-            n = getattr(im, "n_frames", 1)
-            parts = []
-            w = h = c = 0
-            for fi in range(n):
-                im.seek(fi)
-                # normalize EVERY non-8-bit-interleaved mode, not just
-                # palettes: '1' packs 8 px/byte, 'I;16'/'I'/'F' are
-                # 2-4 bytes per sample, so tobytes() would violate the
-                # len(px) == w*h*c invariant every downstream consumer
-                # (frame loops, dHash resample) silently relies on —
-                # zero-padded garbage fingerprints with no error (r12
-                # review finding)
-                fr = (
-                    im
-                    if im.mode in ("L", "LA", "RGB", "RGBA")
-                    else im.convert("RGB")
-                )
-                if fi == 0:
-                    w, h, c = fr.width, fr.height, len(fr.getbands())
-                elif (fr.width, fr.height) != (w, h):
-                    # heterogeneous frame DIMS break the fixed
-                    # frame-stride slicing every consumer applies —
-                    # refuse instead of emitting misaligned bytes (r13
-                    # review finding; mode heterogeneity is normalized
-                    # below instead, it's the common GIF/TIFF case)
-                    raise ValueError(
-                        f"multi-frame image: frame {fi} is "
-                        f"{fr.width}x{fr.height}, frame 0 is {w}x{h} — "
-                        "heterogeneous frame dimensions"
-                    )
-                elif len(fr.getbands()) != c:
-                    # a LATER frame with a different channel count
-                    # (page 0 'L', page 1 'P'→RGB) used to interleave
-                    # 1- and 3-byte pixels under the LAST frame's c —
-                    # normalize every frame to frame 0's band shape
-                    fr = fr.convert("RGB" if c == 3 else ("L", "LA", "RGB", "RGBA")[c - 1])
-                parts.append(fr.tobytes())
-            return w, h, c, b"".join(parts)
+    """Real-codec decode → (width, height, channels, raw pixels) through
+    the in-repo stdlib codecs (functions/png_codec, gif_codec,
+    jpeg_codec) — the only real image path, so fingerprints never
+    depend on which wheels are installed. For animated GIFs the pixel
+    bytes are ALL composited frames concatenated — a first-frame-only
+    fingerprint would collide a static image with an animation sharing
+    its title frame."""
     from mwas_rfam_spark.functions.gif_codec import decode_gif, is_gif
     from mwas_rfam_spark.functions.jpeg_codec import decode_jpeg, is_jpeg
     from mwas_rfam_spark.functions.png_codec import decode_png, is_png
@@ -242,21 +157,22 @@ def _real_decode_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
         return decode_png(payload)
     if is_gif(payload):
         w, h, frames = decode_gif(payload)
-        return w, h, 3, b"".join(frames)
+        return w, h, 3, b"".join(frames)  # composited canvas is RGB
     if is_jpeg(payload):
         return decode_jpeg(payload)
     raise NotImplementedError(
-        "real image decode: PIL/pillow not in this container and the "
-        "payload is none of PNG/GIF/JPEG (the stdlib decoders stop there)"
+        "real image decode: payload is none of PNG/GIF/JPEG (the formats "
+        "the stdlib decoders cover)"
     )
 
 
 def decode_images(media: DataFrame, fake: bool = True) -> DataFrame:
     """Decode image payloads → (doc_id, width, height, channels).
 
-    ``fake=False`` is the real-codec path: PIL when installed, else the
-    pure-stdlib PNG decoder (functions/png_codec) for PNG payloads —
-    other formats raise NotImplementedError naming the missing wheel.
+    ``fake=False`` is the real-codec path and it has one implementation:
+    the in-repo stdlib PNG/GIF/JPEG codecs (functions/png_codec,
+    gif_codec, jpeg_codec); other formats raise NotImplementedError
+    naming the formats those decoders cover.
     The fake path derives dims from the payload sha256.
     Input only needs (doc_id, payload, media_meta); non-image rows are
     filtered out BEFORE the Python stage so Arrow never ships them.
@@ -325,35 +241,17 @@ def _open_wav_checked(payload: bytes):
 
 
 def _real_audio_features(payload: bytes) -> tuple[int, int]:
-    """Real-codec single-clip decode → (sample_rate, n_samples).
-
-    Preference order mirrors the image path: soundfile when the wheel
-    exists (every format), else the pure-stdlib ``wave`` module for
-    RIFF/WAVE payloads (PCM headers — rate and frame count come from
-    the fmt/data chunks, no sample decoding needed), else
-    NotImplementedError naming the missing codec."""
-    import io
-
-    try:
-        # OSError too: the soundfile wheel raises it at import when the
-        # libsndfile shared object is missing — the stdlib WAV fallback
-        # below still works in that environment
-        import soundfile  # type: ignore
-    except (ImportError, OSError):
-        soundfile = None
-    if soundfile is not None:
-        # outside the try — the file's convention: the except covers
-        # only the import, a real decode failure must SURFACE, not be
-        # swallowed into the MP3/WAV fallbacks' misdiagnosis (r12
-        # review finding; same guard as the image/video paths)
-        info = soundfile.info(io.BytesIO(payload))
-        return int(info.samplerate), int(info.frames)
+    """Real-codec single-clip decode → (sample_rate, n_samples) through
+    the stdlib decoders only: the MP3 frame-chain walk
+    (functions/media_headers) or the ``wave`` module for RIFF/WAVE
+    payloads (PCM headers — rate and frame count come from the fmt/data
+    chunks, no sample decoding needed); other formats raise
+    NotImplementedError naming the formats covered."""
     from mwas_rfam_spark.functions.media_headers import is_mp3, mp3_metadata
 
     if is_mp3(payload):
         # header-only frame-chain walk (functions/media_headers): exact
-        # sample count and rate without decoding any audio — the MP3
-        # family no longer dead-ends on the missing soundfile wheel
+        # sample count and rate without decoding any audio
         meta = mp3_metadata(payload)
         return int(meta["sample_rate"]), int(meta["n_samples"])
     with _open_wav_checked(payload) as w:
@@ -366,10 +264,11 @@ def _real_audio_features(payload: bytes) -> tuple[int, int]:
 
 def extract_audio_features(media: DataFrame, fake: bool = True) -> DataFrame:
     """Audio feature extraction → (doc_id, sample_rate, n_samples,
-    duration_s). ``fake=False`` is the real-codec path: soundfile when
-    installed, else the stdlib ``wave`` parser for WAV payloads — other
-    formats raise NotImplementedError naming the missing wheel. The
-    fake path derives features from the payload sha256."""
+    duration_s). ``fake=False`` is the real-codec path and it has one
+    implementation: the stdlib ``wave`` parser for WAV payloads and the
+    header-only frame walk for MP3 — other formats raise
+    NotImplementedError naming the formats covered. The fake path
+    derives features from the payload sha256."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -401,33 +300,15 @@ def extract_audio_features(media: DataFrame, fake: bool = True) -> DataFrame:
 def _real_video_frames(payload: bytes, every_n: int) -> list[tuple[int, str]]:
     """Real-codec frame sampling → [(frame_idx, sha256-of-RGB-canvas)].
 
-    Preference order mirrors the image/audio paths: PyAV when the wheel
-    exists (every container format), else the pure-stdlib animated-GIF
-    decoder (functions/gif_codec — LZW, palettes, interlace, disposal
-    compositing), else the pure-stdlib MJPEG-in-AVI path (the one video
-    codec needing no wheel: `media_headers.avi_video_frames_raw` walks
-    the movi chunk spans and `jpeg_codec.decode_jpeg` decodes only the
-    sampled frames), else NotImplementedError naming the missing codec.
+    Two stdlib decoders cover it: the animated-GIF decoder
+    (functions/gif_codec — LZW, palettes, interlace, disposal
+    compositing) and the MJPEG/uncompressed-in-AVI path
+    (`media_headers.avi_video_frames_raw` walks the movi chunk spans
+    and `jpeg_codec.decode_jpeg` decodes only the sampled frames);
+    other containers raise NotImplementedError naming those formats.
     The sha is over the composited full-canvas RGB bytes, so the same
     visual frame hashes identically regardless of how the encoder split
     it into sub-rectangles — which is what frame-dedup wants."""
-    try:
-        import av  # type: ignore
-    except ImportError:
-        av = None
-    if av is not None:
-        # the try covers ONLY the import: a decode-time error (bad
-        # payload, PyAV's own missing-numpy ImportError) must surface,
-        # not fall through to a false "PyAV not installed" diagnosis
-        import io
-
-        out = []
-        with av.open(io.BytesIO(payload)) as container:
-            for i, frame in enumerate(container.decode(video=0)):
-                if i % every_n == 0:
-                    rgb = frame.to_ndarray(format="rgb24").tobytes()
-                    out.append((i, hashlib.sha256(rgb).hexdigest()))
-        return out
     from mwas_rfam_spark.functions.gif_codec import decode_gif, is_gif
 
     if is_gif(payload):
@@ -441,10 +322,10 @@ def _real_video_frames(payload: bytes, every_n: int) -> list[tuple[int, str]]:
     if is_avi(payload):
         return _avi_frames(payload, every_n)
     raise NotImplementedError(
-        "real frame extraction: PyAV/ffmpeg not in this container and the "
-        "payload is not a GIF or an MJPEG/uncompressed AVI (the stdlib "
-        "decoders handle those; for MP4/MKV containers, `video_metadata` "
-        "reads duration/dims/tracks header-only without any wheel)"
+        "real frame extraction: payload is not a GIF or an "
+        "MJPEG/uncompressed AVI (the formats the stdlib decoders cover; "
+        "for MP4/MKV containers, `video_metadata` reads "
+        "duration/dims/tracks header-only)"
     )
 
 
@@ -453,7 +334,7 @@ def _avi_frames(payload: bytes, every_n: int) -> list[tuple[int, str]]:
     movi walk yields (start, end) spans so ONLY the sampled frames are
     sliced and decoded (an every_n=30 thumbnail pass over an hour of
     30 fps video decodes 1/30th of the chunks; the container walk
-    itself is header arithmetic). Two no-wheel codecs:
+    itself is header arithmetic). Two stdlib codecs:
 
     * MJPEG (``MJPG``): each chunk is a JPEG, decoded by the repo's
       own decoder; grayscale frames expand to RGB so the sha
@@ -494,8 +375,7 @@ def _avi_frames(payload: bytes, every_n: int) -> list[tuple[int, str]]:
         if fmt["compression"] != 0 or fmt["bit_count"] not in (24, 32):
             raise NotImplementedError(
                 f"AVI video codec {codec!r}: only MJPG and uncompressed "
-                "24/32-bit BI_RGB decode in-container (PyAV/ffmpeg wheel "
-                "needed for other codecs)"
+                "24/32-bit BI_RGB are covered by the stdlib decoders)"
             )
 
         def _decode_rgb(chunk: bytes) -> bytes:
@@ -584,7 +464,7 @@ def _real_video_metadata(payload: bytes) -> dict:
     frame count and duration (summed graphic-control delays) from
     `gif_codec.gif_metadata`'s block walk — image data skipped by
     sub-block length, never decompressed. Other containers raise
-    NotImplementedError naming the missing wheel; malformed payloads
+    NotImplementedError naming the containers covered; malformed payloads
     of a recognized container raise ValueError (see
     ``video_metadata(on_error=)`` for sweep-grade tolerance)."""
     from mwas_rfam_spark.functions.gif_codec import is_gif
@@ -661,8 +541,7 @@ def _real_video_metadata(payload: bytes) -> dict:
         }
     raise NotImplementedError(
         "video metadata: payload is none of ISO BMFF (mp4/mov), AVI, "
-        "Matroska/WebM, or GIF — other containers need PyAV/ffmpeg, not "
-        "in this container"
+        "Matroska/WebM, or GIF (the containers the header walkers cover)"
     )
 
 
@@ -738,9 +617,9 @@ def video_metadata(
 
 def sample_video_frames(media: DataFrame, every_n: int = 4, fake: bool = True) -> DataFrame:
     """Frame sampling → one row per sampled frame (doc_id, frame_idx,
-    frame_sha). ``fake=False`` is the real-codec path: PyAV when
-    installed, else the pure-stdlib animated-GIF decoder — other
-    formats raise NotImplementedError naming the missing wheel. The
+    frame_sha). ``fake=False`` is the real-codec path: the stdlib
+    animated-GIF and MJPEG/uncompressed-AVI decoders — other formats
+    raise NotImplementedError naming the formats covered. The
     fake path derives a frame count from payload size. Output is
     long-form so downstream per-frame ops (dedup, embedding) stay
     relational."""
@@ -983,7 +862,8 @@ def _nearest_resample(px: bytes, w: int, h: int, c: int, nw: int, nh: int) -> by
 
 def resample_images(media: DataFrame, max_side: int = 64, fake: bool = True) -> DataFrame:
     """REAL image downsampling → (doc_id, new_width, new_height,
-    pixels_sha): decode (PIL → stdlib PNG/GIF codecs), nearest-neighbor
+    pixels_sha): decode (the stdlib PNG/GIF/JPEG codecs, the only real
+    path), nearest-neighbor
     resample preserving aspect ratio capped at ``max_side``, sha256 of
     the resampled pixel bytes (the dedup/embedding-ready fingerprint —
     two byte-identical images at different encodings hash the same
@@ -1152,9 +1032,9 @@ def _dhash64(px: bytes, w: int, h: int, c: int) -> int:
 def image_dhash(media: DataFrame, fake: bool = True) -> DataFrame:
     """Perceptual image fingerprints → (doc_id, dhash LONG).
 
-    The real path decodes through the shared precedence
-    (:func:`_real_decode_pixels`: PIL, else the stdlib PNG/GIF/JPEG
-    codecs) and hashes the FIRST frame (the title frame — the
+    The real path decodes through the stdlib PNG/GIF/JPEG codecs
+    (:func:`_real_decode_pixels`, the only real path) and hashes the
+    FIRST frame (the title frame — the
     perceptual identity of an animation; whole-animation BYTE identity
     is `resample_images`' job). The fake path derives a deterministic
     64-bit value from the payload sha256 with the same two's-complement

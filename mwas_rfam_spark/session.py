@@ -36,8 +36,8 @@ def get_spark(
         # localCheckpoint blocks are freed by the ContextCleaner only after
         # the driver JVM garbage-collects the RDD handle; a long-lived
         # session running many checkpointed pipelines otherwise accretes
-        # dead blocks between full GCs (tools/checkpoint_probe.py measures
-        # ~23 MB per dedup_pipeline run at sf0.1). Force a periodic GC so
+        # dead blocks between full GCs (`git show 3c5d916:tools/checkpoint_probe.py`
+        # measured ~23 MB per dedup_pipeline run at sf0.1). Force a periodic GC so
         # block-manager storage is bounded by the interval, not the session
         # lifetime. (Default is 30min.)
         .config("spark.cleaner.periodicGC.interval", "5min")

@@ -318,7 +318,7 @@ def test_png_allocation_budget():
 
 def test_decode_images_real_png_path(spark):
     """fake=False end-to-end through the Spark mapInPandas stage: PNG
-    payloads decode with the stdlib codec (PIL absent in-container) and
+    payloads decode with the stdlib codec (the only real image path) and
     report true dims — the plumbing (schema, batch contract, image-only
     filter) is the same as the fake path."""
     import pytest
@@ -351,7 +351,11 @@ def test_decode_images_real_png_path(spark):
     ).select(
         "doc_id", "payload", F.struct(F.col("mt").alias("media_type")).alias("media_meta")
     )
-    with pytest.raises(Exception, match="NotImplementedError|none of PNG/GIF/JPEG|PIL"):
+    with pytest.raises(
+        Exception,
+        match=r"NotImplementedError: real image decode: payload is none of "
+        r"PNG/GIF/JPEG \(the formats the stdlib decoders cover\)",
+    ):
         decode_images(bad, fake=False).collect()
 
 
@@ -649,16 +653,13 @@ def test_extract_audio_real_wav_path(spark):
     }
     assert got == {1: (16000, 3200, 0.2), 2: (44100, 44100, 1.0)}
 
-    # non-WAV audio raises loudly (the exact message depends on whether
-    # soundfile is installed — stub NotImplementedError here, a
-    # LibsndfileError where the wheel exists — so only the raise itself
-    # is asserted, not the wording)
+    # non-WAV, non-MP3 audio raises loudly, naming the format covered
     bad = spark.createDataFrame(
         [(9, b"fLaC....", "audio")], "doc_id long, payload binary, mt string"
     ).select(
         "doc_id", "payload", F.struct(F.col("mt").alias("media_type")).alias("media_meta")
     )
-    with pytest.raises(Exception):
+    with pytest.raises(Exception, match="not RIFF/WAVE"):
         extract_audio_features(bad, fake=False).collect()
 
 
@@ -760,7 +761,7 @@ def test_gif_rejects_corrupt():
 
 def test_video_frames_real_gif_path(spark):
     """fake=False end-to-end through the Spark mapInPandas stage: GIF
-    payloads decode with the stdlib codec (PyAV absent in-container);
+    payloads decode with the stdlib codec (the only real frame path);
     identical canvases hash identically across docs, which is exactly
     what a downstream frame-dedup consumes."""
     import pytest
@@ -801,7 +802,9 @@ def test_video_frames_real_gif_path(spark):
     ).select(
         "doc_id", "payload", F.struct(F.col("mt").alias("media_type")).alias("media_meta")
     )
-    with pytest.raises(Exception, match="NotImplementedError|not a GIF|PyAV"):
+    with pytest.raises(
+        Exception, match="NotImplementedError: real frame extraction: payload is not a GIF"
+    ):
         sample_video_frames(bad, fake=False).collect()
 
 
