@@ -31,8 +31,8 @@ from mwas_rfam_spark.operators.multimodal import (
     extract_audio_features,
 )
 from mwas_rfam_spark.operators.mwas import (
+    _pin_inputs,
     _welch_columns,
-    biosample_rollup,
     cohort_stats,
     resolve_and_normalize,
     run_mwas,
@@ -95,33 +95,12 @@ def _mwas_stats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     input_df = mwas_input_from_events(spark, sf_dir)
     catalog_df = mwas_catalog_from_orders(spark, sf_dir)
     meta = mwas_metadata_long_from_customer(spark, sf_dir)
-    # localCheckpoint the multiply-consumed relations: cohort_stats joins
-    # sets/ref at three points, and without pinning the whole condense
-    # subplan is inlined at every use (measured: 20 scans of the same
-    # parquet in one physical plan, no exchange reuse). Checkpoint beats
-    # persist+settle here because it also truncates lineage — downstream
-    # planning stops re-running Catalyst over the condense tree
-    # (25-40% of this query's wall at sf0.1; SCALE.md).
+    # pin the multiply-consumed relations: cohort_stats joins sets/ref at
+    # three points, and without pinning the whole condense subplan is
+    # inlined at every use (measured: 20 scans of the same parquet in one
+    # physical plan, no exchange reuse)
     sets_df, ref_df = condense_metadata(meta)
-    # the three pinned chains are independent; each eager localCheckpoint
-    # is a blocking job, so overlap them (guide §2.6 — actions are only
-    # sequential because the driver calls them sequentially). Results are
-    # byte-identical; only job scheduling changes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fut_sets = pool.submit(sets_df.localCheckpoint)
-        fut_ref = pool.submit(ref_df.localCheckpoint)
-        fut_roll = pool.submit(
-            lambda: biosample_rollup(
-                resolve_and_normalize(input_df, catalog_df, cfg)
-            ).localCheckpoint()
-        )
-        sets_df, ref_df, rollup = (
-            fut_sets.result(),
-            fut_ref.result(),
-            fut_roll.result(),
-        )
+    rollup, sets_df, ref_df = _pin_inputs(input_df, catalog_df, sets_df, ref_df, cfg)
     return cohort_stats(rollup, sets_df, ref_df, cfg)
 
 

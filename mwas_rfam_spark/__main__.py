@@ -20,8 +20,25 @@ from __future__ import annotations
 
 import argparse
 import sys
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+@contextmanager
+def _cli_session(spark: SparkSession | None, app_name: str):
+    """Yield the caller's session, or a new one (``app_name``) that is
+    stopped when the block exits."""
+    if spark is not None:
+        yield spark
+        return
+    from .session import get_spark
+
+    spark = get_spark(app_name=app_name)
+    try:
+        yield spark
+    finally:
+        spark.stop()
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -89,16 +106,12 @@ def build_curate_parser() -> argparse.ArgumentParser:
 
 def curate_main(argv: list[str], spark: SparkSession | None = None) -> int:
     from .operators.curation import curate_corpus
+    from .pinning import pin
     from .sources.readers import read_documents_jsonl
     from .sources.sinks import write_training_shards
 
     args = build_curate_parser().parse_args(argv)
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="curate-cli")
-    try:
+    with _cli_session(spark, "curate-cli") as spark:
         if args.input_format == "jsonl":
             docs = read_documents_jsonl(spark, args.input).where(
                 "_corrupt_record IS NULL"
@@ -133,12 +146,14 @@ def curate_main(argv: list[str], spark: SparkSession | None = None) -> int:
             # the full gate->dedup->decontam pipeline a second time
             # just for stage counts doubled the subcommand's most
             # expensive jobs — and the second run silently dropped
-            # redact=not args.no_redact (r13 review findings). The
-            # localCheckpoint pins the marked relation so the kept
-            # write and the accounting aggregate share one execution.
-            marked = curate_corpus(
-                docs, bench, mode="mark", redact=not args.no_redact, **kw
-            ).localCheckpoint(eager=False)
+            # redact=not args.no_redact (r13 review findings). The pin
+            # lets the kept write and the accounting aggregate share
+            # one execution.
+            marked = pin(
+                curate_corpus(docs, bench, mode="mark", redact=not args.no_redact, **kw),
+                "curate_main:marked",
+                eager=False,
+            )
             kept = marked.where(F.col("drop_stage") == "kept").drop("drop_stage")
         else:
             kept = curate_corpus(docs, bench, redact=not args.no_redact, **kw)
@@ -151,9 +166,6 @@ def curate_main(argv: list[str], spark: SparkSession | None = None) -> int:
                 "overwrite"
             ).csv(f"{args.output.rstrip('/')}/_accounting", header=True)
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_select_parser() -> argparse.ArgumentParser:
@@ -204,12 +216,7 @@ def build_select_parser() -> argparse.ArgumentParser:
 
 def select_main(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_select_parser().parse_args(argv)
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="select-cli")
-    try:
+    with _cli_session(spark, "select-cli") as spark:
         if args.op == "dsir":
             from .operators.selection import importance_resample
 
@@ -301,9 +308,6 @@ def select_main(argv: list[str], spark: SparkSession | None = None) -> int:
                 f"from {args.clusters} cluster(s)"
             )
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_validate_parser() -> argparse.ArgumentParser:
@@ -334,12 +338,7 @@ def validate_main(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_validate_parser().parse_args(argv)
     with open(args.rules) as f:
         spec = json.load(f)
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="validate-cli")
-    try:
+    with _cli_session(spark, "validate-cli") as spark:
         from pyspark.sql import functions as F
 
         # "expr" is the cross-column / arbitrary-SQL constraint: any
@@ -397,9 +396,6 @@ def validate_main(argv: list[str], spark: SparkSession | None = None) -> int:
                 "overwrite"
             ).parquet(args.quarantine)
         return 0 if report["ok"] else 1
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_split_parser() -> argparse.ArgumentParser:
@@ -440,12 +436,7 @@ def split_main(argv: list[str], spark: SparkSession | None = None) -> int:
             raise SystemExit(
                 f"bad --fractions entry: {part!r} (fraction is not a number)"
             ) from None
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="split-cli")
-    try:
+    with _cli_session(spark, "split-cli") as spark:
         from .plans.sampling import hash_split, leakage_safe_split
 
         docs = spark.read.parquet(args.input)
@@ -471,9 +462,6 @@ def split_main(argv: list[str], spark: SparkSession | None = None) -> int:
         ):
             print(f"{r['split']}={r['n']}")
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_drift_parser() -> argparse.ArgumentParser:
@@ -522,12 +510,7 @@ def drift_main(argv: list[str], spark: SparkSession | None = None) -> int:
             "drift: --embedding-col is its own mode; run scalar columns "
             "as a separate invocation"
         )
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="drift-cli")
-    try:
+    with _cli_session(spark, "drift-cli") as spark:
         from .operators.drift import drift_report, embedding_drift_report
 
         if args.embedding_col:
@@ -562,9 +545,6 @@ def drift_main(argv: list[str], spark: SparkSession | None = None) -> int:
         if flagged and args.fail_on_drift:
             return 2
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_report_parser() -> argparse.ArgumentParser:
@@ -582,12 +562,7 @@ def build_report_parser() -> argparse.ArgumentParser:
 
 def report_main(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_report_parser().parse_args(argv)
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="report-cli")
-    try:
+    with _cli_session(spark, "report-cli") as spark:
         from .operators.summary import corpus_report
 
         rep = corpus_report(
@@ -601,9 +576,6 @@ def report_main(argv: list[str], spark: SparkSession | None = None) -> int:
                 args.output
             )
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_index_parser() -> argparse.ArgumentParser:
@@ -647,12 +619,7 @@ def build_index_parser() -> argparse.ArgumentParser:
 
 def index_main(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_index_parser().parse_args(argv)
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="index-cli")
-    try:
+    with _cli_session(spark, "index-cli") as spark:
         df = spark.read.parquet(args.input)
         if args.kind == "text":
             from .operators.retrieval import (
@@ -725,9 +692,6 @@ def index_main(argv: list[str], spark: SparkSession | None = None) -> int:
                 remove_from_ivfpq_index(df, args.path, id_col=id_col, vec_col=args.vec_col)
         print(f"{args.kind} index {args.op} complete at {args.path}")
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_search_parser() -> argparse.ArgumentParser:
@@ -764,12 +728,7 @@ def search_main(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_search_parser().parse_args(argv)
     if bool(args.terms) == bool(args.queries):
         raise SystemExit("search: exactly one of --terms or --queries")
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="search-cli")
-    try:
+    with _cli_session(spark, "search-cli") as spark:
         if args.terms:
             terms = [t.strip() for t in args.terms.split(",") if t.strip()]
             if not terms:
@@ -808,9 +767,6 @@ def search_main(argv: list[str], spark: SparkSession | None = None) -> int:
                 "overwrite"
             ).parquet(args.output)
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_fuzzy_parser() -> argparse.ArgumentParser:
@@ -834,12 +790,7 @@ def build_fuzzy_parser() -> argparse.ArgumentParser:
 
 def fuzzy_main(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_fuzzy_parser().parse_args(argv)
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="fuzzy-cli")
-    try:
+    with _cli_session(spark, "fuzzy-cli") as spark:
         from .operators.fuzzy import edit_distance_join, edit_distance_pairs
 
         left = spark.read.parquet(args.input)
@@ -864,9 +815,6 @@ def fuzzy_main(argv: list[str], spark: SparkSession | None = None) -> int:
         n = spark.read.parquet(args.output).count()
         print(f"{n} pair(s) within distance {args.max_dist}")
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_diff_parser() -> argparse.ArgumentParser:
@@ -892,12 +840,7 @@ def build_diff_parser() -> argparse.ArgumentParser:
 def diff_main(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_diff_parser().parse_args(argv)
     content_cols = [c.strip() for c in args.content_cols.split(",") if c.strip()] or None
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="diff-cli")
-    try:
+    with _cli_session(spark, "diff-cli") as spark:
         from .operators.summary import corpus_diff, diff_status_counts
 
         old = spark.read.parquet(args.old)
@@ -911,9 +854,6 @@ def diff_main(argv: list[str], spark: SparkSession | None = None) -> int:
         for r in diff_status_counts(detail).collect():
             print(f"{r['status']}\t{r['n']}")
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_tokenize_parser() -> argparse.ArgumentParser:
@@ -948,12 +888,7 @@ def build_tokenize_parser() -> argparse.ArgumentParser:
 
 def tokenize_main(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_tokenize_parser().parse_args(argv)
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="tokenize-cli")
-    try:
+    with _cli_session(spark, "tokenize-cli") as spark:
         from .operators.tokenize import (
             bpe_encode,
             train_bpe_merges,
@@ -995,9 +930,6 @@ def tokenize_main(argv: list[str], spark: SparkSession | None = None) -> int:
             f"{total['sum(n_tokens)']} tokens"
         )
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_pack_parser() -> argparse.ArgumentParser:
@@ -1027,12 +959,7 @@ def build_pack_parser() -> argparse.ArgumentParser:
 
 def pack_main(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_pack_parser().parse_args(argv)
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="pack-cli")
-    try:
+    with _cli_session(spark, "pack-cli") as spark:
         from pyspark.sql import functions as F
 
         from .operators.packing import (
@@ -1081,9 +1008,6 @@ def pack_main(argv: list[str], spark: SparkSession | None = None) -> int:
                 f"{agg['n_packs']} chunks"
             )
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_maintain_parser() -> argparse.ArgumentParser:
@@ -1109,12 +1033,7 @@ def maintain_main(argv: list[str], spark: SparkSession | None = None) -> int:
     from .sources.sinks import compact_files, merge_upsert_partitioned
 
     args = build_maintain_parser().parse_args(argv)
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="maintain-cli")
-    try:
+    with _cli_session(spark, "maintain-cli") as spark:
         if args.op == "upsert":
             parts = merge_upsert_partitioned(
                 spark,
@@ -1130,9 +1049,6 @@ def maintain_main(argv: list[str], spark: SparkSession | None = None) -> int:
             )
             print(f"compacted to {n} file(s)")
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 REFERENCE_TESTS = "/root/reference/main/tests"
@@ -1171,12 +1087,7 @@ def build_evaluate_parser() -> argparse.ArgumentParser:
 
 def evaluate_main(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_evaluate_parser().parse_args(argv)
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="evaluate-cli")
-    try:
+    with _cli_session(spark, "evaluate-cli") as spark:
         if args.state:
             # a state dir has no score/label columns and its slicing is
             # FIXED by the layout it was written with — accepting these
@@ -1289,9 +1200,6 @@ def evaluate_main(argv: list[str], spark: SparkSession | None = None) -> int:
                 "overwrite"
             ).parquet(args.output)
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_monitor_parser() -> argparse.ArgumentParser:
@@ -1315,12 +1223,7 @@ def build_monitor_parser() -> argparse.ArgumentParser:
 
 def monitor_main(argv: list[str], spark: SparkSession | None = None) -> int:
     args = build_monitor_parser().parse_args(argv)
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="monitor-cli")
-    try:
+    with _cli_session(spark, "monitor-cli") as spark:
         from .operators.evaluation import (
             auc_from_score_counts,
             calibration_from_score_counts,
@@ -1457,9 +1360,6 @@ def monitor_main(argv: list[str], spark: SparkSession | None = None) -> int:
         finally:
             rows.unpersist()
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 def build_demo_parser() -> argparse.ArgumentParser:
@@ -1552,12 +1452,7 @@ def demo_main(argv: list[str], spark: SparkSession | None = None) -> int:
     if bioproject is None:
         stem = os.path.basename(args.metadata).replace(".csv", "")
         bioproject = stem.rsplit("--", 1)[-1].rsplit("_", 1)[-1]
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="mwas-demo")
-    try:
+    with _cli_session(spark, "mwas-demo") as spark:
         from .config import MwasConfig
         from .operators.condense import condense_metadata
         from .operators.mwas import run_mwas
@@ -1633,9 +1528,6 @@ def demo_main(argv: list[str], spark: SparkSession | None = None) -> int:
         print(f"PARITY OK: output matches {golden} exactly "
               f"({len(rows)} rows x {len(cols)} cols)")
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 _SUBCOMMANDS = {
@@ -1705,13 +1597,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         legacy_13col=args.legacy_13col,
     )
 
-    owns_session = spark is None
-    if owns_session:
-        from .session import get_spark
-
-        spark = get_spark(app_name="mwas-cli")
-
-    try:
+    with _cli_session(spark, "mwas-cli") as spark:
         input_df = read_input_csv(spark, args.input_csv)
         catalog_df = spark.read.parquet(args.catalog)
         meta_long = spark.read.parquet(args.metadata_long)
@@ -1742,9 +1628,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 f"{args.output.rstrip('/')}/_accounting", header=True
             )
         return 0
-    finally:
-        if owns_session:
-            spark.stop()
 
 
 if __name__ == "__main__":

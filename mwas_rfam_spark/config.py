@@ -60,8 +60,9 @@ class MwasConfig:
     # blocks are NOT fault-tolerant: on a cluster where executor loss
     # must not fail the job, set False to fall back to persist+settle
     # (recomputable lineage), or call sc.setCheckpointDir and swap in
-    # reliable checkpoints. Scope: only the MWAS pipeline honours this
-    # flag (`operators.mwas.run_mwas` and the steps it runs, and
+    # reliable checkpoints. The policy is applied in `pinning.pin`
+    # (False = keep_lineage=True). Scope: only the MWAS pipeline passes
+    # this flag (`operators.mwas.run_mwas` and the steps it runs, and
     # `finalize_results`). Dedup, drift, evaluation, retrieval,
     # quantization, sinks, streaming and the `curate` CLI pin with
     # localCheckpoint whatever it is set to.

@@ -44,6 +44,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pinning import pin
+
 _SEED1 = 0x9E3779B9
 _SEED2 = 0x85EBCA77
 
@@ -285,7 +287,8 @@ def incremental_exact_dedup_bloom(
         new_bloom = bloom_build(updated)
         return survivors.drop("content_hash"), updated, new_bloom
 
-    marked = bloom_mark_maybe_seen(batch_first, bloom).localCheckpoint(eager=False)
+    marked = bloom_mark_maybe_seen(batch_first, bloom)
+    marked = pin(marked, "incremental_exact_dedup_bloom:marked", eager=False)
     definitely_new = marked.where(~F.col("__maybe_seen")).drop("__maybe_seen")
     maybe = marked.where(F.col("__maybe_seen")).drop("__maybe_seen")
     if maybe.limit(1).count() == 0:

@@ -180,14 +180,17 @@ def run_mwas_cached(
         hit = _read_if_exists(spark, path)
         if hit is not None:
             return hit
-    out = run_mwas(input_df, catalog_df, sets_df, ref_df, cfg)
-    out.write.mode("overwrite").parquet(path)
-    # the result now lives on disk and is re-read below, so the ~7
-    # subplans run_mwas pinned are pure leak — release them like every
-    # other disk-writing caller (__main__, http_server) does; a
-    # long-lived driver cache-missing on changing inputs used to grow
-    # executor storage without bound (r13 review finding)
-    release_mwas_persists()
+    try:
+        out = run_mwas(input_df, catalog_df, sets_df, ref_df, cfg)
+        out.write.mode("overwrite").parquet(path)
+    finally:
+        # the result is re-read from disk below (or the write failed),
+        # so the subplans run_mwas pinned are pure leak — release them
+        # like every other disk-writing caller (__main__, http_server)
+        # does; a long-lived driver cache-missing on changing inputs
+        # used to grow executor storage without bound (r13 review
+        # finding)
+        release_mwas_persists()
     # self-written completion marker, AFTER the job returned — a torn
     # write never has it, a marker-disabled committer still gets hits
     _write_stamp(fs, sentinel, b"ok")
@@ -312,12 +315,15 @@ def run_mwas_resume(
             .distinct()
             .collect()
         }
-        out = run_mwas(todo, catalog_df, sets_df, ref_df, cfg)
-        write_results_partitioned(out, output_dir, fmt="parquet", mode="append")
-        # output is on disk and re-read below — free run_mwas's pinned
-        # subplans like every other disk-writing caller (r13 review
-        # finding: repeated resume calls leaked ~7 persists each)
-        release_mwas_persists()
+        try:
+            out = run_mwas(todo, catalog_df, sets_df, ref_df, cfg)
+            write_results_partitioned(out, output_dir, fmt="parquet", mode="append")
+        finally:
+            # output is on disk and re-read below (or the write failed)
+            # — free run_mwas's pinned subplans like every other
+            # disk-writing caller (r13 review finding: repeated resume
+            # calls leaked ~7 persists each)
+            release_mwas_persists()
         _write_stamp(
             fs,
             stamp_p,

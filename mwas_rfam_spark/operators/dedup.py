@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pinning import overlap, pin
+
 
 def normalize_text(col):
     """Canonical text for hashing: lowercase, collapsed whitespace.
@@ -183,10 +185,10 @@ def _shingle_index(
     bound reasons about). ``max_df="auto"`` resolves via
     :func:`auto_max_df`."""
     sh = word_shingles(docs, n, text_col, id_col)
-    doc_sets = sh.groupBy("id").agg(
+    doc_sets = pin(sh.groupBy("id").agg(
         F.sort_array(F.collect_list("shingle")).alias("shingles"),
         F.count("*").alias("sz"),
-    ).localCheckpoint()
+    ), "_shingle_index:doc_sets")
 
     # every downstream pass (df counts — incl. the auto_max_df probe —
     # and the ranked index) re-derives the shingle relation by EXPLODING
@@ -216,7 +218,7 @@ def _shingle_index(
         )
     if max_df is not None:
         ranked = ranked.where(F.col("df") <= max_df)
-    ranked = ranked.select("id", "shingle", "pos", "sz").localCheckpoint()
+    ranked = pin(ranked.select("id", "shingle", "pos", "sz"), "_shingle_index:ranked")
     return doc_sets, ranked, max_df
 
 
@@ -376,7 +378,7 @@ def dedup_pipeline_pairs(
     """
     # checkpoint: `groups` feeds the representative semi-join and both
     # group-size re-attach joins — one exact-dedup pass, not three
-    groups = exact_dedup_groups(docs, text_col, id_col).localCheckpoint()
+    groups = pin(exact_dedup_groups(docs, text_col, id_col), "dedup_pipeline_pairs:groups")
     reps = docs.join(
         groups.select(F.col("keep_id").alias(id_col)), [id_col], "left_semi"
     )
@@ -521,7 +523,8 @@ def minhash_lsh_pairs(
     """
     assert num_hashes % bands == 0
     # checkpoint: consumed by the band explode AND both estimate joins
-    sigs = minhash_signatures(docs, num_hashes, n, text_col, id_col).localCheckpoint()
+    sigs = minhash_signatures(docs, num_hashes, n, text_col, id_col)
+    sigs = pin(sigs, "minhash_lsh_pairs:signatures")
     return _lsh_estimate_pairs(sigs, num_hashes, bands, threshold, "sha2")
 
 
@@ -593,13 +596,13 @@ def minhash_lsh_pairs_md5(
     shingle_hashes = sh.select("shingle").distinct().select("shingle", *hs)
     mins = [F.expr(f"min(h{i})").alias(f"h{i}") for i in range(num_hashes)]
     hex_sig = ", ".join(f"lower(hex(h{i}))" for i in range(num_hashes))
-    sigs = (
+    # pinned: the signature relation must not re-plan/re-run per consumer
+    sigs = pin(
         sh.join(shingle_hashes, "shingle")
         .groupBy("id")
         .agg(*mins)
-        .select("id", F.expr(f"array({hex_sig})").alias("sig"))
-        # checkpoint: the signature relation must not re-plan/re-run per consumer
-        .localCheckpoint()
+        .select("id", F.expr(f"array({hex_sig})").alias("sig")),
+        "minhash_lsh_pairs_md5:signatures",
     )
     return _lsh_estimate_pairs(sigs, num_hashes, bands, threshold, "md5")
 
@@ -862,11 +865,9 @@ def dedup_clusters(
             finally:
                 edges.unpersist()
 
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
+    labels = pin(
+        edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node")),
+        "dedup_clusters:labels",
     )
     prev_cache = None
     try:
@@ -891,7 +892,7 @@ def dedup_clusters(
             hop = stepped.select(
                 F.col("node").alias("mid_node"), F.col("mid").alias("mid2")
             )
-            new_labels = (
+            new_labels = pin(
                 stepped.join(hop, stepped["mid"] == hop["mid_node"], "left")
                 .select(
                     "node",
@@ -899,8 +900,9 @@ def dedup_clusters(
                     F.least(F.col("mid"), F.coalesce("mid2", F.col("mid"))).alias("label"),
                 )
                 .withColumn("changed", F.col("label") < F.col("old"))
-                .drop("old")
-            ).localCheckpoint()
+                .drop("old"),
+                "dedup_clusters:labels",
+            )
             # PERIODIC persist on top of the checkpoint to break the
             # size-estimate bomb: Spark's join stats multiply the two
             # sides' sizeInBytes, and a checkpoint PRESERVES the product
@@ -1453,7 +1455,7 @@ def semantic_dedup(
     # checkpoint: the collapse feeds THREE consumers (members, the cell
     # assignment, and dedup_clusters' singleton anti-join) — without it
     # the groupBy+join subplan re-executes per consumer
-    with_rep = hashed.join(rep_of, ["__vh1", "__vh2"]).localCheckpoint()
+    with_rep = pin(hashed.join(rep_of, ["__vh1", "__vh2"]), "semantic_dedup:with_rep")
     members = with_rep.select("__id", "__rep")
     reps = with_rep.where(F.col("__id") == F.col("__rep")).select(
         F.col("__id").alias(id_col), F.col("__vec").alias(vec_col)
@@ -1550,9 +1552,9 @@ def incremental_minhash_dedup(
     should persist this instead of rewriting the whole union, and
     re-deriving it externally would re-shingle every survivor.
     """
-    buckets = minhash_band_buckets(
+    buckets = pin(minhash_band_buckets(
         new_docs, num_hashes, bands, n, text_col, id_col
-    ).localCheckpoint()
+    ), "incremental_minhash_dedup:buckets")
 
     first_ids = buckets.groupBy("band", "bucket").agg(F.min("id").alias("first_id"))
     drop_batch = (
@@ -1869,7 +1871,8 @@ def incremental_embedding_dedup(
     recall); pass a bound only when a batch can overload one cell and
     the asymmetry is acceptable.
     """
-    batch = embedding_dedup_state(new_emb, centroids, id_col, vec_col).localCheckpoint()
+    batch = embedding_dedup_state(new_emb, centroids, id_col, vec_col)
+    batch = pin(batch, "incremental_embedding_dedup:batch")
 
     # (b) within-batch: blocked pair finding, drop the larger id of any pair
     pairs = embedding_near_dup_pairs(
@@ -2078,38 +2081,32 @@ def approx_dedup_quality_report(
             # blocked cosine self-join's AQE coalesce
             .repartition(docs.sparkSession.sparkContext.defaultParallelism)
         )
-    docs = docs.localCheckpoint()  # shared by truth + every method
+    docs = pin(docs, "approx_dedup_quality_report:docs")  # shared by truth + every method
 
     # materialize the three pair sets CONCURRENTLY: each family's cost
     # at sample size is dominated by fixed scheduler/shuffle rounds
     # (~2.3 s each here regardless of data volume), so serializing them
-    # triples the floor — concurrent job submission on one session is
-    # the supported Spark pattern for exactly this
-    from concurrent.futures import ThreadPoolExecutor
-
+    # triples the floor. Thunks, because building each pair set already
+    # runs its own pins.
     def _truth():
-        return ngram_jaccard_pairs(
+        return pin(ngram_jaccard_pairs(
             docs, n=n, threshold=threshold, text_col=text_col,
             id_col=id_col, max_df=None,
-        ).select("id_a", "id_b").localCheckpoint()
+        ).select("id_a", "id_b"), "approx_dedup_quality_report:truth")
 
     def _minhash():
-        return minhash_lsh_pairs(
+        return pin(minhash_lsh_pairs(
             docs, num_hashes=num_hashes, bands=bands, n=n,
             threshold=threshold, text_col=text_col, id_col=id_col,
-        ).select("id_a", "id_b").localCheckpoint()
+        ).select("id_a", "id_b"), "approx_dedup_quality_report:minhash")
 
     def _simhash():
-        return simhash_near_dup_pairs(
+        return pin(simhash_near_dup_pairs(
             docs, max_hamming=simhash_max_hamming, bands=simhash_bands,
             text_col=text_col, id_col=id_col,
-        ).select("id_a", "id_b").localCheckpoint()
+        ).select("id_a", "id_b"), "approx_dedup_quality_report:simhash")
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_truth = pool.submit(_truth)
-        f_mh = pool.submit(_minhash)
-        f_sh = pool.submit(_simhash)
-        truth, mh, sh = f_truth.result(), f_mh.result(), f_sh.result()
+    truth, mh, sh = overlap([_truth, _minhash, _simhash])
     n_truth = truth.count()
 
     preds = {"minhash_lsh": mh, "simhash": sh}

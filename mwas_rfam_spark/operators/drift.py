@@ -31,9 +31,12 @@ data rows.
 from __future__ import annotations
 
 import math
+from functools import partial
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..pinning import overlap, pin
 
 
 def _finite_cond(df: DataFrame, col: str, alias: str | None = None):
@@ -129,7 +132,7 @@ def _two_level_cumsum(
     ranged = per_value.repartitionByRange(partitions, value_col).withColumn(
         "__pid", F.spark_partition_id()
     )
-    ranged = ranged.localCheckpoint(eager=False)
+    ranged = pin(ranged, "_two_level_cumsum:ranged", eager=False)
 
     w_local = (
         Window.partitionBy("__pid")
@@ -197,10 +200,10 @@ def ks_drift(
     # sampling pass both consume this reduced relation — without it
     # the union+groupBy over both corpora ran twice per call (r12
     # review finding)
-    per_value = tagged.groupBy("v").agg(
+    per_value = pin(tagged.groupBy("v").agg(
         F.sum("__is_a").alias("cnt_a"),
         F.sum(1 - F.col("__is_a")).alias("cnt_b"),
-    ).localCheckpoint(eager=False)
+    ), "ks_drift:per_value", eager=False)
     # side totals as driver scalars (two numbers), folded in as
     # literals — never an all-rows window (that would be one task), and
     # not a separate aggregation job either: they fall out of the
@@ -247,14 +250,14 @@ def categorical_drift(
     # lazy checkpoint: three consumers (totals, top-mover subplan, the
     # final agg) each re-ran the union+groupBy over both corpora (r12
     # review finding)
-    counts = (
+    counts = pin(
         a.unionByName(b)
         .groupBy("c")
         .agg(
             F.sum("__is_a").alias("cnt_a"),
             F.sum(1 - F.col("__is_a")).alias("cnt_b"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "categorical_drift:counts", eager=False,
     )
     n_a, n_b = counts.agg(F.sum("cnt_a"), F.sum("cnt_b")).first()
     n_a, n_b = int(n_a or 0), int(n_b or 0)
@@ -341,15 +344,10 @@ def drift_report(
     # subplans concurrently overlaps them — measured 3× on a 3-component
     # embedding report. The assembled relation is identical: thunks are
     # ordered, only their construction interleaves.
-    from concurrent.futures import ThreadPoolExecutor
-
-    thunks = [("n", c) for c in numeric_cols or []] + [
-        ("c", c) for c in categorical_cols or []
-    ]
-    with ThreadPoolExecutor(max_workers=min(8, len(thunks))) as pool:
-        parts = list(
-            pool.map(lambda t: _numeric(t[1]) if t[0] == "n" else _categorical(t[1]), thunks)
-        )
+    parts = overlap(
+        [partial(_numeric, c) for c in numeric_cols or []]
+        + [partial(_categorical, c) for c in categorical_cols or []]
+    )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -419,11 +417,11 @@ def binned_numeric_drift(
     # lazy checkpoint: the totals .first() and the returned plan both
     # consume the parameter-sized counts relation — without it the two
     # corpus groupBys re-ran per consumer (r12 review finding)
-    counts = counted(df_a, "cnt_a").join(counted(df_b, "cnt_b"), "bucket", "full_outer").select(
+    counts = pin(counted(df_a, "cnt_a").join(counted(df_b, "cnt_b"), "bucket", "full_outer").select(
         "bucket",
         F.coalesce("cnt_a", F.lit(0)).alias("cnt_a"),
         F.coalesce("cnt_b", F.lit(0)).alias("cnt_b"),
-    ).localCheckpoint(eager=False)
+    ), "binned_numeric_drift:counts", eager=False)
     # ONE totals job for all four scalars (overall + non-null) instead
     # of two separate aggregation jobs (r12 review finding)
     nn_a = F.when(F.col("bucket") >= 0, F.col("cnt_a")).otherwise(F.lit(0))
@@ -521,12 +519,12 @@ def embedding_drift_report(
         p = pca_project(
             df.where(F.col(vec_col).isNotNull()), model, vec_col=vec_col, out_col="__p"
         )
-        # checkpoint: drift_report builds an independent KS subplan per
+        # pinned: drift_report builds an independent KS subplan per
         # component, each of which would otherwise re-scan the corpus
         # and recompute the d-dimensional projection — k-fold redundant
-        return p.select(
+        return pin(p.select(
             *[F.col("__p")[i].alias(c) for i, c in enumerate(cols)]
-        ).localCheckpoint()
+        ), "embedding_drift_report:projected")
 
     return drift_report(
         proj(emb_base),

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from ..pinning import pin
 
 
 def binary_auc(
@@ -68,9 +69,7 @@ def binary_auc(
     # parameter-sized result is lazily checkpointed because three
     # consumers (cumsum, contrib join, null row) would otherwise each
     # re-run the corpus aggregate
-    per_s = per_score_counts(scored, score_col, label_col).localCheckpoint(
-        eager=False
-    )
+    per_s = pin(per_score_counts(scored, score_col, label_col), "binary_auc:counts", eager=False)
     return auc_from_score_counts(
         per_s, partitions=partitions, assume_folded=True
     )
@@ -132,11 +131,11 @@ def auc_from_score_counts(
         # upstream scan+fold (3 scans of a state dir for one AUC; the
         # same reason binary_auc checkpoints its counts — r12 review
         # finding)
-        per_s = per_s.groupBy("v").agg(
+        per_s = pin(per_s.groupBy("v").agg(
             F.sum("cnt_a").alias("cnt_a"),
             F.sum("cnt_b").alias("cnt_b"),
             F.sum("cnt_null").alias("cnt_null"),
-        ).localCheckpoint(eager=False)
+        ), "auc_from_score_counts:folded", eager=False)
     valid_per = per_s.where(F.col("v").isNotNull()).select("v", "cnt_a", "cnt_b")
     cums = _two_level_cumsum(valid_per, "v", partitions)
     # AUC = Σ_s pos(s)·(neg_below(s) + ½·neg_at(s)) / (n⁺·n⁻); the
@@ -660,17 +659,17 @@ def grouped_auc_from_score_counts(
         # lazy checkpoint for the same three-consumer reason as the
         # ungrouped finisher (the nulls aggregate re-read the unfolded
         # relation — r12 review finding)
-        per = per.groupBy(*group_cols, "v").agg(
+        per = pin(per.groupBy(*group_cols, "v").agg(
             F.sum("cnt_a").alias("cnt_a"),
             F.sum("cnt_b").alias("cnt_b"),
             F.sum("cnt_null").alias("cnt_null"),
-        ).localCheckpoint(eager=False)
+        ), "grouped_auc_from_score_counts:folded", eager=False)
     valid_per = per.where(F.col("v").isNotNull()).select(
         *group_cols, F.col("v").alias("__v"), "cnt_a", "cnt_b"
     )
-    ranged = valid_per.repartitionByRange(partitions, *group_cols, "__v").withColumn(
+    ranged = pin(valid_per.repartitionByRange(partitions, *group_cols, "__v").withColumn(
         "__pid", F.spark_partition_id()
-    ).localCheckpoint(eager=False)
+    ), "grouped_auc_from_score_counts:ranged", eager=False)
     # cardinality guard BEFORE the driver-side offset collect; runs on
     # the checkpointed reduced relation so the corpus is scanned once
     n_groups = ranged.select(*group_cols).distinct().count()

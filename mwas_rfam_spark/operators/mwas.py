@@ -32,8 +32,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark import StorageLevel
 
+from .. import pinning
 from ..config import DEFAULT_CONFIG, MwasConfig
 from ..functions.scalar import replace_zero_spots, rpm
 from ..functions.stattests import (
@@ -42,54 +42,13 @@ from ..functions.stattests import (
     student_t_sf,
 )
 
-# every relation run_mwas/finalize_results materializes, so callers can
-# free the storage once the output is written (without this each call
-# leaked its cached subplans for the session lifetime)
-_LIVE_PERSISTS: list[DataFrame] = []
-
-
-def _materialize(df: DataFrame, cfg: MwasConfig) -> DataFrame:
-    """Pin a multiply-consumed subplan; a relation that is already an
-    eager checkpoint (e.g. the server's pinned metadata) is returned
-    as-is instead of being copied again.
-
-    Default: ``localCheckpoint`` — eager (so fan-out branches can never
-    race an unsettled cache) and lineage-truncating (so every downstream
-    consumer plans against a short ExistingRDD scan instead of re-running
-    Catalyst over the whole condense+cohort tree; measured 25-40% of the
-    relational core's wall at sf0.1 was exactly that re-planning —
-    SCALE.md). ``use_local_checkpoint=False`` falls back to a lazy
-    persist (recomputable lineage for fault-tolerant cluster runs);
-    callers that fan out must settle it themselves (they do — the two
-    count() settles below).
-    """
-    plan = df._jdf.logicalPlan()
-    if plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().isCheckpointed():
-        return df
-    if cfg.use_local_checkpoint:
-        df = df.localCheckpoint()
-    else:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LIVE_PERSISTS.append(df)
-    return df
-
-
 def release_mwas_persists() -> int:
-    """Release every subplan pinned by run_mwas / finalize_results in
-    this process and return how many were dropped. Call after the result
-    has been materialized (written / collected). Persisted relations are
-    unpersisted immediately; localCheckpoint'ed blocks are freed by the
-    ContextCleaner once the last DataFrame referencing them (including
-    the returned result) is garbage-collected — dropping our references
-    here is what makes that possible."""
-    n = len(_LIVE_PERSISTS)
-    for df in _LIVE_PERSISTS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _LIVE_PERSISTS.clear()
-    return n
+    """Release every subplan run_mwas / finalize_results pinned with the
+    persist policy (``use_local_checkpoint=False``) and return how many
+    were dropped; see :func:`..pinning.release`. Call after the result
+    has been materialized (written / collected)."""
+    return pinning.release()
+
 
 # ---------------------------------------------------------------------------
 # stage 1 — resolve runs & normalize (mg:572-577, 506-518)
@@ -463,7 +422,7 @@ def run_tests(
     # the kernel input, the pooled-vector eligibility and the final join
     # all consume `base`; without pinning, each re-executes the full
     # upstream pipeline (catalog join → rollup → cohort stats)
-    base = _materialize(base, cfg)
+    base = pinning.pin(base, "run_tests:base", keep_lineage=not cfg.use_local_checkpoint)
 
     use_t_test = (
         F.least(F.col("n_true"), F.col("n_false")) < cfg.min_cohort_for_permutation
@@ -649,13 +608,9 @@ def finalize_results(
             "p_value",
         ).orderBy(F.asc_nulls_last("p_value"))
 
-    # two-branch fanout over `rows` — materialize so the shared upstream
-    # (including the permutation kernel) runs once, same rationale as the
-    # stats_df settle in run_mwas (localCheckpoint is already eager; the
-    # persist fallback needs the explicit count settle)
-    rows = _materialize(rows, cfg)
-    if not cfg.use_local_checkpoint:
-        rows.count()
+    # two-branch fanout over `rows` — pin so the shared upstream
+    # (including the permutation kernel) runs once
+    rows = pinning.pin(rows, "finalize_results:rows", keep_lineage=not cfg.use_local_checkpoint)
 
     too_many = F.lit("too many biosamples to list")
     complement = F.array_except(F.col("biosamples_ref"), F.col("members"))
@@ -724,6 +679,29 @@ def finalize_results(
 # ---------------------------------------------------------------------------
 
 
+def _pin_inputs(
+    input_df: DataFrame,
+    catalog_df: DataFrame,
+    sets_df: DataFrame,
+    ref_df: DataFrame,
+    cfg: MwasConfig,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Pin the rollup, sets and ref relations, overlapping the three
+    independent jobs (the rollup reads input+catalog; sets/ref read the
+    metadata relation)."""
+    keep = not cfg.use_local_checkpoint
+    rollup = biosample_rollup(resolve_and_normalize(input_df, catalog_df, cfg))
+    return tuple(
+        pinning.overlap(
+            [
+                lambda: pinning.pin(rollup, "run_mwas:rollup", keep_lineage=keep),
+                lambda: pinning.pin(sets_df, "run_mwas:sets", keep_lineage=keep),
+                lambda: pinning.pin(ref_df, "run_mwas:ref", keep_lineage=keep),
+            ]
+        )
+    )
+
+
 def run_mwas(
     input_df: DataFrame,
     catalog_df: DataFrame,
@@ -733,56 +711,27 @@ def run_mwas(
 ) -> DataFrame:
     """End-to-end MWAS: the reference's whole §3.1 lifecycle as one plan.
 
-    Shared subplans are persisted (spill-safe): ``rollup`` feeds cohort
-    stats, the skip flags and the permutation value arrays, and the
-    metadata relations are joined at three points — without persistence
+    Shared subplans are pinned (:func:`..pinning.pin`): ``rollup`` feeds
+    cohort stats, the skip flags and the permutation value arrays, and
+    the metadata relations are joined at three points — without pinning
     each consumer re-executes the whole upstream pipeline. Metadata that
     arrives already checkpointed (the server's) is not copied again.
 
     EAGER: constructing the result executes the pipeline (including the
     test kernel) — each shared subplan is materialized before its
-    fan-out, since branches racing an unsettled cache inside one action
-    were measured recomputing the kernel concurrently (~2× end-to-end).
-    With the default ``use_local_checkpoint`` the materialization also
-    truncates lineage, so downstream stages re-plan against short
-    ExistingRDD scans instead of the whole tree (25-40% of the
-    relational core's wall at sf0.1 was that re-planning). Plan
-    inspection without execution: use the stage functions directly, or
-    set ``use_local_checkpoint=False`` (lazy persists + count settles).
-    The pinned subplans stay materialized so the returned DataFrame can
-    be re-queried cheaply; call :func:`release_mwas_persists` once the
-    output is written to let them be freed.
+    fan-out. Plan inspection: use the stage functions directly, or set
+    ``use_local_checkpoint=False``, whose persisted pins keep the full
+    lineage in the plan. The pins stay materialized so the returned
+    DataFrame can be re-queried cheaply; under that persist policy call
+    :func:`release_mwas_persists` once the output is written to free
+    them (checkpoint blocks are freed by the ContextCleaner once the
+    result is garbage-collected).
     """
-    # The three pins are independent (the rollup reads input+catalog;
-    # sets/ref read the metadata relation), but each eager
-    # localCheckpoint is a blocking job — run serially the cluster idles
-    # through three job tails. Overlap them from a small thread pool
-    # (guide §2.6: actions are only sequential because the driver calls
-    # them sequentially); results are byte-identical, only job
-    # scheduling changes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        rollup, sets_df, ref_df = pool.map(
-            lambda df: _materialize(df, cfg),
-            [
-                biosample_rollup(resolve_and_normalize(input_df, catalog_df, cfg)),
-                sets_df,
-                ref_df,
-            ],
-        )
+    rollup, sets_df, ref_df = _pin_inputs(input_df, catalog_df, sets_df, ref_df, cfg)
     skip_flags = group_skip_flags(rollup, cfg)
     # stats_df has exactly ONE consumer — run_tests' `base`, which is
-    # itself materialized right after joining in the skip flags — so a
-    # separate stats materialization is a redundant extra job wave (plan
-    # compile + codegen + write + read of the same rows `base` pins
-    # moments later; measured ~0.5 s of the mwas_full wall at sf0.1,
-    # r13 opt round). The checkpoint path lets `base`'s checkpoint
-    # compute cohort_stats inline; the persist fallback keeps the
-    # explicit settle (its lazy caches would otherwise race in the
-    # kernel/join fan-out).
+    # itself pinned right after joining in the skip flags — so `base`'s
+    # pin computes cohort_stats inline (a separate stats pin would add a
+    # redundant job wave, ~0.5 s of the mwas_full wall at sf0.1)
     stats_df = cohort_stats(rollup, sets_df, ref_df, cfg)
-    if not cfg.use_local_checkpoint:
-        stats_df = _materialize(stats_df, cfg)
-        stats_df.count()
     return run_tests(stats_df, rollup, ref_df, skip_flags, cfg)

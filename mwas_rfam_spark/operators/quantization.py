@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..pinning import pin
+
 
 def _sq_l2(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -914,13 +916,13 @@ def remove_from_ivfpq_index(
 
     spark = emb_removed.sparkSession
     centroids = _read_centroids(spark, f"{path}/centroids")
-    assigned = assign_ivf_cells(
+    assigned = pin(assign_ivf_cells(
         _guard_dims(emb_removed, centroids, vec_col), centroids, id_col, vec_col
-    ).localCheckpoint()
+    ), "remove_from_ivfpq_index:assigned")
     cells = [int(r["cell"]) for r in assigned.select("cell").distinct().collect()]
     if not cells:
         return
-    gone = assigned.select(F.col(id_col).alias("__gone")).distinct().localCheckpoint()
+    gone = pin(assigned.select(F.col(id_col).alias("__gone")).distinct(), "remove_from_ivfpq_index:gone")
     # sentinel across the two prunes: a crash in between leaves removed
     # ids still ADC-visible in codes (they waste rerank slots until the
     # re-run) — refuse probes until the prune converges
@@ -1149,9 +1151,9 @@ def ivfpq_knn_join(
         raise ValueError("ivfpq_knn_join: duplicate q_id values in queries")
     qmap = {r[q_id_col]: np.asarray(r[q_vec_col], dtype=np.float64) for r in q_rows}
 
-    probe_df = _assign_probe_cells(
+    probe_df = pin(_assign_probe_cells(
         queries, centroids, nprobe, q_vec_col
-    ).select(q_id_col, "cell").localCheckpoint()
+    ).select(q_id_col, "cell"), "ivfpq_knn_join:probes")
     cells = sorted(
         r["cell"] for r in probe_df.select("cell").distinct().collect()
     )

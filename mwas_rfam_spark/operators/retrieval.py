@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pinning import pin
+
 
 def with_rank(df: DataFrame, order: list[Column]) -> DataFrame:
     """Attach 1-based ``rank`` by the given order. Meant for arm results
@@ -280,9 +282,9 @@ def _build_postings(docs, text_col: str, id_col: str, n_buckets: int):
     """The ONE definition of the index's posting rows — materialize and
     append must build identically or probe equivalence breaks, so both
     call here. Returns (checkpointed tokenized base, postings)."""
-    base = docs.select(
+    base = pin(docs.select(
         F.col(id_col).alias("id"), _lowered_tokens(text_col).alias("toks")
-    ).localCheckpoint()
+    ), "_build_postings:base")
     postings = (
         base.select("id", F.size("toks").alias("dl"), F.explode("toks").alias("term"))
         .groupBy("term", "id")
@@ -395,12 +397,11 @@ def remove_from_text_index(
     # dedupe on id BEFORE any aggregation: a removed-slice carrying
     # duplicate ids must subtract each doc's token count exactly once
     # or the rebased avgdl silently drifts
-    base = (
+    base = pin(
         docs_removed.select(
             F.col(id_col).alias("id"), _lowered_tokens(text_col).alias("toks")
-        )
-        .dropDuplicates(["id"])
-        .localCheckpoint()
+        ).dropDuplicates(["id"]),
+        "remove_from_text_index:base",
     )
     gone = base.select("id")
     # one combined aggregate (count + token sum) over the checkpointed
@@ -425,11 +426,11 @@ def remove_from_text_index(
         postings = spark.read.parquet(f"{path}/postings").where(
             F.col("bucket").isin(buckets)  # partition pruning
         )
-        kept = postings.join(
+        kept = pin(postings.join(
             gone.withColumnRenamed("id", "__gone"),
             postings["id"] == F.col("__gone"),
             "left_anti",
-        ).localCheckpoint()  # source == destination: materialize first
+        ), "remove_from_text_index:kept")  # source == destination: materialize first
         written = {int(r["bucket"]) for r in kept.select("bucket").distinct().collect()}
         (
             kept.write.mode("overwrite")

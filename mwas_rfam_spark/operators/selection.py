@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from mwas_rfam_spark.functions.scalar import md5_u32 as _md5_u32
 from mwas_rfam_spark.functions.scalar import md5_uniform as _md5_uniform
+from mwas_rfam_spark.pinning import overlap, pin
 
 
 def _tokens(text_col: Column) -> Column:
@@ -176,23 +177,20 @@ def importance_weights(
         raise ValueError(f"alpha must be > 0, got {alpha}")
     occ_raw = _bucket_occurrences(raw_docs, n_buckets, text_col, id_col, bigrams)
     occ_tgt = _bucket_occurrences(target_docs, n_buckets, text_col, id_col, bigrams)
-    # materialize the two ≤n_buckets-row count relations ONCE
-    # (localCheckpoint): the totals below and the ratio relation then
-    # read parameter-sized state instead of re-featurizing the corpora
-    # per consumer — one pass over the target, two over raw (the per-doc
-    # reduction re-derives the occurrence stream; at 100 TB recomputing
-    # that projection beats caching a data-sized relation).
-    # The two count chains read DIFFERENT corpora and share nothing, but
-    # each eager localCheckpoint is a blocking job — overlap them from a
-    # 2-thread pool (guide §2.6: actions are only sequential because the
-    # driver calls them sequentially; same move as run_mwas's pinned
-    # chains). Results are byte-identical, only job scheduling changes.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_q = pool.submit(lambda: _bucket_counts(occ_raw).localCheckpoint())
-        fut_p = pool.submit(lambda: _bucket_counts(occ_tgt).localCheckpoint())
-        q, p = fut_q.result(), fut_p.result()
+    # pin the two ≤n_buckets-row count relations ONCE: the totals below
+    # and the ratio relation then read parameter-sized state instead of
+    # re-featurizing the corpora per consumer — one pass over the
+    # target, two over raw (the per-doc reduction re-derives the
+    # occurrence stream; at 100 TB recomputing that projection beats
+    # caching a data-sized relation).
+    # The two count chains read DIFFERENT corpora and share nothing, so
+    # their pins overlap.
+    q, p = overlap(
+        [
+            lambda: pin(_bucket_counts(occ_raw), "importance_weights:raw_counts"),
+            lambda: pin(_bucket_counts(occ_tgt), "importance_weights:target_counts"),
+        ]
+    )
     # two scalars — the only driver-side values in the whole operator
     tot_q = q.agg(F.sum("c")).collect()[0][0] or 0
     tot_p = p.agg(F.sum("c")).collect()[0][0] or 0

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pinning import pin
+
 
 def _validate_unique_q_ids(queries: DataFrame, q_id_col: str, caller: str) -> None:
     """Duplicate query ids would silently MERGE distinct queries'
@@ -571,9 +573,9 @@ def remove_from_ivf_index(
 
     spark = emb_removed.sparkSession
     centroids = _read_centroids(spark, f"{path}/centroids")
-    assigned = assign_ivf_cells(
+    assigned = pin(assign_ivf_cells(
         _guard_dims(emb_removed, centroids, vec_col), centroids, id_col, vec_col
-    ).localCheckpoint()
+    ), "remove_from_ivf_index:assigned")
     cells = [int(r["cell"]) for r in assigned.select("cell").distinct().collect()]
     if not cells:
         return
@@ -600,9 +602,9 @@ def prune_partitioned_rows(
     rows = spark.read.parquet(table_path).where(
         F.col(part_col).isin(cells)  # partition pruning
     )
-    kept = rows.join(
+    kept = pin(rows.join(
         gone, rows[id_col] == F.col("__gone"), "left_anti"
-    ).localCheckpoint()  # source == destination: materialize first
+    ), "prune_partitioned_rows:kept")  # source == destination: materialize first
     written = {int(r[part_col]) for r in kept.select(part_col).distinct().collect()}
     (
         kept.write.mode("overwrite")
@@ -758,7 +760,7 @@ def ivf_knn_join(
         # probe cells at join time that the static filter already
         # dropped — silent candidate loss (r12 advice; same pattern as
         # ivfpq's probe_df localCheckpoint).
-        probes = probes.localCheckpoint()
+        probes = pin(probes, "ivf_knn_join:probes")
         cells = sorted(
             {r["cell"] for r in probes.select("cell").distinct().collect()}
         )

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..pinning import pin
+
 
 def write_results_partitioned(
     results: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite"
@@ -273,7 +275,7 @@ def merge_upsert_partitioned(
     kept = base.join(
         F.broadcast(updates.select(key_col)), key_col, "left_anti"
     )
-    merged = kept.unionByName(updates.select(*kept.columns)).localCheckpoint()
+    merged = pin(kept.unionByName(updates.select(*kept.columns)), "merge_upsert_partitioned:merged")
     written = {r[0] for r in merged.select(partition_col).distinct().collect()}
     (
         merged.write.mode("overwrite")
@@ -352,7 +354,7 @@ def compact_files(
                 )
         n = df.count()
         n_files = max(1, math.ceil(n / target_rows_per_file))
-        out = df.repartition(n_files).localCheckpoint()
+        out = pin(df.repartition(n_files), "compact_files:out")
         (
             out.write.mode("overwrite")
             .option("maxRecordsPerFile", target_rows_per_file)
@@ -373,9 +375,9 @@ def compact_files(
         "__b",
         F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.greatest(F.col("__k"), F.lit(1))),
     )
-    out = bucketed.repartition(F.col(partition_col), F.col("__b")).drop(
+    out = pin(bucketed.repartition(F.col(partition_col), F.col("__b")).drop(
         "__b", "__k"
-    ).localCheckpoint()
+    ), "compact_files:out")
     (
         out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

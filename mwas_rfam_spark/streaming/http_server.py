@@ -38,7 +38,8 @@ _BOOL_TRUE = {"1", "true", "yes", "on"}
 _BOOL_FALSE = {"0", "false", "no", "off"}
 
 # serializes run_mwas + release_mwas_persists across handler threads —
-# the pinned-subplan registry is process-global (see do_POST)
+# the keep_lineage pin registry (pinning.release) is process-global
+# (see do_POST)
 _MWAS_LOCK = threading.Lock()
 
 
@@ -209,10 +210,11 @@ def make_server(
             reply = None
             try:
                 # _MWAS_LOCK serializes the run AND the release: the
-                # pinned-subplan registry (mwas._LIVE_PERSISTS) is
+                # keep_lineage pin registry (pinning._pinned) is
                 # process-global, so releasing after one request would
                 # otherwise unpersist another thread's in-flight
-                # subplans. Without the release every POST pinned its
+                # subplans. Without the release every POST under the
+                # persist policy (use_local_checkpoint=0) pinned its
                 # materialized relations (rollup, cohort rows, results)
                 # for the server's lifetime —
                 # the exact leak release_mwas_persists exists to

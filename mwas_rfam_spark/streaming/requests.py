@@ -1285,21 +1285,10 @@ def eval_state_auc(
     vs ``binary_auc`` over the concatenated rows)."""
     from ..operators.evaluation import auc_from_score_counts
 
-    per_s = (
-        _authoritative_state_rows(spark, state_dir)
-        .groupBy("v")
-        .agg(
-            F.sum("cnt_a").alias("cnt_a"),
-            F.sum("cnt_b").alias("cnt_b"),
-            F.sum("cnt_null").alias("cnt_null"),
-        )
-        # assume_folded=True skips the finisher's own checkpoint, and
-        # its three sub-plans would otherwise each re-scan + re-fold
-        # the state dir (r12 review finding) — pin the state-sized fold
-        .localCheckpoint(eager=False)
-    )
+    # the finisher folds the raw state rows per distinct score and pins
+    # the fold for its three consumers
     return auc_from_score_counts(
-        per_s, partitions=partitions, assume_folded=True
+        _authoritative_state_rows(spark, state_dir), partitions=partitions
     )
 
 
@@ -1366,23 +1355,13 @@ def eval_state_grouped_auc(
         )
     from ..operators.evaluation import grouped_auc_from_score_counts
 
-    # lazy-checkpoint pin for the same two-consumer reason as
-    # eval_state_auc (the finisher's ranged sub-plan and its nulls
-    # aggregate would otherwise each re-scan and re-fold the state dir
-    # — r13 review finding; assume_folded=True skips the finisher's own
-    # pin, so the pin is this caller's job)
-    per = df.groupBy(*gcols, "v").agg(
-        F.sum("cnt_a").alias("cnt_a"),
-        F.sum("cnt_b").alias("cnt_b"),
-        F.sum("cnt_null").alias("cnt_null"),
-    ).localCheckpoint(eager=False)
+    # the finisher folds per (group..., v) and pins the fold
     return grouped_auc_from_score_counts(
-        per,
+        df,
         gcols,
         partitions=partitions,
         max_offset_groups=max_offset_groups,
         include_null_counts=True,
-        assume_folded=True,
     )
 
 

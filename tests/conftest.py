@@ -14,6 +14,28 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def job_descriptions(spark):
+    """``job_descriptions(after)`` → (highest job id, descriptions of the
+    jobs with id > ``after``), read from the status store once the
+    listener bus has drained; ``after=-1`` lists every job."""
+
+    def read(after: int) -> tuple[int, list]:
+        sc = spark.sparkContext._jsc.sc()
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(spark.sparkContext._jvm.java.util.ArrayList())
+        last, descs = after, []
+        for i in range(jobs.size()):
+            j = jobs.apply(i)
+            last = max(last, j.jobId())
+            if j.jobId() > after:
+                d = j.description()
+                descs.append(d.get() if d.isDefined() else None)
+        return last, descs
+
+    return read
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -269,28 +269,51 @@ def test_t_only_plan_has_no_permutation_kernel(spark):
     assert "collect_list(rpm" in default
 
 
-def test_run_mwas_does_not_repin_checkpointed_inputs(spark):
+def test_run_mwas_does_not_repin_checkpointed_inputs(spark, job_descriptions):
     """Metadata that arrives already checkpointed (the server's) is used
     as-is: run_mwas pins only its own relations (rollup, cohort rows,
     results), and the output matches a run over lazy metadata, which
-    run_mwas pins itself."""
+    run_mwas pins itself. Pins are read back from the job descriptions
+    their jobs carry."""
     from mwas_rfam_spark.operators import mwas as mwas_mod
 
     input_df, catalog_df, sets_df, ref_df = _six_sample_mwas_inputs(spark)
     cfg = MwasConfig(t_test_only=True)
 
     def run(sets, ref):
-        rows = sorted(
-            tuple(r) for r in mwas_mod.run_mwas(input_df, catalog_df, sets, ref, cfg).collect()
-        )
-        n_pins = len(mwas_mod._LIVE_PERSISTS)
-        mwas_mod.release_mwas_persists()
-        return rows, n_pins
+        before, _ = job_descriptions(-1)
+        out = mwas_mod.run_mwas(input_df, catalog_df, sets, ref, cfg)
+        _, descs = job_descriptions(before)
+        rows = sorted(tuple(r) for r in out.collect())
+        return rows, {d for d in descs if d is not None}
 
     lazy_rows, lazy_pins = run(sets_df, ref_df)
     pinned_rows, pinned_pins = run(sets_df.localCheckpoint(), ref_df.localCheckpoint())
-    assert (lazy_pins, pinned_pins) == (5, 3)
+    own = {"run_mwas:rollup", "run_tests:base", "finalize_results:rows"}
+    assert lazy_pins == own | {"run_mwas:sets", "run_mwas:ref"}
+    assert pinned_pins == own
     assert pinned_rows == lazy_rows and lazy_rows
+
+
+@pytest.mark.parametrize("t_test_only", [False, True])
+def test_run_mwas_same_rows_under_both_pin_policies(spark, t_test_only):
+    """The persist policy (use_local_checkpoint=False) and the default
+    checkpoint policy give the same rows, telemetry columns aside."""
+    from mwas_rfam_spark.operators.mwas import release_mwas_persists, run_mwas
+
+    inputs = _six_sample_mwas_inputs(spark)
+
+    def rows(use_local_checkpoint):
+        cfg = MwasConfig(t_test_only=t_test_only, use_local_checkpoint=use_local_checkpoint)
+        out = run_mwas(*inputs, cfg)
+        try:
+            cols = [c for c in out.columns if c not in ("runtime_seconds", "memory_usage_bytes")]
+            return sorted(tuple(r) for r in out.select(*cols).collect())
+        finally:
+            release_mwas_persists()
+
+    checkpointed = rows(True)
+    assert checkpointed and rows(False) == checkpointed
 
 
 def test_interval_join_within(spark):
@@ -863,13 +886,7 @@ def test_resume_zero_output_bioproject_not_recomputed(spark, tmp_path, monkeypat
     assert not calls, "zero-output bioproject P2 must count as done"
 
 
-def test_caching_releases_mwas_persists(spark, tmp_path):
-    """r13 review finding: run_mwas_cached / run_mwas_resume returned a
-    disk re-read but never released run_mwas's pinned subplans — a
-    long-lived driver leaked ~7 persisted relations per cache miss."""
-    from mwas_rfam_spark.operators.caching import run_mwas_cached
-    from mwas_rfam_spark.operators.mwas import _LIVE_PERSISTS
-
+def _five_run_mwas_inputs(spark):
     input_df = spark.createDataFrame(
         [("R1", "g1", 10.0), ("R2", "g1", 20.0), ("R3", "g1", 5.0),
          ("R4", "g1", 8.0), ("R5", "g1", 12.0)], INPUT_SCHEMA
@@ -883,11 +900,40 @@ def test_caching_releases_mwas_persists(spark, tmp_path):
         ["biosample_id", "t1"],
     )
     sets_df, ref_df = condense_metadata(melt_wide_metadata(wide, "P1"))
+    return input_df, catalog_df, sets_df, ref_df
+
+
+def test_caching_releases_mwas_persists(spark, tmp_path):
+    """r13 review finding: run_mwas_cached / run_mwas_resume returned a
+    disk re-read but never released run_mwas's pinned subplans — a
+    long-lived driver leaked ~7 persisted relations per cache miss.
+    Run under the persist policy: checkpoint pins are never registered."""
+    from mwas_rfam_spark import pinning
+    from mwas_rfam_spark.operators.caching import run_mwas_cached
+
     run_mwas_cached(
-        spark, input_df, catalog_df, sets_df, ref_df,
-        str(tmp_path / "rel_cache"), MwasConfig(t_test_only=True),
+        spark, *_five_run_mwas_inputs(spark),
+        str(tmp_path / "rel_cache"),
+        MwasConfig(t_test_only=True, use_local_checkpoint=False),
     )
-    assert not _LIVE_PERSISTS, "cache miss must release pinned subplans"
+    assert not pinning._pinned, "cache miss must release pinned subplans"
+
+
+def test_caching_releases_mwas_persists_when_write_fails(spark, tmp_path):
+    """A failed cache write must not leak the pins for the session's
+    lifetime: the release runs whether or not the write succeeds."""
+    from mwas_rfam_spark import pinning
+    from mwas_rfam_spark.operators.caching import run_mwas_cached
+
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("a regular file")
+    with pytest.raises(Exception):
+        run_mwas_cached(
+            spark, *_five_run_mwas_inputs(spark),
+            str(blocker / "rel_cache"),
+            MwasConfig(t_test_only=True, use_local_checkpoint=False),
+        )
+    assert not pinning._pinned, "failed write must release pinned subplans"
 
 
 def test_fingerprint_handles_nested_map_columns(spark):

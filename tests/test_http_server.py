@@ -156,24 +156,25 @@ def test_server_releases_mwas_persists(server_url):
     """r11 review finding: the long-running server never called
     release_mwas_persists, pinning every POST's materialized relations
     (rollup, cohort rows, results) forever; the handler now releases
-    inside the serialized section."""
+    inside the serialized section. Run under the persist policy
+    (use_local_checkpoint=0): checkpoint pins are never registered."""
     import json
     import urllib.request
 
-    from mwas_rfam_spark.operators import mwas as mwas_mod
+    from mwas_rfam_spark import pinning
 
     url = server_url
     body = json.dumps(
         [{"run": f"R{i}", "group": "g1", "quantifier": 10.0 * i} for i in range(1, 7)]
     ).encode()
     req = urllib.request.Request(
-        f"{url}/run_mwas?t_test_only=1", data=body,
+        f"{url}/run_mwas?t_test_only=1&use_local_checkpoint=0", data=body,
         headers={"Content-Type": "application/json"},
     )
     with urllib.request.urlopen(req) as resp:
         assert resp.status == 200
         json.loads(resp.read())
-    assert mwas_mod._LIVE_PERSISTS == []
+    assert pinning._pinned == []
 
 
 def test_http_client_errors_are_400(server_url):
