@@ -60,11 +60,6 @@ def clean_csv_field(col: Column) -> Column:
     return F.regexp_replace(col, ",", " ")
 
 
-def clean_delimiter(col: Column) -> Column:
-    """';' → ':' in attribute/value text (reference metadata_set_maker.py:68-71)."""
-    return F.regexp_replace(col, ";", ":")
-
-
 def cohort_signature(members_sorted: Column) -> Column:
     """Stable signature of a cohort membership array.
 

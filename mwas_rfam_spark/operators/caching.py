@@ -21,9 +21,11 @@ The reference stubs this as a TODO (main/mwas_general.py:564-568,581-584:
   counts as a hit only when its ``_SUCCESS`` marker exists — a write
   interrupted mid-job leaves readable partial files that would
   otherwise be served as a complete result forever (r12 review
-  finding). Presence check is read-and-fallback, so there is no racy
-  exists/create window: worst case two writers compute the same result
-  and one overwrite wins. (Reader-side caveat: a cache-hit DataFrame
+  finding). Presence check is read-and-fallback under the one
+  missing-output rule (``sources/storage.missing_ok``: only a missing
+  path may pass, any other analysis failure surfaces), so there is no
+  racy exists/create window: worst case two writers compute the same
+  result and one overwrite wins. (Reader-side caveat: a cache-hit DataFrame
   is lazy — if another writer OVERWRITES the same key before the
   caller's action runs, the scan can hit deleted files. Same-key
   overwrites only happen while a concurrent writer is mid-compute of
@@ -34,46 +36,11 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, MwasConfig
-
-# the repo's narrow-catch rule (streaming/requests.py, retrieval.py):
-# ONLY no-previous-output shapes may pass — any other analysis failure
-# (conflicting schemas, unreadable footers) must surface, not silently
-# trigger a full recompute that appends duplicates (r12 review finding)
-_MISSING_MARKERS = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-
-
-def _write_stamp(fs, path, payload: bytes) -> None:
-    """THE Hadoop stamp-file write (create/write/close) shared by the
-    cache sentinel and the resume config stamp — it was hand-duplicated
-    at both sites (r13 review finding)."""
-    stream = fs.create(path, True)
-    try:
-        stream.write(bytearray(payload))
-    finally:
-        stream.close()
-
-
-def _read_stamp(fs, path) -> bytes:
-    stream = fs.open(path)
-    try:
-        return bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-
-
-def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        msg = str(e)
-        if any(m in msg for m in _MISSING_MARKERS):
-            return None
-        raise
+from ..sources import storage
 
 
 def _read_partitioned_string(spark: SparkSession, path: str) -> DataFrame | None:
@@ -86,7 +53,7 @@ def _read_partitioned_string(spark: SparkSession, path: str) -> DataFrame | None
     old = spark.conf.get(key, "true")
     spark.conf.set(key, "false")
     try:
-        return _read_if_exists(spark, path)
+        return storage.missing_ok(lambda: spark.read.parquet(path))
     finally:
         spark.conf.set(key, old)
 
@@ -166,18 +133,15 @@ def run_mwas_cached(
     marker files (``mapreduce.fileoutputcommitter.marksuccessfuljobs=
     false``, common on object stores) would otherwise NEVER hit — every
     call silently recomputing and rewriting, a cache that is pure
-    overhead (r13 ADVICE item). The sentinel uses the same stamp-file
-    pattern as :func:`_check_resume_config`."""
+    overhead. The sentinel is written like every
+    stamp, through ``storage.write_bytes``."""
     from .mwas import release_mwas_persists, run_mwas
 
     key = mwas_cache_key(input_df, cfg, catalog_df, sets_df, ref_df)
     path = f"{cache_dir.rstrip('/')}/{key}"
-    jvm = spark._jvm
-    success = jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-    sentinel = jvm.org.apache.hadoop.fs.Path(f"{path}/_mwas_cache_ok")
-    fs = success.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(success) or fs.exists(sentinel):
-        hit = _read_if_exists(spark, path)
+    sentinel = f"{path}/_mwas_cache_ok"
+    if storage.exists(spark, f"{path}/_SUCCESS") or storage.exists(spark, sentinel):
+        hit = storage.missing_ok(lambda: spark.read.parquet(path))
         if hit is not None:
             return hit
     try:
@@ -193,7 +157,7 @@ def run_mwas_cached(
         release_mwas_persists()
     # self-written completion marker, AFTER the job returned — a torn
     # write never has it, a marker-disabled committer still gets hits
-    _write_stamp(fs, sentinel, b"ok")
+    storage.write_bytes(spark, sentinel, b"ok")
     return spark.read.parquet(path)
 
 
@@ -231,12 +195,9 @@ def _check_resume_config(spark: SparkSession, output_dir: str, cfg: MwasConfig) 
     mismatch."""
     digest = hashlib.sha256(repr(cfg).encode()).hexdigest()[:16]
     stamp = f"{output_dir.rstrip('/')}/_mwas_config"
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(stamp)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p):
-        stored = _read_stamp(fs, p).decode().strip()
-        if stored != digest:
+    stored = storage.read_bytes(spark, stamp)
+    if stored is not None:
+        if stored.decode().strip() != digest:
             raise ValueError(
                 f"run_mwas_resume: {output_dir!r} was written under a "
                 "different MwasConfig — resuming would mix schemas/"
@@ -244,7 +205,7 @@ def _check_resume_config(spark: SparkSession, output_dir: str, cfg: MwasConfig) 
                 "delete the old one)"
             )
         return
-    _write_stamp(fs, p, digest.encode())
+    storage.write_bytes(spark, stamp, digest.encode())
 
 
 def run_mwas_resume(
@@ -283,14 +244,8 @@ def run_mwas_resume(
 
     _check_resume_config(spark, output_dir, cfg)
     done_stamp_path = f"{output_dir.rstrip('/')}/_mwas_done_bioprojects"
-    jvm = spark._jvm
-    stamp_p = jvm.org.apache.hadoop.fs.Path(done_stamp_path)
-    fs = stamp_p.getFileSystem(spark._jsc.hadoopConfiguration())
-    attempted_prev: set[str] = set()
-    if fs.exists(stamp_p):
-        attempted_prev = {
-            ln for ln in _read_stamp(fs, stamp_p).decode().splitlines() if ln
-        }
+    stamp = storage.read_bytes(spark, done_stamp_path) or b""
+    attempted_prev = {ln for ln in stamp.decode().splitlines() if ln}
     prev = _read_partitioned_string(spark, output_dir)
     done = prev.select("bioproject") if prev is not None else None
     if attempted_prev:
@@ -324,15 +279,14 @@ def run_mwas_resume(
             # disk-writing caller (r13 review finding: repeated resume
             # calls leaked ~7 persists each)
             release_mwas_persists()
-        _write_stamp(
-            fs,
-            stamp_p,
+        storage.write_bytes(
+            spark,
+            done_stamp_path,
             "\n".join(sorted(attempted_prev | attempted_now)).encode(),
         )
     result = _read_partitioned_string(spark, output_dir)
     if result is None:
         # fresh dir + empty input: nothing was ever written — an empty
-        # relation with the right schema, not PATH_NOT_FOUND (r12
-        # review finding)
+        # relation with the right schema, not a missing-path error
         return run_mwas(input_df.limit(0), catalog_df, sets_df, ref_df, cfg)
     return result

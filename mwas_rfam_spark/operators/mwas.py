@@ -60,10 +60,13 @@ def resolve_and_normalize(
 ) -> DataFrame:
     """input ⟗ catalog on run (J1) + RPM normalization (F2/P11/P12).
 
-    Returns (bio_project, bio_sample, run, group, rpm). Rows whose run is
-    unknown to the catalog cannot be attributed to a bioproject and are
-    dropped (the reference carries them through its outer merge but they
-    never match a bioproject subset, mg:467).
+    Returns (bio_project, bio_sample, run, group, rpm) followed by every
+    other input column except ``quantifier`` — the streaming paths'
+    ``request_id`` rides through, so batch and stream share this one
+    resolve. Rows whose run is unknown to the catalog cannot be
+    attributed to a bioproject and are dropped (the reference carries
+    them through its outer merge but they never match a bioproject
+    subset, mg:467).
     """
     catalog = catalog_df.withColumn(
         "spots", replace_zero_spots(F.col("spots"), cfg.zero_spots_replacement)
@@ -85,6 +88,7 @@ def resolve_and_normalize(
         "run",
         "group",
         rpm_col.alias("rpm"),
+        *[c for c in input_df.columns if c not in ("run", "group", "quantifier")],
     )
 
 

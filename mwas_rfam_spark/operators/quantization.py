@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..pinning import pin
+from ..sources import storage
 
 
 def _sq_l2(a: Column, b: Column) -> Column:
@@ -673,25 +674,17 @@ def materialize_ivfpq(
     _clear_index_building(spark, path)
 
 
-def _building_sentinel(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_building")
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
 def _set_index_building(spark, path: str) -> None:
     """Drop the crash sentinel an index mutation holds while its
     multi-write sequence is in flight — a single-file create, so it
     exists (and probes refuse) from before the first data write until
     :func:`_clear_index_building` after the last commit, surviving the
     meta dir's own delete-then-write rewrites."""
-    fs, p = _building_sentinel(spark, path)
-    fs.create(p, True).close()
+    storage.write_bytes(spark, f"{path}/_building", b"")
 
 
 def _clear_index_building(spark, path: str) -> None:
-    fs, p = _building_sentinel(spark, path)
-    fs.delete(p, False)
+    storage.delete(spark, f"{path}/_building")
 
 
 def _index_is_residual(spark, path: str) -> bool:
@@ -710,20 +703,16 @@ def _index_is_residual(spark, path: str) -> bool:
     raw and returning wrong ADC candidates (r8 ADVICE item);
     ``building`` stays soft-absent because a flag-less meta cannot be
     an interrupted write of a layout that always writes the flag."""
-    jvm = spark._jvm
-    meta_path = jvm.org.apache.hadoop.fs.Path(f"{path}/meta")
-    fs = meta_path.getFileSystem(spark._jsc.hadoopConfiguration())
     # the sentinel outranks everything INCLUDING a missing meta: a crash
     # inside a meta rewrite deletes the dir, and falling through to the
     # legacy-raw branch would silently demote a residual index
-    sfs, sp = _building_sentinel(spark, path)
-    if sfs.exists(sp):
+    if storage.exists(spark, f"{path}/_building"):
         raise ValueError(
             f"IVF-PQ index at {path} has an interrupted build/append "
             "(_building sentinel present) — its sides may disagree; "
             "rebuild it or re-run the interrupted operation"
         )
-    if not fs.exists(meta_path):
+    if not storage.exists(spark, f"{path}/meta"):
         return False  # legacy pre-meta layout = raw codes
     row = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
     if row.get("building", False):

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..pinning import pin
+from ..sources import storage
 
 
 def with_rank(df: DataFrame, order: list[Column]) -> DataFrame:
@@ -305,17 +306,9 @@ def _postings_id_type(spark, path: str) -> str | None:
     fallback covers it). Only the no-files shapes may pass; a real read
     failure (permissions, corrupt footer) must surface — silently
     falling back would launder a string-built index into wrong-typed
-    'long' probes (same narrow-catch rule as
-    quantization._index_is_residual)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return dict(spark.read.parquet(f"{path}/postings").dtypes)["id"]
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
-            return None
-        raise
+    'long' probes (``sources/storage.missing_ok``)."""
+    postings = storage.missing_ok(lambda: spark.read.parquet(f"{path}/postings"))
+    return None if postings is None else dict(postings.dtypes)["id"]
 
 
 def materialize_text_index(

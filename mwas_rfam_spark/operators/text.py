@@ -69,10 +69,6 @@ def _mean_token_length_from(toks: Column) -> Column:
     return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
 
 
-def mean_token_length(text_col: Column) -> Column:
-    return _mean_token_length_from(tokens(text_col))
-
-
 def quality_score(text_col: Column) -> Column:
     """Composite quality heuristic in [0,1]: favors moderate length,
     some stopwords, low punctuation density."""

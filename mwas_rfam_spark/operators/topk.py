@@ -13,15 +13,6 @@ hand-rolled (group × spark_partition_id) pre-filter = 2 Exchanges /
 still hash-partitions on (group, pid)), so it re-shuffled the entire
 input once more for a bound the optimizer already provides (r12 review
 finding; the r4-era design predated the rule's availability here).
-
-``local_prefilter=True`` therefore remains only as a MANUAL fallback for
-the cases the rule skips: k at or above
-``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000), where
-an extra full shuffle can still beat a handful of unbounded giant-group
-sorts. It also carries a retry caveat: shuffling on the nondeterministic
-``spark_partition_id()`` can lose/duplicate rows under partial stage
-retry when the input itself is nondeterministic (the SPARK-23207 class)
-— another reason it is no longer the default.
 """
 
 from __future__ import annotations
@@ -36,16 +27,13 @@ def top_k_per_group(
     order_cols: list[Column],
     k: int,
     rank_col: str = "rank",
-    local_prefilter: bool = False,
 ) -> DataFrame:
     """Rows ranked 1..k per group under ``order_cols``.
 
     ``order_cols`` must define a deterministic TOTAL order (include a
-    tie-breaker key); with a total order the output is identical with
-    ``local_prefilter`` on or off (tested). The default relies on the
-    optimizer's map-side ``WindowGroupLimit`` (see module docstring);
-    pass ``local_prefilter=True`` only for k >= the optimizer's
-    windowGroupLimitThreshold with few giant groups.
+    tie-breaker key) for the output to be deterministic. The plan relies
+    on the optimizer's map-side ``WindowGroupLimit`` (see module
+    docstring).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -53,25 +41,14 @@ def top_k_per_group(
         # fail eagerly like the k guard — an unordered window dies later
         # at action time with an opaque AnalysisException (r12 review)
         raise ValueError("order_cols must be non-empty (a total order)")
-    if rank_col in df.columns or (local_prefilter and "_local_rank" in df.columns):
+    if rank_col in df.columns:
         # silent clobber guard: withColumn REPLACES an existing column
         # of the same name, destroying caller data (r12 review finding)
         raise ValueError(
-            f"top_k_per_group: input already has a {rank_col!r} (or "
-            "'_local_rank') column — rename it or pass a different "
-            "rank_col"
-        )
-    out = df
-    if local_prefilter:
-        w_local = Window.partitionBy(
-            *group_cols, F.spark_partition_id()
-        ).orderBy(*order_cols)
-        out = (
-            out.withColumn("_local_rank", F.row_number().over(w_local))
-            .where(F.col("_local_rank") <= k)
-            .drop("_local_rank")
+            f"top_k_per_group: input already has a {rank_col!r} column — "
+            "rename it or pass a different rank_col"
         )
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return out.withColumn(rank_col, F.row_number().over(w).cast("long")).where(
+    return df.withColumn(rank_col, F.row_number().over(w).cast("long")).where(
         F.col(rank_col) <= k
     )

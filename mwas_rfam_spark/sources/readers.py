@@ -230,15 +230,6 @@ def read_wide_metadata(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def read_wide_metadata_csv(spark: SparkSession, path: str, bioproject: str) -> DataFrame:
-    """S2 — :func:`read_wide_metadata` melted long (first column adopted
-    as ``biosample_id`` when no column carries that name)."""
-    df = read_wide_metadata(spark, path)
-    if "biosample_id" not in df.columns:
-        df = df.withColumnRenamed(df.columns[0], "biosample_id")
-    return melt_wide_metadata(df, bioproject)
-
-
 DOCUMENTS_SCHEMA = "doc_id BIGINT, text STRING, lang STRING, source STRING"
 
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..pinning import pin
+from . import storage
 
 
 def write_results_partitioned(
@@ -127,15 +128,8 @@ def delete_partition_dirs(spark, base_path: str, partition_col: str, values) -> 
     files). One definition so the escaping rule cannot drift between
     call sites (r12 review finding: retrieval.py carried a hand-rolled
     unescaped copy)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     for v in values:
-        d = jvm.org.apache.hadoop.fs.Path(
-            f"{base_path}/{_hive_partition_dir(spark, partition_col, v)}"
-        )
-        fs = d.getFileSystem(conf)
-        if fs.exists(d):
-            fs.delete(d, True)
+        storage.delete(spark, f"{base_path}/{_hive_partition_dir(spark, partition_col, v)}")
 
 
 def merge_upsert_partitioned(
@@ -325,15 +319,8 @@ def compact_files(
     df = spark.read.parquet(path)
 
     def _count_data_files() -> int:
-        jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(path)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        it, c = fs.listFiles(root, True), 0
-        while it.hasNext():
-            name = it.next().getPath().getName()
-            if name.startswith("part-"):
-                c += 1
-        return c
+        files = storage.list_dir(spark, path, recursive=True)
+        return sum(name.startswith("part-") for name, _ in files)
 
     if partition_col is None:
         # guard: compacting a PARTITIONED directory flat would silently
@@ -341,12 +328,8 @@ def compact_files(
         # part- files; pruning probes full-scan, later partitionBy
         # writes into the root corrupt it) — refuse instead (r12 review
         # finding)
-        jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(path)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if st.isDirectory() and "=" in name and not name.startswith("."):
+        for name, is_dir in storage.list_dir(spark, path):
+            if is_dir and "=" in name and not name.startswith("."):
                 raise ValueError(
                     f"compact_files: {path!r} is partitioned "
                     f"(found directory {name!r}) — pass partition_col "

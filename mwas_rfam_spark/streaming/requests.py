@@ -15,29 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.scalar import replace_zero_spots, rpm
-
-
-def _stream_rpm_col(cfg=None):
-    """RPM normalization for the streaming paths — the SAME expression as
-    batch resolve_and_normalize (replace_zero_spots then rpm), so one
-    observation yields one value whichever path it takes. spots==0 →
-    sentinel → rpm == quantifier (reference mg:180); null spots
-    (catalog miss that still resolved a bioproject) → 0.0, as in batch.
-    ``cfg`` threads the SAME MwasConfig knobs batch honors
-    (zero_spots_replacement, normalizing_const, already_normalized) —
-    the old parameterless form hard-coded DEFAULT_CONFIG, so a
-    deployment overriding any of them got silently different rpm values
-    on the streaming path for the same observation (r13 review finding).
-    """
-    from ..config import DEFAULT_CONFIG
-
-    cfg = cfg or DEFAULT_CONFIG
-    spots = replace_zero_spots(F.col("spots"), cfg.zero_spots_replacement)
-    quantifier = F.coalesce("quantifier", F.lit(0.0))
-    if cfg.already_normalized:
-        return quantifier
-    return rpm(quantifier, spots, cfg.normalizing_const)
+from ..config import DEFAULT_CONFIG
+from ..operators.mwas import resolve_and_normalize
+from ..sources import storage
 
 
 REQUEST_SCHEMA = T.StructType(
@@ -61,35 +41,12 @@ def rpm_rollup_stream(
     """Incremental stage-1 MWAS: resolve+normalize each micro-batch and
     maintain per-(request, bioproject, group, biosample) RPM aggregates.
     The static catalog joins stream-static (no state needed for the dim).
-    ``cfg`` threads the batch resolve's MwasConfig knobs (rpm constants,
-    blacklist) so stream==batch parity holds under ANY config, not just
-    DEFAULT_CONFIG (r13 review finding)."""
+    The resolve IS batch ``resolve_and_normalize`` (``request_id`` rides
+    through it), so stream==batch parity holds under ANY ``cfg``."""
     return (
-        _resolve_joined(requests, catalog_df, cfg)
+        resolve_and_normalize(requests, catalog_df, cfg or DEFAULT_CONFIG)
         .groupBy("request_id", "bio_project", "group", "bio_sample")
         .agg(F.avg("rpm").alias("rpm"), F.count("*").alias("n_runs"))
-    )
-
-
-def _resolve_joined(requests: DataFrame, catalog_df: DataFrame, cfg=None) -> DataFrame:
-    """THE streaming resolve body both streaming surfaces share: catalog
-    join, cfg-threaded rpm, blacklist, and the SAME resolve filter as
-    batch resolve_and_normalize (mwas.py:115-117) — bio_sample too;
-    streaming used to keep NULL-biosample rows the batch path drops,
-    breaking the one-observation-one-value parity (r12 review
-    finding)."""
-    from ..config import DEFAULT_CONFIG
-
-    cfg = cfg or DEFAULT_CONFIG
-    joined = requests.join(catalog_df, "run", "left").withColumn(
-        "rpm", _stream_rpm_col(cfg)
-    )
-    if cfg.blacklist:
-        joined = joined.filter(
-            ~F.col("bio_project").isin(list(cfg.blacklist))
-        )
-    return joined.filter(
-        F.col("bio_project").isNotNull() & F.col("bio_sample").isNotNull()
     )
 
 
@@ -221,21 +178,11 @@ def resolve_stream(
     requests: DataFrame, catalog_df: DataFrame, cfg=None
 ) -> DataFrame:
     """Stage-1 resolve+normalize for a request stream (stream-static join
-    against the catalog dim; no state required). ``cfg`` threads the
-    batch resolve's MwasConfig knobs — see :func:`_resolve_joined`."""
-    return _resolve_joined(requests, catalog_df, cfg).select(
+    against the catalog dim; no state required) — batch
+    ``resolve_and_normalize`` under the same ``cfg``."""
+    return resolve_and_normalize(requests, catalog_df, cfg or DEFAULT_CONFIG).select(
         "bio_project", "group", "bio_sample", "rpm"
     )
-
-
-def run_request_batch(spark: SparkSession, rows: list[dict], catalog_df: DataFrame) -> DataFrame:
-    """S8 synchronous ingest path (server.py:27-45 equivalent): a JSON
-    request body processed as one batch through the same plan."""
-    from ..operators.mwas import biosample_rollup, resolve_and_normalize
-    from ..sources.readers import input_from_rows
-
-    df = input_from_rows(spark, rows)
-    return biosample_rollup(resolve_and_normalize(df, catalog_df)).drop("n_runs")
 
 
 def streaming_exact_dedup(
@@ -270,7 +217,6 @@ def serve_request(
     MWAS pipeline, returning the 18-column result relation. Unlike the
     reference's fire-and-forget POST (server.py:55 returns only an exit
     status), the caller gets the results to serve back."""
-    from ..config import DEFAULT_CONFIG
     from ..operators.mwas import run_mwas
     from ..sources.readers import input_from_rows
 
@@ -530,8 +476,6 @@ def streaming_minhash_dedup(
     Returns the configured ``DataStreamWriter`` (caller adds trigger /
     checkpoint and ``.start()``).
     """
-    from pyspark.errors import AnalysisException
-
     from ..operators.dedup import incremental_minhash_dedup
 
     stamp_ok = []  # memoized: the stamp and params are immutable, so
@@ -543,22 +487,16 @@ def streaming_minhash_dedup(
         if not stamp_ok:
             _verify_banding_stamp(spark, state_dir, num_hashes, bands, n)
             stamp_ok.append(True)
-        try:
-            seen = (
-                spark.read.parquet(state_dir)
-                .where(F.col("ingest_batch") != batch_id)  # replay safety
-                .select("band", "bucket")
-            )
-        except AnalysisException as e:
-            # ONLY no-state-yet shapes may pass: missing dir (first
-            # batch) or existing-but-empty dir (crash before any batch
-            # committed). A corrupt state table must FAIL the batch —
-            # silently proceeding stateless would emit near-dups of the
-            # whole corpus history as survivors.
-            msg = str(e)
-            if "PATH_NOT_FOUND" not in msg and "UNABLE_TO_INFER_SCHEMA" not in msg:
-                raise
-            seen = None
+        # ONLY no-state-yet shapes may pass (storage.missing_ok): missing
+        # dir (first batch) or existing-but-empty dir (crash before any
+        # batch committed). A corrupt state table must FAIL the batch —
+        # silently proceeding stateless would emit near-dups of the
+        # whole corpus history as survivors.
+        seen = storage.missing_ok(
+            lambda: spark.read.parquet(state_dir)
+            .where(F.col("ingest_batch") != batch_id)  # replay safety
+            .select("band", "bucket")
+        )
         survivors, _updated, delta = incremental_minhash_dedup(
             batch_df, seen, num_hashes, bands, n, text_col, id_col,
             with_delta=True,
@@ -604,15 +542,9 @@ def _verify_banding_stamp(
         "bands": bands,
         "n": n,
     }
-    from pyspark.errors import AnalysisException
-
-    try:
-        got = spark.read.schema(_BANDING_STAMP_SCHEMA).json(path).collect()
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" not in msg and "UNABLE_TO_INFER_SCHEMA" not in msg:
-            raise
-        got = []
+    got = storage.missing_ok(
+        lambda: spark.read.schema(_BANDING_STAMP_SCHEMA).json(path).collect()
+    ) or []
     if got:
         if got[0]["banding_version"] is None:
             # a truncated/hand-edited stamp parses PERMISSIVE to an
@@ -667,18 +599,8 @@ def last_committed_batch(spark: SparkSession, checkpoint_dir: str) -> int | None
     foreachBatch returned successfully, so a committed batch can never
     re-run; the at-least-once replay window is exactly the ids above
     this). Returns None for a checkpoint that has committed nothing."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    d = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/commits")
-    fs = d.getFileSystem(conf)
-    if not fs.exists(d):
-        return None
-    best = None
-    for st in fs.listStatus(d):
-        name = st.getPath().getName()
-        if name.isdigit():
-            best = int(name) if best is None else max(best, int(name))
-    return best
+    commits = storage.list_dir(spark, f"{checkpoint_dir}/commits")
+    return max((int(name) for name, _ in commits if name.isdigit()), default=None)
 
 
 #: layout manifest written by the per-batch state COMPACTOR at the state
@@ -699,9 +621,9 @@ _LAYOUT_MANIFEST = "_layout_manifest.json"
 def _write_layout_manifest(spark: SparkSession, state_dir: str, covers_up_to: int) -> None:
     """Stamp the state dir's CURRENT merged schema + watermark. One
     mergeSchema footer pass at compaction time buys every subsequent
-    read out of its own; written tmp-then-rename so readers never see a
-    torn manifest, and best-effort (a failure just leaves readers on
-    the footer-merge path)."""
+    read out of its own; written through ``storage.write_bytes`` so
+    readers never see a torn manifest, and best-effort (a failure just
+    leaves readers on the footer-merge path)."""
     import json
 
     try:
@@ -711,43 +633,43 @@ def _write_layout_manifest(spark: SparkSession, state_dir: str, covers_up_to: in
         blob = json.dumps(
             {"version": 1, "covers_up_to": covers_up_to, "schema_json": schema_json}
         ).encode()
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        final = jvm.org.apache.hadoop.fs.Path(f"{state_dir}/{_LAYOUT_MANIFEST}")
-        tmp = jvm.org.apache.hadoop.fs.Path(f"{state_dir}/.{_LAYOUT_MANIFEST}.tmp")
-        fs = final.getFileSystem(conf)
-        out = fs.create(tmp, True)
-        out.write(bytearray(blob))
-        out.close()
-        if fs.exists(final):
-            fs.delete(final, False)
-        fs.rename(tmp, final)
+        storage.write_bytes(spark, f"{state_dir}/{_LAYOUT_MANIFEST}", blob)
     except Exception:
         pass
 
 
-def _read_layout_manifest(spark: SparkSession, fs, jvm, state_dir: str) -> dict | None:
+def _read_layout_manifest(spark: SparkSession, state_dir: str) -> dict | None:
     """Best-effort manifest read; None (→ footer-merge path) on any
     absence or failure."""
     import json
 
     try:
-        p = jvm.org.apache.hadoop.fs.Path(f"{state_dir}/{_LAYOUT_MANIFEST}")
-        if not fs.exists(p):
+        data = storage.read_bytes(spark, f"{state_dir}/{_LAYOUT_MANIFEST}")
+        if data is None:
             return None
-        stream = fs.open(p)
-        try:
-            data = bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
         m = json.loads(data.decode())
         if m.get("version") != 1 or "schema_json" not in m or "covers_up_to" not in m:
             return None
         return m
     except Exception:
         return None
+
+
+def _ingest_batch_ids(spark: SparkSession, state_dir: str) -> list[int]:
+    """The ``ingest_batch=<id>`` partition ids under a state dir, for the
+    readers and the compactor alike: one driver-side listing of
+    directory names, so learning them costs no state-sized Spark job.
+    Strict int syntax only: ``isdigit()`` admits strings
+    ``int()`` rejects ('--5', unicode digits), so any other name is
+    skipped like __HIVE_DEFAULT_PARTITION__ instead of crashing the
+    caller. ``[]`` when the dir is absent."""
+    ids = []
+    for name, _is_dir in storage.list_dir(spark, state_dir):
+        if name.startswith("ingest_batch="):
+            suffix = name.split("=", 1)[1]
+            if re.fullmatch(r"-?\d+", suffix, flags=re.ASCII):
+                ids.append(int(suffix))
+    return ids
 
 
 def _compact_batch_state(
@@ -783,33 +705,16 @@ def _compact_batch_state(
         return 0
     if up_to_batch < 0:
         raise ValueError(f"up_to_batch must be >= 0, got {up_to_batch}")
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = root.getFileSystem(conf)
-    if not fs.exists(root):
-        return 0
     target_id = -(up_to_batch + 1)
 
-    def _part(bid: int):
-        return jvm.org.apache.hadoop.fs.Path(f"{state_dir}/ingest_batch={bid}")
+    def _part(bid: int) -> str:
+        return f"{state_dir}/ingest_batch={bid}"
 
     def _complete(bid: int) -> bool:
-        return fs.exists(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{state_dir}/ingest_batch={bid}/_SUCCESS"
-            )
-        )
+        return storage.exists(spark, f"{_part(bid)}/_SUCCESS")
 
     raws, frozen_ok, frozen_partial = [], [], []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if not name.startswith("ingest_batch="):
-            continue
-        try:
-            bid = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
+    for bid in _ingest_batch_ids(spark, state_dir):
         if bid == target_id:
             continue
         if bid > up_to_batch:  # live batches may still re-run
@@ -833,10 +738,7 @@ def _compact_batch_state(
         return 0
     has_new = any(b >= 0 for b in fold)
     target = _part(target_id)
-    success = jvm.org.apache.hadoop.fs.Path(
-        f"{state_dir}/ingest_batch={target_id}/_SUCCESS"
-    )
-    target_done = fs.exists(target) and fs.exists(success)
+    target_done = _complete(target_id)
     if fold and not has_new and not target_done:
         # the lone (deepest) frozen partition IS the current folded
         # state — rewriting it into a deeper target would churn bytes
@@ -845,23 +747,22 @@ def _compact_batch_state(
         # at this watermark, which readers ignore but which would
         # otherwise linger until a higher watermark subsumes it
         # (r8 ADVICE item)
-        if fs.exists(target) and not fs.exists(success):
-            fs.delete(target, True)
+        storage.delete(spark, target)
         for bid in subsumed:
-            fs.delete(_part(bid), True)
+            storage.delete(spark, _part(bid))
         return len(subsumed)
-    if fs.exists(target) and not fs.exists(success):
-        fs.delete(target, True)  # partial write from a crashed compaction
-    if fold and not fs.exists(target):
+    if not target_done:
+        storage.delete(spark, target)  # partial write from a crashed compaction
+    if fold and not target_done:
         # mergeSchema: a state dir upgraded mid-stream mixes partitions
         # with and without the CMS derivation column — the fold must
         # see the column wherever it exists (absent = legacy NULL)
         src_rows = spark.read.option("mergeSchema", "true").parquet(state_dir).where(
             F.col("ingest_batch").isin(fold)
         )
-        merge_write(src_rows, f"{state_dir}/ingest_batch={target_id}")
+        merge_write(src_rows, target)
     for bid in subsumed + fold:
-        fs.delete(_part(bid), True)
+        storage.delete(spark, _part(bid))
     # stamp the layout manifest LAST (after the sources are gone, so the
     # stamped schema is the post-compaction dir's); a crash anywhere
     # above just leaves the previous (or no) manifest — readers of an
@@ -1456,7 +1357,7 @@ def compact_eval_state(
 
 
 def _read_state_with_manifest(
-    spark: SparkSession, fs, jvm, state_dir: str, ids: list[int]
+    spark: SparkSession, state_dir: str, ids: list[int]
 ) -> DataFrame:
     """The state-dir scan behind :func:`_authoritative_state_rows`:
     explicit-schema read when the compactor's layout manifest covers the
@@ -1468,7 +1369,7 @@ def _read_state_with_manifest(
     manifest exists. Any inconsistency (unparsable manifest, a tail
     column re-typed vs the stamp) falls back to the full footer merge —
     the manifest is an optimization, never authority."""
-    m = _read_layout_manifest(spark, fs, jvm, state_dir)
+    m = _read_layout_manifest(spark, state_dir)
     if m is not None:
         import json
 
@@ -1516,44 +1417,18 @@ def _authoritative_state_rows(spark: SparkSession, state_dir: str) -> DataFrame:
     upgrades surface their columns either via the compactor's layout
     manifest + tail-footer merge or, absent a manifest, the full
     mergeSchema footer read (:func:`_read_state_with_manifest`)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = root.getFileSystem(conf)
-    # the candidate bars are the ingest_batch PARTITION ids — directory
-    # names, not data. The r13-and-earlier form learned them with
-    # .select("ingest_batch").distinct().collect(): a full Spark job
-    # over the state scan (one task per state file + a shuffle) per
-    # READ, purely to enumerate directories — at production state sizes
-    # that job is state-sized. One driver-side listing on the
-    # filesystem handle we already hold is O(#partitions) and sees the
-    # same ids (only NEGATIVE ids are consulted below, and a frozen
-    # dir's authority is decided by its _SUCCESS marker exactly as
-    # before: a listed-but-partial frozen dir fails the marker check
-    # the same way a read-but-partial one did; r13 opt round).
-    ids = []
-    for st in fs.listStatus(root):
-        nm = st.getPath().getName()
-        if nm.startswith("ingest_batch="):
-            suffix = nm.split("=", 1)[1]
-            # strict int syntax only (r13 ADVICE): isdigit() admits
-            # strings int() rejects ('--5', unicode digits), turning an
-            # unexpected directory name into a reader crash instead of
-            # a skip like __HIVE_DEFAULT_PARTITION__
-            if re.fullmatch(r"-?\d+", suffix, flags=re.ASCII):
-                ids.append(int(suffix))
-    df = _read_state_with_manifest(spark, fs, jvm, state_dir, ids)
+    ids = _ingest_batch_ids(spark, state_dir)
+    df = _read_state_with_manifest(spark, state_dir, ids)
     neg = sorted(i for i in ids if i < 0)  # deepest first
     if neg:
-        bar = None
-        for cand in neg:
-            if fs.exists(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{state_dir}/ingest_batch={cand}/_SUCCESS"
-                )
-            ):
-                bar = cand  # deepest COMPLETE frozen partition
-                break
+        # the deepest COMPLETE frozen partition
+        bar = next(
+            (
+                c for c in neg
+                if storage.exists(spark, f"{state_dir}/ingest_batch={c}/_SUCCESS")
+            ),
+            None,
+        )
         if bar is not None:
             folded_up_to = -bar - 1
             df = df.where(
