@@ -1120,15 +1120,15 @@ def evaluate_main(argv: list[str], spark: SparkSession | None = None) -> int:
                 grouped_ece,
                 threshold_report_from_score_counts,
             )
+            from .pinning import held
             from .streaming.requests import (
                 _authoritative_state_rows,
                 _eval_state_group_cols,
             )
 
-            rows = _authoritative_state_rows(spark, args.input).drop(
-                "ingest_batch"
-            ).persist()
-            try:
+            with held(
+                _authoritative_state_rows(spark, args.input).drop("ingest_batch")
+            ) as rows:
                 gcols = _eval_state_group_cols(rows.columns)
                 auc_rel = auc_from_score_counts(rows)
                 a = auc_rel.collect()[0]
@@ -1157,8 +1157,6 @@ def evaluate_main(argv: list[str], spark: SparkSession | None = None) -> int:
                     out_rel = sliced
                 if args.output:
                     out_rel.write.mode("overwrite").parquet(args.output)
-            finally:
-                rows.unpersist()
             return 0
         from .operators.evaluation import (
             binary_auc,
@@ -1234,6 +1232,7 @@ def monitor_main(argv: list[str], spark: SparkSession | None = None) -> int:
             grouped_ece,
             threshold_report_from_score_counts,
         )
+        from .pinning import held
         from .streaming.requests import (
             _authoritative_state_rows,
             _eval_state_group_cols,
@@ -1242,12 +1241,9 @@ def monitor_main(argv: list[str], spark: SparkSession | None = None) -> int:
         # ONE authoritative read feeds every consumer (the eval_state_*
         # wrappers would each re-list and re-scan the dir); every
         # collect below is slice- or threshold-bounded, never row-sized
-        rows = (
-            _authoritative_state_rows(spark, args.state_dir)
-            .drop("ingest_batch")
-            .persist()
-        )
-        try:
+        with held(
+            _authoritative_state_rows(spark, args.state_dir).drop("ingest_batch")
+        ) as rows:
             gcols = _eval_state_group_cols(rows.columns)
             ths = list(args.thresholds)
             th_cols = [f"{m}@{t:g}" for t in ths for m in ("p", "r", "f1")]
@@ -1357,8 +1353,6 @@ def monitor_main(argv: list[str], spark: SparkSession | None = None) -> int:
                 spark.createDataFrame(out_rows, schema).coalesce(1).write.mode(
                     "overwrite"
                 ).parquet(args.output)
-        finally:
-            rows.unpersist()
         return 0
 
 

@@ -134,15 +134,3 @@ def chunk_payload(
         out.append((start, end - start, hashlib.sha256(mv[start:end]).hexdigest()))
         start = end
     return out
-
-
-def gear_hashes_reference(payload: bytes, seed: int = 0) -> list[int]:
-    """Sequential recurrence — the spec the vectorized form must match
-    (test-support; O(n) Python loop)."""
-    g = [int(x) for x in _gear_table(seed)]
-    out = []
-    h = 0
-    for b in payload:
-        h = ((h << 1) + g[b]) & 0xFFFFFFFFFFFFFFFF
-        out.append(h)
-    return out

@@ -60,21 +60,6 @@ def clean_csv_field(col: Column) -> Column:
     return F.regexp_replace(col, ",", " ")
 
 
-def cohort_signature(members_sorted: Column) -> Column:
-    """Stable signature of a cohort membership array.
-
-    Replaces the reference's arbitrary-precision bitmap-int dedup key
-    (metadata_set_maker.py:81-87) with a sha2 over the sorted membership —
-    constant-size, shuffle-friendly at any cohort cardinality.
-
-    Members are joined with the \\x1f unit separator — the SAME
-    convention as the pipeline's signature in operators/condense.py —
-    because a separator-free concat would collide ["AB","C"] with
-    ["A","BC"].
-    """
-    return F.sha2(F.concat_ws("\x1f", members_sorted), 256)
-
-
 def hex_prefix_u32(hex_col: Column, slice_index: int = 0) -> Column:
     """8 hex digits of a hash string decoded to a uniform 32-bit long —
     the repo-wide engine-portable randomness primitive (DuckDB replay:

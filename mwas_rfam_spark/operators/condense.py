@@ -263,17 +263,3 @@ def condense_accounting(
         )
         out = out.unionByName(missing)
     return out
-
-
-def expand_sets_to_membership(sets_df: DataFrame) -> DataFrame:
-    """Explode condensed sets to (bioproject, set_id, include, biosample_id)
-    membership rows — the long relational form used by the cohort-split
-    stage (replaces the reference's positional index_list deref,
-    main/mwas_general.py:497).
-    """
-    return sets_df.select(
-        "bioproject",
-        "set_id",
-        "include",
-        F.explode("members").alias("biosample_id"),
-    )

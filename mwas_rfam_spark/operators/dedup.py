@@ -13,10 +13,12 @@ shuffle-conscious DataFrame plans:
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..pinning import overlap, pin
+from ..pinning import held, overlap, pin
 
 
 def normalize_text(col):
@@ -812,14 +814,17 @@ def dedup_clusters(
     the distributed path.
     """
     edges_f = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    edges = edges_f.unionByName(
-        edges_f.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-
-    if local_threshold_edges is not None:
-        n_edges = edges.count()  # forces the persist; one scan either way
-        if n_edges <= local_threshold_edges:
-            try:
+    # the edge set and the stats-reset caches are released on every exit;
+    # the final label map survives in its localCheckpoint blocks, so
+    # downstream actions recompute only the trailing projection
+    with held(
+        edges_f.unionByName(
+            edges_f.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+    ) as edges, ExitStack() as resets:
+        if local_threshold_edges is not None:
+            n_edges = edges.count()  # forces the persist; one scan either way
+            if n_edges <= local_threshold_edges:
                 # collect from the PERSISTED symmetrized union — a
                 # collect on edges_f would be a different plan, miss the
                 # cache, and re-execute the whole upstream pair join.
@@ -862,15 +867,11 @@ def dedup_clusters(
                     )
                     out = out.unionByName(singles)
                 return out.withColumn("keep", F.col(id_col) == F.col("cluster_id"))
-            finally:
-                edges.unpersist()
 
-    labels = pin(
-        edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node")),
-        "dedup_clusters:labels",
-    )
-    prev_cache = None
-    try:
+        labels = pin(
+            edges.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node")),
+            "dedup_clusters:labels",
+        )
         for _round in range(max_iters):
             neighbor_min = (
                 edges.join(labels.withColumnRenamed("node", "dst"), "dst")
@@ -917,14 +918,14 @@ def dedup_clusters(
             # on a 64-partition label map), so reset once per 10 rounds:
             # digits stay ≤ ~2^10 (BigInt ops at that size are
             # microseconds) and the overhead amortizes to 10%. SCALE.md
-            # has the full forensics.
+            # has the full forensics. The previous reset cache is released
+            # once this one is counted, so at most two are alive at once.
             if (_round + 1) % 10 == 0:
-                new_labels = new_labels.persist()
-            n_changed = new_labels.filter(F.col("changed")).count()
-            if (_round + 1) % 10 == 0:
-                if prev_cache is not None:
-                    prev_cache.unpersist()
-                prev_cache = new_labels
+                with resets.pop_all():
+                    new_labels = resets.enter_context(held(new_labels))
+                    n_changed = new_labels.filter(F.col("changed")).count()
+            else:
+                n_changed = new_labels.filter(F.col("changed")).count()
             labels = new_labels.drop("changed")
             if n_changed == 0:
                 break
@@ -945,15 +946,6 @@ def dedup_clusters(
                 .withColumn("cluster_id", F.col(id_col))
             )
             out = out.unionByName(singletons)
-    finally:
-        # unpersist on EVERY exit (incl. the non-convergence raise and
-        # mid-loop task failures): a long-lived session otherwise
-        # accumulates a cached edge set + label map per failed call. The
-        # final label map survives in its localCheckpoint blocks, so
-        # downstream actions recompute only the trailing projection.
-        edges.unpersist()
-        if prev_cache is not None:
-            prev_cache.unpersist()
     return out.withColumn("keep", F.col(id_col) == F.col("cluster_id"))
 
 

@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..pinning import pin
+from ..pinning import held, pin
 from ..sources import storage
 
 
@@ -195,13 +195,11 @@ def train_opq(
     d = int(first["d"])
     if d % m != 0:
         raise ValueError(f"train_opq: dim {d} not divisible by m={m}")
-    # persist (not localCheckpoint) so training can RELEASE the corpus
-    # copy when done — checkpoint blocks would stay resident for the
-    # session; unpersist in finally frees the executors' storage
-    src = emb.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    ).persist()
-    try:
+    with held(
+        emb.where(F.col(vec_col).isNotNull()).select(
+            F.col(id_col).alias(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
+        )
+    ) as src:
         R = np.eye(d)
         books = None
         for _ in range(opq_iters):
@@ -235,8 +233,6 @@ def train_opq(
             "rotation": [[float(x) for x in row] for row in R],
             "codebooks": books,
         }
-    finally:
-        src.unpersist()
 
 
 def _opq_cross_moment(src: DataFrame, R, books, vec_col: str):
@@ -859,9 +855,8 @@ def append_ivfpq_index(
     # by the new slice, not the corpus) and feed both sides from it;
     # the sentinel makes a crash between the two appends refuse at the
     # next probe instead of silently hiding the half-appended ids
-    assigned = assign_ivf_cells(guarded, centroids, id_col, vec_col).persist()
-    _set_index_building(spark, path)
-    try:
+    with held(assign_ivf_cells(guarded, centroids, id_col, vec_col)) as assigned:
+        _set_index_building(spark, path)
         write_ivf_index(
             guarded, centroids, f"{path}/vectors", id_col, vec_col,
             mode="append", assigned=assigned,
@@ -879,8 +874,6 @@ def append_ivfpq_index(
             .mode("append")
             .parquet(f"{path}/codes")
         )
-    finally:
-        assigned.unpersist()
     _clear_index_building(spark, path)
 
 

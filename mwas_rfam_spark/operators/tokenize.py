@@ -40,6 +40,7 @@ from mwas_rfam_spark.functions.bpe import (
     train_bpe,
     word_frequencies,
 )
+from mwas_rfam_spark.pinning import held
 
 MERGES_SCHEMA = "rank INT, left STRING, right STRING"
 
@@ -64,23 +65,18 @@ def train_bpe_merges(
         raise ValueError(f"num_merges must be >= 1, got {num_merges}")
     if sample_docs < 1:
         raise ValueError(f"sample_docs must be >= 1, got {sample_docs}")
-    ranked = (
+    # enforce the budget SPARK-SIDE before collecting — checking after
+    # collect() cannot prevent the oversized driver materialization the
+    # budget exists to prevent. The sample is recompute-stable (the sort
+    # key is md5 of the text itself, so tied rows are identical texts —
+    # any tie order selects the same multiset).
+    with held(
         docs.select(F.col(text_col).alias("__t"))
         .where(F.col("__t").isNotNull())
         .withColumn("__r", F.md5(F.concat_ws(":", F.lit(f"bpe:{seed}"), F.col("__t"))))
         .orderBy("__r")
         .limit(sample_docs)
-    ).persist()
-    # enforce the budget SPARK-SIDE before collecting — checking after
-    # collect() cannot prevent the oversized driver materialization the
-    # budget exists to prevent. persist (released in the finally), not
-    # localCheckpoint: checkpoint blocks outlive unpersist() and would
-    # pin executor storage until GC on a long-lived driver (r11 review
-    # finding); a cache eviction merely recomputes, and the sample is
-    # recompute-stable (the sort key is md5 of the text itself, so tied
-    # rows are identical texts — any tie order selects the same
-    # multiset).
-    try:
+    ) as ranked:
         total = ranked.agg(F.sum(F.octet_length("__t"))).first()[0] or 0
         if total > max_sample_bytes:
             raise ValueError(
@@ -88,8 +84,6 @@ def train_bpe_merges(
                 "lower sample_docs or raise the budget explicitly"
             )
         texts = [r["__t"] for r in ranked.select("__t").collect()]
-    finally:
-        ranked.unpersist()
     merges = train_bpe(word_frequencies(texts), num_merges)
     spark = docs.sparkSession
     return spark.createDataFrame(
@@ -163,11 +157,9 @@ def train_bpe_merges_corpus(
         raise ValueError(f"num_merges must be >= 1, got {num_merges}")
     from collections import Counter
 
-    # persist (released below), not localCheckpoint — see
-    # train_bpe_merges; the cap's (freq desc, word asc) sort is a total
-    # order, so an eviction-recompute selects identical rows
-    wf = corpus_word_frequencies(docs, text_col, max_word_types).persist()
-    try:
+    # the cap's (freq desc, word asc) sort is a total order, so an
+    # eviction-recompute selects identical rows
+    with held(corpus_word_frequencies(docs, text_col, max_word_types)) as wf:
         total = wf.agg(F.sum(F.octet_length("word"))).first()[0] or 0
         if total > max_collect_bytes:
             raise ValueError(
@@ -176,8 +168,6 @@ def train_bpe_merges_corpus(
                 "budget explicitly"
             )
         freq = Counter({r["word"]: r["freq"] for r in wf.collect()})
-    finally:
-        wf.unpersist()
     merges = train_bpe(freq, num_merges)
     spark = docs.sparkSession
     return spark.createDataFrame(

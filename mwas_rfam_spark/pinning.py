@@ -1,5 +1,5 @@
-"""One way to pin a multiply-consumed subplan and one way to overlap
-independent jobs.
+"""One way to pin a multiply-consumed subplan, one way to hold a
+relation for a bounded block, and one way to overlap independent jobs.
 
 A subplan read by several consumers is materialized once (SURVEY.md
 §3.1; SCALE.md "Driver-side re-planning"). The default
@@ -8,12 +8,21 @@ a short ExistingRDD scan instead of the whole tree (25-40% of the
 relational core's wall at sf0.1 was that re-planning). Each eager pin's
 jobs carry ``spark.job.description`` = ``"<public function>:<relation>"``
 (e.g. ``run_mwas:rollup``), so the UI and the status store name the step.
+
+The rule: a pin whose consumers outlive the call checkpoints
+(:func:`pin`); a hold whose consumers all run inside one block persists
+(:func:`held`). ``unpersist()`` frees a cache at once, but it cannot
+free a checkpoint — those blocks wait for the ContextCleaner, i.e. for
+a driver GC — so only the cache gives a long-lived driver (the HTTP
+server, the CLI) a deterministic release. An evicted cache block merely
+recomputes from its lineage.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from typing import Callable, TypeVar
+from contextlib import contextmanager
+from typing import Callable, Iterator, TypeVar
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -63,12 +72,29 @@ def release() -> int:
     collected."""
     n = len(_pinned)
     for df in _pinned:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        _unpersist(df)
     _pinned.clear()
     return n
+
+
+@contextmanager
+def held(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` (default storage level) for the block's consumers
+    and unpersist it on every exit. Lazy: the first action inside the
+    block fills the cache under that action's own job."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        _unpersist(df)
+
+
+def _unpersist(df: DataFrame) -> None:
+    # best effort: a failed release must not mask the caller's own error
+    try:
+        df.unpersist()
+    except Exception:
+        pass
 
 
 def overlap(thunks: list[Callable[[], T]]) -> list[T]:

@@ -10,6 +10,7 @@ demonstrating watermark/window semantics over the events table shape.
 from __future__ import annotations
 
 import re
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,6 +18,7 @@ from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG
 from ..operators.mwas import resolve_and_normalize
+from ..pinning import held
 from ..sources import storage
 
 
@@ -859,22 +861,14 @@ def compact_cms_state(
             keys.append("derivation")
         # Fold FIRST (derivation is a grouping key, so a mixed state
         # never sums across derivations even transiently), then run the
-        # identity check on the cached ≤ depth × width × derivs
+        # identity check on the held ≤ depth × width × derivs
         # relation — the source-partition scan happens exactly once
         # instead of once for the check and again for the write
-        # (r9 ADVICE). persist(), NOT localCheckpoint: after a
-        # localCheckpoint DataFrame.unpersist() is a no-op (it clears
-        # CacheManager entries, not checkpoint RDD blocks — those wait
-        # for the ContextCleaner), so the r10-ADVICE deterministic
-        # release only works through the cache path (r11 review
-        # finding, verified against this pyspark). The distinct()
-        # collect materializes the cache; the write reuses it; eviction
-        # under pressure merely re-scans the state-sized sources.
+        # (r9 ADVICE). The distinct() collect fills the cache; the
+        # write reuses it.
         agg = rows.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
-        ckpt = None
-        try:
+        with held(agg) if has_deriv else nullcontext(agg) as agg:
             if has_deriv:
-                agg = ckpt = agg.persist()
                 derivs = sorted(
                     r[0] for r in agg.select("derivation").distinct().collect()
                 )
@@ -891,12 +885,6 @@ def compact_cms_state(
                 .write.mode("errorifexists")
                 .parquet(path)
             )
-        finally:
-            if ckpt is not None:
-                try:
-                    ckpt.unpersist()
-                except Exception:
-                    pass  # best-effort: the write above already landed
 
     return _compact_batch_state(spark, state_dir, up_to_batch, merge_write)
 

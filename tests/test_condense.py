@@ -6,8 +6,9 @@ original column's factor cohorts from the set table and compare.
 import pytest
 from pyspark.sql import functions as F
 
-from mwas_rfam_spark.operators.condense import condense_metadata, expand_sets_to_membership
+from mwas_rfam_spark.operators.condense import condense_metadata
 from mwas_rfam_spark.sources.readers import melt_wide_metadata
+from reference_specs import expand_sets_to_membership
 
 
 @pytest.fixture(scope="module")

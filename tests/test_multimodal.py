@@ -866,7 +866,8 @@ def test_cdc_vectorized_matches_sequential_reference():
 
     import numpy as np
 
-    from mwas_rfam_spark.functions.cdc import gear_hashes, gear_hashes_reference
+    from mwas_rfam_spark.functions.cdc import gear_hashes
+    from reference_specs import gear_hashes_reference
 
     rng = random.Random(9)
     for n in (0, 1, 63, 64, 65, 500):

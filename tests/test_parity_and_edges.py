@@ -96,15 +96,6 @@ def test_minhash_estimates_track_exact_jaccard(spark, sf_dir):
         assert abs(est[k] - exact[k]) <= 0.25  # 64-slot sampling noise
 
 
-def test_cohort_signature_separator(spark):
-    """["AB","C"] and ["A","BC"] must not collide (unit-separator join)."""
-    from mwas_rfam_spark.functions.scalar import cohort_signature
-
-    df = spark.createDataFrame([(1, ["AB", "C"]), (2, ["A", "BC"])], ["i", "m"])
-    sigs = {r["i"]: r["sig"] for r in df.select("i", cohort_signature(F.col("m")).alias("sig")).collect()}
-    assert sigs[1] != sigs[2]
-
-
 def test_stream_batch_rpm_parity(spark):
     """One observation must normalize to the SAME rpm through the batch
     resolve and the streaming resolve — including the spots==0 sentinel

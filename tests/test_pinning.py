@@ -1,4 +1,5 @@
-"""pinning: the one way to pin a subplan and to overlap independent jobs."""
+"""pinning: the one way to pin a subplan, to hold a relation for a block
+and to overlap independent jobs."""
 
 import pathlib
 import re
@@ -47,6 +48,40 @@ def test_checkpoint_pin_is_not_registered(spark):
     assert pinning._pinned == []
 
 
+def test_held_caches_inside_the_block_and_releases_after(spark):
+    with pinning.held(spark.range(20)) as df:
+        assert df.storageLevel.useMemory and df.storageLevel.useDisk
+        assert df.count() == 20
+    assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
+
+
+def test_held_releases_on_error_and_keeps_the_body_error(spark):
+    with pytest.raises(ZeroDivisionError):
+        with pinning.held(spark.range(5)) as df:
+            assert df.storageLevel.useMemory
+            1 / 0
+    assert not df.storageLevel.useMemory and not df.storageLevel.useDisk
+
+
+@pytest.mark.parametrize("max_iters", [25, 11])
+def test_dedup_clusters_leaves_no_cache_behind(spark, max_iters):
+    """The distributed loop takes its first stats-reset cache at round
+    10; a 4,000-node path needs more than 11 rounds, so ``max_iters=11``
+    ends in the non-convergence error. Either way nothing stays cached."""
+    from mwas_rfam_spark.operators.dedup import dedup_clusters
+
+    spark.catalog.clearCache()
+    n = 4000
+    pairs = spark.range(n - 1).selectExpr("id AS id_a", "id + 1 AS id_b")
+    if max_iters == 25:
+        out = dedup_clusters(pairs, max_iters=max_iters, local_threshold_edges=None)
+        assert out.where("cluster_id != 0").count() == 0
+    else:
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup_clusters(pairs, max_iters=max_iters, local_threshold_edges=None)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_overlap_keeps_order_and_propagates_failure():
     import time
 
@@ -68,8 +103,9 @@ def test_overlap_keeps_order_and_propagates_failure():
 
 
 def test_no_raw_pins_or_pools_outside_pinning():
-    """Every pin and job overlap in the package goes through pinning."""
-    raw = re.compile(r"\.localCheckpoint\(|ThreadPoolExecutor")
+    """Every pin, hold and job overlap in the package goes through
+    pinning."""
+    raw = re.compile(r"\.localCheckpoint\(|\.persist\(|\.cache\(\)|ThreadPoolExecutor")
     hits = [
         f"{path.relative_to(PACKAGE)}:{n}"
         for path in sorted(PACKAGE.rglob("*.py"))

@@ -144,11 +144,8 @@ def test_cdc_reassembly_and_bounds_property(payload, avg):
     """Chunks always reassemble the payload exactly; every chunk except
     the tail respects [min, max]; the vectorized gear hash equals the
     sequential recurrence on arbitrary bytes."""
-    from mwas_rfam_spark.functions.cdc import (
-        chunk_payload,
-        gear_hashes,
-        gear_hashes_reference,
-    )
+    from mwas_rfam_spark.functions.cdc import chunk_payload, gear_hashes
+    from reference_specs import gear_hashes_reference
 
     chunks = chunk_payload(payload, avg_size=avg)
     assert b"".join(payload[o : o + ln] for o, ln, _ in chunks) == payload

@@ -1,0 +1,173 @@
+"""Formatted physical plans of the bench queries, and their diff against
+another git revision.
+
+Usage:
+  python tools/plans.py dump <outdir> [name ...] [--sf-dir DIR]
+  python tools/plans.py diff <rev> [name ...] [--sf-dir DIR]
+
+``dump`` writes ``<outdir>/<name>.txt`` per query: by default every
+``bench.HEADLINE`` entry plus ``mwas_full``; any ``bench_queries()`` name
+works, and so do ``mwas_t_only_full_lineage`` (``run_mwas`` without
+checkpoints, so the plan shows the whole relational spine: pushdown,
+broadcasts, no Python operator outside the statistical stages) and
+``opq_encode_replay`` (the registry's form of ``opq_encode``).
+
+``diff`` exports ``<rev>`` with ``git archive`` into a temp dir, dumps it
+and the working tree (each in its own subprocess, so each gets a fresh
+JVM), normalizes what differs from run to run (expression ids, RDD and
+plan ids, temp paths), prints a unified diff per differing plan and
+exits 1 when any plan differs or fails to build.
+
+Both read the test data from ``--sf-dir`` (default
+``$SPARK_GRAFT_SF_DIR``).
+"""
+
+from __future__ import annotations
+
+import argparse
+import difflib
+import os
+import re
+import shutil
+import subprocess
+import sys
+import tempfile
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# (pattern, replacement) pairs applied in order by normalize()
+_RUN_SPECIFIC = [
+    (re.compile(r"#\d+"), "#N"),  # expression ids: id#123L
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    (re.compile(r"(RDD|Relation)\[\d+\]"), r"\1[N]"),  # MapPartitionsRDD[42]
+    (re.compile(r"(file:)?" + re.escape(tempfile.gettempdir()) + r"/[^\s,\]\)]*"), "<tmp>"),
+]
+
+
+def normalize(plan: str) -> str:
+    """A plan with its run-specific ids and temp paths replaced, so two
+    dumps of the same query compare equal unless an operator changed."""
+    for pattern, repl in _RUN_SPECIFIC:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
+def _mwas_t_only_full_lineage(spark, sf_dir):
+    from mwas_rfam_spark.config import MwasConfig
+    from mwas_rfam_spark.operators.condense import condense_metadata
+    from mwas_rfam_spark.operators.mwas import run_mwas
+    from mwas_rfam_spark.plans.testdata_mwas import (
+        mwas_catalog_from_orders,
+        mwas_input_from_events,
+        mwas_metadata_long_from_customer,
+    )
+
+    cfg = MwasConfig(t_test_only=True, use_local_checkpoint=False)
+    sets_df, ref_df = condense_metadata(mwas_metadata_long_from_customer(spark, sf_dir))
+    return run_mwas(
+        mwas_input_from_events(spark, sf_dir),
+        mwas_catalog_from_orders(spark, sf_dir),
+        sets_df,
+        ref_df,
+        cfg,
+    )
+
+
+def dump(outdir: str, names: list[str], sf_dir: str) -> int:
+    """Write one formatted plan per query; a query that fails to build
+    records its error in place. Returns the number of failures."""
+    sys.path.insert(0, ROOT)
+    import __spark_entry__ as entrymod
+    import bench as benchmod
+    from mwas_rfam_spark.session import get_spark
+
+    qs = {
+        **entrymod.bench_queries(),
+        "mwas_full": benchmod._mwas_full,
+        "mwas_t_only_full_lineage": _mwas_t_only_full_lineage,
+        "opq_encode_replay": entrymod.q_opq_encode_replay,
+    }
+    os.makedirs(outdir, exist_ok=True)
+    spark = get_spark(app_name="plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    failed = 0
+    for name in names or [*benchmod.HEADLINE, "mwas_full"]:
+        try:
+            df = qs[name](spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+        except Exception as e:  # noqa: BLE001 - record the failure in place
+            failed += 1
+            plan = f"ERROR dumping plan: {type(e).__name__}: {e}\n"
+        with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
+            f.write(plan)
+        print(f"wrote {name}.txt", flush=True)
+    spark.stop()
+    return failed
+
+
+def _dump_in_subprocess(root: str, outdir: str, names: list[str], sf_dir: str) -> None:
+    """Run this script's ``dump`` against the tree at ``root``."""
+    script = os.path.join(root, "tools", "plans.py")
+    if os.path.abspath(script) != os.path.abspath(__file__):
+        shutil.copy(os.path.abspath(__file__), script)
+    env = {**os.environ, "PYTHONPATH": root}
+    subprocess.run(
+        [sys.executable, script, "dump", outdir, *names, "--sf-dir", sf_dir],
+        cwd=root, env=env, check=False,
+    )
+
+
+def diff(rev: str, names: list[str], sf_dir: str) -> int:
+    with tempfile.TemporaryDirectory(prefix="plans-diff-") as tmp:
+        tree = os.path.join(tmp, "tree")
+        os.makedirs(tree)
+        archive = subprocess.run(
+            ["git", "archive", rev], cwd=ROOT, check=True, capture_output=True
+        ).stdout
+        subprocess.run(["tar", "-x", "-C", tree], input=archive, check=True)
+        before, after = os.path.join(tmp, "before"), os.path.join(tmp, "after")
+        _dump_in_subprocess(tree, before, names, sf_dir)
+        _dump_in_subprocess(ROOT, after, names, sf_dir)
+        differing = 0
+        for name in sorted(set(os.listdir(before)) | set(os.listdir(after))):
+            a, b = (_read(os.path.join(d, name)) for d in (before, after))
+            if a.startswith("ERROR") or b.startswith("ERROR") or a != b:
+                differing += 1
+                sys.stdout.writelines(
+                    difflib.unified_diff(
+                        a.splitlines(True), b.splitlines(True),
+                        f"{rev}/{name}", f"working-tree/{name}",
+                    )
+                )
+            else:
+                print(f"same: {name[:-4]}")
+    print(f"{differing} plan(s) differ")
+    return 1 if differing else 0
+
+
+def _read(path: str) -> str:
+    if not os.path.exists(path):
+        return "ERROR no plan written\n"
+    with open(path) as f:
+        return normalize(f.read())
+
+
+def main(argv: list[str]) -> int:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("command", choices=["dump", "diff"])
+    p.add_argument("target", help="output dir (dump) or git revision (diff)")
+    p.add_argument("names", nargs="*", help="query names (default: the bench headline)")
+    p.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
+    args = p.parse_args(argv)
+    if not args.sf_dir:
+        p.error("pass --sf-dir or set SPARK_GRAFT_SF_DIR")
+    if args.command == "dump":
+        return 1 if dump(args.target, args.names, args.sf_dir) else 0
+    return diff(args.target, args.names, args.sf_dir)
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))
