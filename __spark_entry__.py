@@ -261,7 +261,8 @@ WHERE (sd_t ^ 2 / n_true + sd_f ^ 2 / n_false) > 0
 
 # Full 18-column t_test_only output (see q_mwas_t_only_full). Significance
 # at threshold 1.1 ⟺ p finite ⟺ pooled variance vsum > 0 (vsum == 0 makes
-# the Welch df 0/0 → NaN → p NaN, engine functions/stattests.py:118).
+# the Welch df 0/0 → NaN → p NaN, engine functions/stattests.py
+# `betainc_reg`).
 # List contents: the true list is ALWAYS the factor-matching cohort and the
 # false list its complement (the minority encoding cancels against the
 # include-swap), but the too-many GATES follow the reference's pre-swap
@@ -3452,7 +3453,7 @@ def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # With metadata restricted to the first 8 biosamples per bioproject, every
 # permutation-eligible cohort is a 4/4 split of n=8 (min cohort 4 forces
 # it), so C(8,4)=70 <= resamples switches the kernel to complete
-# enumeration (functions/stattests.py:227) — and 70 subset sums ARE
+# enumeration (functions/stattests.py `_exact_null_mean_diff`) — and 70 subset sums ARE
 # expressible in SQL as bitmask enumeration. p-values are then exact
 # rationals k/70, identical across engines; the tie tolerance gamma =
 # 1e-14*max(1, |obs|, max|pooled|) absorbs the cross-engine ulp noise in

@@ -1610,9 +1610,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             write_results_combined(results, args.output)
         else:
             write_results_partitioned(results, args.output, fmt=args.output_format)
-        from .operators.mwas import release_mwas_persists
-
-        release_mwas_persists()  # output is on disk; free the cached subplans
         if args.accounting:
             from .operators.condense import condense_accounting
 

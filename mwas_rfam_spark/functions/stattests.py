@@ -13,10 +13,13 @@ Replicates the two tests the reference calls (main/mwas_general.py:404-423):
   the +1/+1 p-value correction, automatically switching to the exact
   (complete enumeration) null when C(n, k) <= n_resamples. Unlike the
   reference (unseeded), ours is seeded per test key for reproducibility
-  (SURVEY.md §5 determinism note).
+  (SURVEY.md §5 determinism note). ONE body:
+  ``grouped_permutation_mean_diff`` tests every cohort of a pooled
+  vector at once; ``permutation_test_mean_diff`` is its one-cohort call.
 
-Everything is vectorized numpy so it runs efficiently inside Arrow-batched
-pandas UDFs on executors.
+Everything is vectorized numpy; on executors the kernels run inside the
+MWAS stage's one ``applyInArrow`` kernel
+(``operators.mwas._make_grouped_test_fn``).
 """
 
 from __future__ import annotations
@@ -33,6 +36,8 @@ __all__ = [
     "permutation_test_mean_diff",
     "grouped_permutation_mean_diff",
     "mean_diff_statistic",
+    "perm_chunk_rows",
+    "comb_at_most",
 ]
 
 _MAX_CF_ITER = 300
@@ -207,31 +212,6 @@ def _exact_null_mean_diff(pooled: np.ndarray, n_x: int) -> np.ndarray:
     return mean_x - mean_y
 
 
-def _random_null_mean_diff(
-    pooled: np.ndarray, n_x: int, n_resamples: int, rng: np.random.Generator
-) -> np.ndarray:
-    """Randomized permutation null, chunked to bound memory."""
-    n = pooled.shape[0]
-    total = pooled.sum()
-    out = np.empty(n_resamples, dtype=np.float64)
-    chunk = perm_chunk_rows(n_resamples, n)
-    # same reusable-buffer pattern as grouped_permutation_mean_diff
-    # (r12: this copy still paid a tile + an out-of-place permuted —
-    # two fresh k×n arrays per chunk; in-place permuted consumes the
-    # identical rng stream, pinned by the known-example tests)
-    buf = np.empty((chunk, n), dtype=np.float64)
-    done = 0
-    while done < n_resamples:
-        k = min(chunk, n_resamples - done)
-        mat = buf[:k]
-        mat[:] = pooled
-        rng.permuted(mat, axis=1, out=mat)
-        sum_x = mat[:, :n_x].sum(axis=1)
-        out[done : done + k] = sum_x / n_x - (total - sum_x) / (n - n_x)
-        done += k
-    return out
-
-
 def grouped_permutation_mean_diff(
     pooled,
     n_xs,
@@ -251,9 +231,9 @@ def grouped_permutation_mean_diff(
 
     Properties relied on by callers/tests:
     * Row-order independent: the permutation stream depends only on
-      (pooled multiset via its sorted form is NOT required here — callers
-      pass pooled as-is; pass a canonical ordering for determinism),
-      n_resamples and the rng seed — never on which rows are evaluated.
+      ``pooled`` as passed (the kernel does not sort it, so callers pass
+      a canonical order — both callers pass it sorted), n_resamples and
+      the rng seed — never on which rows are evaluated.
       Evaluating one row alone reproduces its batched p exactly.
       (Caveat, r12 review: the segmented reduceat groups sums at the
       DISTINCT cohort sizes present, so float summation ORDER can
@@ -367,7 +347,9 @@ def permutation_test_mean_diff(
     Mirrors ``scipy.stats.permutation_test`` (independent permutation type):
     exact enumeration when C(n, len(x)) <= n_resamples, else ``n_resamples``
     random splits with the (count+1)/(N+1) correction. Two-sided p is
-    2*min(P(null <= obs), P(null >= obs)) clipped to 1.
+    2*min(P(null <= obs), P(null >= obs)) clipped to 1. The null and the
+    tie rule are :func:`grouped_permutation_mean_diff`'s, called with one
+    cohort.
     """
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
@@ -386,27 +368,5 @@ def permutation_test_mean_diff(
     # row order into the last ulp of the null values (and flip tie counts)
     pooled = np.sort(np.concatenate([x, y]))
     observed = mean_diff_statistic(x, y)
-
-    exact = comb_at_most(n_x + n_y, n_x, n_resamples) <= n_resamples
-    if exact:
-        null = _exact_null_mean_diff(pooled, n_x)
-    else:
-        if not isinstance(rng, np.random.Generator):
-            rng = np.random.default_rng(rng)
-        null = _random_null_mean_diff(pooled, n_x, n_resamples, rng)
-
-    # tolerance for ties at the observed value (scipy uses a relative
-    # gamma on |obs|; ours also scales with the pooled magnitude so the
-    # observed split's own null value always lands inside the band even
-    # when obs is a tiny difference of huge values)
-    gamma = 1e-14 * max(1.0, abs(observed), float(np.max(np.abs(pooled))) if pooled.size else 0.0)
-    if exact:
-        denom = null.shape[0]
-        adj = 0
-    else:
-        denom = null.shape[0] + 1
-        adj = 1
-    p_ge = (np.count_nonzero(null >= observed - gamma) + adj) / denom
-    p_le = (np.count_nonzero(null <= observed + gamma) + adj) / denom
-    p = min(1.0, 2.0 * min(p_ge, p_le))
-    return observed, p
+    p = grouped_permutation_mean_diff(pooled, [n_x], [observed], n_resamples, rng)[0]
+    return observed, float(p)

@@ -117,59 +117,115 @@ def baseline_quantile_bucket(
 
 
 def _two_level_cumsum(
-    per_value: DataFrame, value_col: str, partitions: int, with_totals: bool = False
+    per_value: DataFrame,
+    value_col: str,
+    partitions: int,
+    group_cols=(),
+    with_totals: bool = False,
+    max_offset_groups: int = 100_000,
 ):
-    """Exact cumulative sums of cnt_a / cnt_b in ``value_col`` order
-    without a global single-task window: local window inside each range
-    partition + broadcast prefix offsets (one collected row per
-    partition).
+    """THE prefix sum of the drift and evaluation families: exact
+    inclusive cumulative sums of cnt_a / cnt_b in ``value_col`` order
+    (restarting per ``group_cols`` key) without a global single-task
+    window: range-partition on (group..., value), a local window inside
+    each (partition, group), and broadcast prefix offsets collected as
+    one row per (partition, group).
 
+    Returns (group..., value_col, cnt_a, cnt_b, cum_a, cum_b).
     ``with_totals=True`` returns ``(cums, n_a, n_b)`` — the grand
     totals fall out of the per-partition offsets collected here anyway,
     so a caller that needs them (ks_drift's side totals) skips its own
     separate aggregation job over the input (r14 opt round, guide §5
-    driver/job-count)."""
-    ranged = per_value.repartitionByRange(partitions, value_col).withColumn(
-        "__pid", F.spark_partition_id()
-    )
+    driver/job-count).
+
+    With group keys the collected offsets are O(partitions + groups)
+    rows, so the distinct-group count is checked first and the call
+    refuses above ``max_offset_groups`` with the remedy named, instead
+    of dying in an unexplained driver OOM. Group keys must be hashable
+    driver-side: complex types are refused before any job runs (they
+    threw a TypeError AFTER the cluster work — r12 review finding), and
+    NULL keys are legitimate slices, matched null-safely."""
+    group_cols = list(group_cols)
+    dtypes = dict(per_value.dtypes)
+    for c in group_cols:
+        if dtypes[c].startswith(("array", "map", "struct")):
+            raise ValueError(
+                f"group column {c!r} has complex type {dtypes[c]} — the "
+                "per-(partition, group) offset accumulation needs hashable "
+                "scalar keys; cast or serialize the column first"
+            )
+    ranged = per_value.repartitionByRange(
+        partitions, *group_cols, value_col
+    ).withColumn("__pid", F.spark_partition_id())
     ranged = pin(ranged, "_two_level_cumsum:ranged", eager=False)
 
     w_local = (
-        Window.partitionBy("__pid")
+        Window.partitionBy("__pid", *group_cols)
         .orderBy(value_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = ranged.select(
-        value_col,
-        "__pid",
-        F.sum("cnt_a").over(w_local).alias("loc_a"),
-        F.sum("cnt_b").over(w_local).alias("loc_b"),
-    )
+    local = ranged.withColumns({
+        "loc_a": F.sum("cnt_a").over(w_local),
+        "loc_b": F.sum("cnt_b").over(w_local),
+    })
 
-    # per-partition totals: parameter-sized (one row per partition)
+    if group_cols:
+        # runs on the checkpointed reduced relation, so the input is
+        # scanned once for the guard and the collect below
+        n_groups = ranged.select(*group_cols).distinct().count()
+        if n_groups > max_offset_groups:
+            raise ValueError(
+                f"grouped_auc: {n_groups} distinct groups exceeds "
+                f"max_offset_groups={max_offset_groups}; the per-(partition,"
+                " group) prefix offsets are collected to the driver, which is"
+                " sized for slice-style keys (language, source), not"
+                " per-entity keys. Aggregate the key first (e.g. bucket"
+                " domains), filter to the slices you report on, or raise"
+                " max_offset_groups if the driver has the memory."
+            )
+    # per-(partition, group) totals: parameter-sized
     totals = (
-        ranged.groupBy("__pid")
+        ranged.groupBy("__pid", *group_cols)
         .agg(F.sum("cnt_a").alias("ta"), F.sum("cnt_b").alias("tb"))
         .collect()
     )
-    by_pid = {r["__pid"]: (r["ta"], r["tb"]) for r in totals}
-    acc_a = acc_b = 0
+    # running offsets per group in pid order (range partitioning makes
+    # pid order == value order within a group). The dict key canonicalizes
+    # NaN: Spark's groupBy/joins treat NaN as equal to NaN, but each
+    # collected Row yields a fresh nan (nan != nan), so a NaN slice got
+    # offset 0 after its first partition — a silently wrong AUC (r13
+    # review finding). The emitted offset row keeps the real float.
+    acc: dict = {}
     offsets = []
-    for pid in sorted(by_pid):
-        offsets.append((pid, acc_a, acc_b))
-        ta, tb = by_pid[pid]
-        acc_a += ta or 0
-        acc_b += tb or 0
+    for r in sorted(totals, key=lambda r: r["__pid"]):
+        key = tuple(
+            "__nan__" if isinstance(r[c], float) and math.isnan(r[c]) else r[c]
+            for c in group_cols
+        )
+        off_a, off_b = acc.get(key, (0, 0))
+        offsets.append((r["__pid"], *(r[c] for c in group_cols), off_a, off_b))
+        acc[key] = (off_a + (r["ta"] or 0), off_b + (r["tb"] or 0))
 
-    spark = per_value.sparkSession
-    off_df = spark.createDataFrame(offsets, "__pid int, off_a long, off_b long")
-    cums = local.join(F.broadcast(off_df), "__pid").select(
+    schema = ", ".join(
+        ["__pid int"] + [f"`{c}` {dtypes[c]}" for c in group_cols]
+        + ["off_a long", "off_b long"]
+    )
+    off_df = per_value.sparkSession.createDataFrame(offsets, schema).withColumnsRenamed(
+        {"__pid": "__o_pid", **{c: f"__o_{c}" for c in group_cols}}
+    )
+    cond = F.col("__pid") == F.col("__o_pid")
+    for c in group_cols:
+        cond = cond & F.col(c).eqNullSafe(F.col(f"__o_{c}"))
+    cums = local.join(F.broadcast(off_df), cond).select(
+        *group_cols,
         value_col,
+        "cnt_a",
+        "cnt_b",
         (F.col("loc_a") + F.col("off_a")).alias("cum_a"),
         (F.col("loc_b") + F.col("off_b")).alias("cum_b"),
     )
     if with_totals:
-        return cums, acc_a, acc_b
+        return cums, sum(a for a, _ in acc.values()), sum(b for _, b in acc.values())
     return cums
 
 
@@ -188,7 +244,9 @@ def ks_drift(
     undefined over them — r12 review finding: NaN passed isNotNull and,
     sorting greater than every number, inflated the statistic by the
     NaN-rate difference); use :func:`categorical_drift` on an
-    is-null/is-nan indicator to watch missingness drift."""
+    is-null/is-nan indicator to watch missingness drift. The ECDFs
+    come from :func:`_two_level_cumsum`, the one prefix sum the AUC
+    finishers (``evaluation._auc_finish``) share."""
     if partitions is None:
         partitions = df_a.sparkSession.sparkContext.defaultParallelism
     a = df_a.select(F.col(value_col).alias("v")).where(_finite_cond(df_a, value_col, "v"))

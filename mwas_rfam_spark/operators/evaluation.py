@@ -108,58 +108,21 @@ def auc_from_score_counts(
     computable over any pre-aggregated or streamed state
     (:func:`streaming.requests.streaming_eval_counts`) without ever
     re-touching the rows. Rows with v IS NULL carry the invalid
-    (NULL/NaN score or NULL label) tally in cnt_null.
+    (NULL/NaN score or NULL label) tally in cnt_null. Always exactly
+    one row (auc, n_pos, n_neg, n_null); empty or all-invalid counts
+    give a NULL auc and zero class counts. The cumulative negatives
+    come from ``drift._two_level_cumsum``, the prefix sum ks_drift and
+    the grouped finisher share.
 
     Because the counts sum linearly, the input need NOT be pre-folded
     to one row per distinct score: duplicate v rows (a raw multi-batch
     state union) are folded HERE first — without the fold the prefix
-    sum would treat each duplicate as a separate distinct score and the
-    contribution join would multiply rows, silently mis-ranking every
-    tie (r11 review finding). ``assume_folded=True`` skips that
-    aggregate as a pure optimization for callers that just produced
-    exactly-folded counts (:func:`binary_auc`, the state readers)."""
-    from mwas_rfam_spark.operators.drift import _two_level_cumsum
-
-    if partitions is None:
-        partitions = per_s.sparkSession.sparkContext.defaultParallelism
-    if "cnt_null" not in per_s.columns:
-        per_s = per_s.withColumn("cnt_null", F.lit(0).cast("long"))
-    if not assume_folded:
-        # the folded parameter-sized relation is consumed by THREE
-        # sub-plans below (cumsum input, contrib join probe, nulls
-        # aggregate) — without the lazy checkpoint each re-runs the
-        # upstream scan+fold (3 scans of a state dir for one AUC; the
-        # same reason binary_auc checkpoints its counts — r12 review
-        # finding)
-        per_s = pin(per_s.groupBy("v").agg(
-            F.sum("cnt_a").alias("cnt_a"),
-            F.sum("cnt_b").alias("cnt_b"),
-            F.sum("cnt_null").alias("cnt_null"),
-        ), "auc_from_score_counts:folded", eager=False)
-    valid_per = per_s.where(F.col("v").isNotNull()).select("v", "cnt_a", "cnt_b")
-    cums = _two_level_cumsum(valid_per, "v", partitions)
-    # AUC = Σ_s pos(s)·(neg_below(s) + ½·neg_at(s)) / (n⁺·n⁻); the
-    # inclusive cum_b minus half the at-score negatives is exactly
-    # neg_below + ½·neg_at (the midrank identity)
-    contrib = cums.join(valid_per, "v").agg(
-        F.sum(
-            F.col("cnt_a") * (F.col("cum_b") - F.col("cnt_b") / 2.0)
-        ).alias("__u"),
-        F.sum("cnt_a").alias("n_pos"),
-        F.sum("cnt_b").alias("n_neg"),
-    )
-    nulls = per_s.agg(F.coalesce(F.sum("cnt_null"), F.lit(0)).alias("n_null"))
-    return contrib.crossJoin(F.broadcast(nulls)).select(
-        F.when(
-            (F.col("n_pos") > 0) & (F.col("n_neg") > 0),
-            F.col("__u") / (F.col("n_pos") * F.col("n_neg")),
-        ).alias("auc"),
-        # an all-invalid corpus leaves the contrib aggregate empty-NULL;
-        # the honest count is 0, not NULL
-        F.coalesce(F.col("n_pos"), F.lit(0)).alias("n_pos"),
-        F.coalesce(F.col("n_neg"), F.lit(0)).alias("n_neg"),
-        "n_null",
-    )
+    sum would treat each duplicate as a separate distinct score,
+    silently mis-ranking every tie (r11 review finding).
+    ``assume_folded=True`` skips that aggregate as a pure optimization
+    for callers that just produced exactly-folded counts
+    (:func:`binary_auc`, the state readers)."""
+    return _auc_finish(per_s, [], partitions, assume_folded)
 
 
 def threshold_report(
@@ -634,150 +597,91 @@ def grouped_auc_from_score_counts(
     finding, empirically a 0.875→0.75 AUC corruption on a 2-batch
     union). ``assume_folded=True`` skips the fold for callers that just
     produced exactly-folded counts."""
-    from pyspark.sql import Window
-
     if not group_cols:
         raise ValueError("group_cols must be non-empty")
+    return _auc_finish(
+        per, group_cols, partitions, assume_folded, max_offset_groups,
+        include_null_counts,
+    )
+
+
+def _auc_finish(
+    per: DataFrame,
+    group_cols: list[str],
+    partitions: int | None,
+    assume_folded: bool,
+    max_offset_groups: int = 100_000,
+    include_null_counts: bool = True,
+) -> DataFrame:
+    """The ONE midrank AUC finisher behind :func:`auc_from_score_counts`
+    (``group_cols=[]``: always exactly one row) and
+    :func:`grouped_auc_from_score_counts`: fold duplicate (group..., v)
+    rows, run the drift module's prefix sum
+    (``drift._two_level_cumsum``), sum the midrank contributions and
+    coalesce the counts."""
+    from mwas_rfam_spark.operators.drift import _two_level_cumsum
+
     if partitions is None:
         partitions = per.sparkSession.sparkContext.defaultParallelism
     if "cnt_null" not in per.columns:
         per = per.withColumn("cnt_null", F.lit(0).cast("long"))
-    # group keys must be hashable driver-side (the offset accumulation
-    # dict below) — refuse complex types eagerly instead of throwing
-    # TypeError AFTER the full cluster computation ran (r12 review
-    # finding)
-    dtypes = dict(per.dtypes)
-    for c in group_cols:
-        if dtypes[c].startswith(("array", "map", "struct")):
-            raise ValueError(
-                f"grouped AUC: group column {c!r} has complex type "
-                f"{dtypes[c]} — the per-(partition, group) offset "
-                "accumulation needs hashable scalar keys; cast or "
-                "serialize the column first"
-            )
     if not assume_folded:
-        # lazy checkpoint for the same three-consumer reason as the
-        # ungrouped finisher (the nulls aggregate re-read the unfolded
-        # relation — r12 review finding)
+        # the folded parameter-sized relation is consumed by the cumsum
+        # input and the nulls aggregate — without the lazy checkpoint
+        # each re-runs the upstream scan+fold (the same reason
+        # binary_auc checkpoints its counts — r12 review finding)
         per = pin(per.groupBy(*group_cols, "v").agg(
             F.sum("cnt_a").alias("cnt_a"),
             F.sum("cnt_b").alias("cnt_b"),
             F.sum("cnt_null").alias("cnt_null"),
-        ), "grouped_auc_from_score_counts:folded", eager=False)
+        ), "_auc_finish:folded", eager=False)
     valid_per = per.where(F.col("v").isNotNull()).select(
-        *group_cols, F.col("v").alias("__v"), "cnt_a", "cnt_b"
+        *group_cols, "v", "cnt_a", "cnt_b"
     )
-    ranged = pin(valid_per.repartitionByRange(partitions, *group_cols, "__v").withColumn(
-        "__pid", F.spark_partition_id()
-    ), "grouped_auc_from_score_counts:ranged", eager=False)
-    # cardinality guard BEFORE the driver-side offset collect; runs on
-    # the checkpointed reduced relation so the corpus is scanned once
-    n_groups = ranged.select(*group_cols).distinct().count()
-    if n_groups > max_offset_groups:
-        raise ValueError(
-            f"grouped_auc: {n_groups} distinct groups exceeds "
-            f"max_offset_groups={max_offset_groups}; the per-(partition,"
-            " group) prefix offsets are collected to the driver, which is"
-            " sized for slice-style keys (language, source), not"
-            " per-entity keys. Aggregate the key first (e.g. bucket"
-            " domains), filter to the slices you report on, or raise"
-            " max_offset_groups if the driver has the memory."
+    cums = _two_level_cumsum(
+        valid_per, "v", partitions, group_cols, max_offset_groups=max_offset_groups
+    )
+    # AUC = Σ_s pos(s)·(neg_below(s) + ½·neg_at(s)) / (n⁺·n⁻); the
+    # inclusive cum_b minus half the at-score negatives is exactly
+    # neg_below + ½·neg_at (the midrank identity)
+    rel = cums.groupBy(*group_cols).agg(
+        F.sum(
+            F.col("cnt_a") * (F.col("cum_b") - F.col("cnt_b") / 2.0)
+        ).alias("__u"),
+        F.sum("cnt_a").alias("n_pos"),
+        F.sum("cnt_b").alias("n_neg"),
+    )
+    if include_null_counts:
+        # the invalid tally per group; ≤ n_groups rows, parameter-sized
+        nulls = per.groupBy(*group_cols).agg(
+            F.coalesce(F.sum("cnt_null"), F.lit(0)).alias("n_null")
         )
-    w_local = (
-        Window.partitionBy("__pid", *group_cols)
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.withColumn("loc_b", F.sum("cnt_b").over(w_local))
-    totals = (
-        ranged.groupBy("__pid", *group_cols)
-        .agg(F.sum("cnt_b").alias("tb"))
-        .collect()
-    )
-    # per-group running offsets in pid order (range partitioning makes
-    # pid order == value order within a group)
-    import math as _math
-
-    def _acc_key(row):
-        # canonical dict key: Spark's groupBy/joins treat NaN as equal
-        # to NaN, but Python dict lookup on collected Rows does not
-        # (each Row yields a fresh nan object, nan != nan), so a float
-        # group column containing NaN got offset 0 for every partition
-        # after the first — a silently wrong AUC for that slice (r13
-        # review finding). The emitted offset row keeps the real float;
-        # only the driver-side accumulator uses the token.
-        return tuple(
-            "__nan__" if isinstance(v, float) and _math.isnan(v) else v
-            for v in (row[c] for c in group_cols)
-        )
-
-    acc: dict = {}
-    offsets = []
-    for r in sorted(totals, key=lambda r: r["__pid"]):
-        gkey = _acc_key(r)
-        offsets.append((r["__pid"], *(r[c] for c in group_cols), acc.get(gkey, 0)))
-        acc[gkey] = acc.get(gkey, 0) + (r["tb"] or 0)
-    spark = per.sparkSession
-    gtypes = ", ".join(
-        f"`{c}` {dict(per.dtypes)[c]}" for c in group_cols
-    )
-    off_df = spark.createDataFrame(
-        offsets, f"__pid int, {gtypes}, off_b long"
-    ).withColumnsRenamed({c: f"__o_{c}" for c in group_cols}).withColumnRenamed(
-        "__pid", "__o_pid"
-    )
-    # NULL-SAFE key match: a NULL group value is a legitimate slice
-    # (dirty metadata) — a plain equi-join would drop it silently
-    cond = F.col("__pid") == F.col("__o_pid")
-    for c in group_cols:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"__o_{c}"))
-    cum = (
-        local.join(F.broadcast(off_df), cond)
-        .withColumn("cum_b", F.col("loc_b") + F.col("off_b"))
-        .drop("__o_pid", *[f"__o_{c}" for c in group_cols])
-    )
-    auc_rel = (
-        cum.groupBy(*group_cols)
-        .agg(
-            F.sum(
-                F.col("cnt_a") * (F.col("cum_b") - F.col("cnt_b") / 2.0)
-            ).alias("__u"),
-            F.sum("cnt_a").alias("n_pos"),
-            F.sum("cnt_b").alias("n_neg"),
-        )
-        .select(
-            *group_cols,
-            F.when(
-                (F.col("n_pos") > 0) & (F.col("n_neg") > 0),
-                F.col("__u") / (F.col("n_pos") * F.col("n_neg")),
-            ).alias("auc"),
-            "n_pos",
-            "n_neg",
-        )
-    )
-    if not include_null_counts:
-        return auc_rel
-    # state-reader shape: per-group invalid tally joined back in; FULL
-    # OUTER + null-safe keys so an ALL-invalid group still surfaces
-    # (auc NULL, counts 0) and a NULL group value stays a real slice.
-    # Both sides are ≤ n_groups rows — parameter-sized.
-    nulls = (
-        per.groupBy(*group_cols)
-        .agg(F.coalesce(F.sum("cnt_null"), F.lit(0)).alias("n_null"))
-        .withColumnsRenamed({c: f"__n_{c}" for c in group_cols})
-    )
-    jcond = F.lit(True)
-    for c in group_cols:
-        jcond = jcond & F.col(c).eqNullSafe(F.col(f"__n_{c}"))
-    return auc_rel.join(nulls, jcond, "full_outer").select(
-        *[
-            F.coalesce(F.col(c), F.col(f"__n_{c}")).alias(c)
-            for c in group_cols
-        ],
-        "auc",
+        if group_cols:
+            # FULL OUTER + null-safe keys so an ALL-invalid group still
+            # surfaces (auc NULL, counts 0) and a NULL group value stays
+            # a real slice
+            nulls = nulls.withColumnsRenamed({c: f"__n_{c}" for c in group_cols})
+            cond = F.lit(True)
+            for c in group_cols:
+                cond = cond & F.col(c).eqNullSafe(F.col(f"__n_{c}"))
+            rel = rel.join(nulls, cond, "full_outer").select(
+                *[F.coalesce(c, f"__n_{c}").alias(c) for c in group_cols],
+                "__u", "n_pos", "n_neg", "n_null",
+            )
+        else:
+            rel = rel.crossJoin(F.broadcast(nulls))
+    return rel.select(
+        *group_cols,
+        F.when(
+            (F.col("n_pos") > 0) & (F.col("n_neg") > 0),
+            F.col("__u") / (F.col("n_pos") * F.col("n_neg")),
+        ).alias("auc"),
+        # an all-invalid corpus or slice leaves the sums NULL; the
+        # honest count is 0, not NULL
         F.coalesce(F.col("n_pos"), F.lit(0)).alias("n_pos"),
         F.coalesce(F.col("n_neg"), F.lit(0)).alias("n_neg"),
-        F.coalesce(F.col("n_null"), F.lit(0)).alias("n_null"),
+        *([F.coalesce(F.col("n_null"), F.lit(0)).alias("n_null")]
+          if include_null_counts else []),
     )
 
 

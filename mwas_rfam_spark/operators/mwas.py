@@ -398,9 +398,12 @@ def run_tests(
     """T1–T4: dispatch Welch t vs permutation per cohort row, compute
     p-values, significance labels and cohort accession lists.
 
-    Returns the 18-column result relation (RESULT_SCHEMA minus the
-    per-test telemetry, which is emitted as 0 — SURVEY.md §2.8 T5 notes it
-    as excluded from value comparison).
+    Returns the 18-column RESULT_SCHEMA relation (13 columns under
+    ``legacy_13col``). Its telemetry is measured for permutation rows:
+    ``runtime_seconds`` is the group's kernel time divided by its
+    permutation tests and ``memory_usage_bytes`` the permutation
+    buffer's size; Welch and skipped rows carry 0 (SURVEY.md §2.8 T5
+    excludes both columns from value comparison).
     """
     flags = skip_flags.select(
         F.col("bio_project").alias("sf_bp"),

@@ -1162,9 +1162,10 @@ def eval_state_auc(
     deepest-complete-frozen-bar rule (see
     :func:`_authoritative_state_rows` — counts fold by SUM, so the
     crash-consistency contract is count-min's), re-sums per distinct
-    score, and finishes with the SAME two-level-prefix-sum plan
-    ``binary_auc`` uses — no unpartitioned window even when the folded
-    score relation is large.
+    score, and finishes with the SAME plan ``binary_auc`` uses —
+    ``drift._two_level_cumsum``, the one prefix sum of the AUC and KS
+    statistics, so no unpartitioned window even when the folded score
+    relation is large.
 
     Also correct over a GROUPED state dir
     (``streaming_eval_counts(group_cols=...)``): counts are linear
@@ -1175,7 +1176,7 @@ def eval_state_auc(
     from ..operators.evaluation import auc_from_score_counts
 
     # the finisher folds the raw state rows per distinct score and pins
-    # the fold for its three consumers
+    # the fold for its two consumers
     return auc_from_score_counts(
         _authoritative_state_rows(spark, state_dir), partitions=partitions
     )

@@ -2,7 +2,9 @@
 SQL, PSI/chi-square hand models, report shape, and the prefix-sum
 partitioning invariants."""
 
+import ast
 import math
+import pathlib
 import random
 
 import duckdb
@@ -525,3 +527,24 @@ def test_corpus_report_null_doc_not_a_duplicate_of_empty(spark):
     rep2 = corpus_report(docs2).first()
     assert rep2["dup_rate_est"] > 0.0
     assert exact_dedup_groups(docs2).where(F.col("n_docs") > 1).count() == 1
+
+
+def test_one_two_level_prefix_sum_in_the_package():
+    """The per-partition local window of the range-partitioned prefix sum
+    lives only in drift._two_level_cumsum; the KS statistic and both
+    AUC finishers call it."""
+    package = pathlib.Path(__file__).resolve().parent.parent / "mwas_rfam_spark"
+    drift_py = package / "operators" / "drift.py"
+    body = next(
+        node
+        for node in ast.parse(drift_py.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name == "_two_level_cumsum"
+    )
+    hits = [
+        f"{path.relative_to(package)}:{n}"
+        for path in sorted(package.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if 'Window.partitionBy("__pid"' in line
+        and not (path == drift_py and body.lineno <= n <= body.end_lineno)
+    ]
+    assert hits == []

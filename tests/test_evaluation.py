@@ -457,6 +457,36 @@ def test_auc_from_score_counts_folds_duplicate_v_rows(spark):
     assert g["auc"] == pytest.approx(0.875, abs=1e-12)
 
 
+def test_ungrouped_auc_is_one_row_on_empty_and_all_invalid_input(spark):
+    """The ungrouped finisher always answers with exactly one row: an
+    empty relation and one holding only invalid (v-NULL) rows give a
+    NULL auc, zero class counts and the invalid tally."""
+    from mwas_rfam_spark.operators.evaluation import auc_from_score_counts
+
+    counts_schema = "v double, cnt_a long, cnt_b long, cnt_null long"
+    scored_schema = "score double, label int"
+    cases = [
+        (auc_from_score_counts(spark.createDataFrame([], counts_schema)), 0),
+        (
+            auc_from_score_counts(
+                spark.createDataFrame([(None, 0, 0, 2), (None, 0, 0, 1)], counts_schema)
+            ),
+            3,
+        ),
+        (binary_auc(spark.createDataFrame([], scored_schema)), 0),
+        (
+            binary_auc(
+                spark.createDataFrame(
+                    [(None, 1), (float("nan"), 0), (0.5, None)], scored_schema
+                )
+            ),
+            3,
+        ),
+    ]
+    for rel, k in cases:
+        assert [tuple(r) for r in rel.collect()] == [(None, 0, 0, k)]
+
+
 def test_threshold_report_from_score_counts_matches_row_level(spark):
     """Counts-state threshold reconstruction: score>=t is a pure score
     function, so confusion cells are exact weighted sums over per-score

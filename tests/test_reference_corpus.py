@@ -12,7 +12,8 @@ The corpus itself is only present where the reference checkout is; the
 hand-written files under ``fixtures/condense/`` reproduce its bug
 classes (duplicate headers, a multi-line quoted paragraph, a large file
 of empty/``nan`` values, non-``SAM`` rows that must be removed, ragged
-rows) so the round trip runs everywhere.
+rows, pandas NA tokens such as ``NA``/``N/A``/``NULL``) so the round
+trip runs everywhere.
 """
 
 import os
@@ -20,7 +21,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from mwas_rfam_spark.operators.condense import condense_metadata
+from mwas_rfam_spark.operators.condense import _PANDAS_NA_TOKENS, condense_metadata
 from mwas_rfam_spark.sources.readers import melt_wide_metadata
 
 CORPUS_DIR = "/root/reference/main/tests/metadata_set_maker_tests/test_files"
@@ -83,7 +84,9 @@ def test_corpus_roundtrip(spark, path):
     n = ref_rows[0]["n"]
     universe = set(ref_rows[0]["biosamples_ref"])
 
-    informative = F.col("value").isNotNull() & (F.col("value") != "nan")
+    # the reference reads metadata through pandas, so every pandas NA
+    # token is missing, not a factor level
+    informative = F.col("value").isNotNull() & ~F.col("value").isin(*_PANDAS_NA_TOKENS)
     valid = long_df.filter(F.col("biosample_id").startswith("SAM"))
     nunique = {
         r["attribute"]: r["nu"]

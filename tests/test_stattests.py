@@ -6,6 +6,7 @@ against brute-force enumeration.
 """
 
 import math
+import pathlib
 
 import numpy as np
 import pytest
@@ -189,6 +190,20 @@ def test_permutation_kernels_refuse_non_finite_inputs():
         grouped_permutation_mean_diff(
             np.append(big, np.nan), [20], [0.1], 50, 0
         )
+
+
+def test_one_permutation_stream_in_the_package():
+    """The randomized permutation null is drawn in exactly one place,
+    grouped_permutation_mean_diff; the single test is its one-cohort
+    call."""
+    package = pathlib.Path(__file__).resolve().parent.parent / "mwas_rfam_spark"
+    hits = [
+        f"{path.relative_to(package)}:{n}"
+        for path in sorted(package.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "rng.permuted(" in line
+    ]
+    assert len(hits) == 1, hits
 
 
 # --- the one-pass per-group test kernel (operators.mwas) --------------------
