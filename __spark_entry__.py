@@ -1741,39 +1741,43 @@ def q_grouped_calibration(spark, sf_dir):
     )
 
 
-_EVAL_STATE_CACHE: set[str] = set()
+_EVAL_STATES: dict[tuple[str, tuple[str, ...]], str] = {}
 
 
-def _ensure_eval_state(spark, sf_dir):
+def _ensure_eval_state(spark, sf_dir, group_cols=()):
     """Build (once per process, memoized) the 3-batch partially-
-    compacted streaming eval-counts state dir that BOTH eval_state_*
-    entries read: the scored embeddings split into three ingest
-    batches (vec_id % 3), reduced to per-DISTINCT-SCORE
+    compacted streaming eval-counts state dir the eval_state_* entries
+    read: the scored embeddings (sliced by grp = vec_id % 4 when
+    ``group_cols=("grp",)``) split into three ingest batches
+    (vec_id % 3), reduced to per-(group..., DISTINCT score)
     (v, cnt_a, cnt_b, cnt_null) counts per batch — exactly the
-    foreachBatch body of streaming_eval_counts — then batches 0..1
-    crash-safely compacted into a frozen negative partition, so the
-    readers answer over a MIXED frozen+raw layout."""
+    foreachBatch body of ``streaming_eval_counts(group_cols=...)`` —
+    then batches 0..1 crash-safely compacted into a frozen negative
+    partition, so the readers answer over a MIXED frozen+raw layout.
+    Each process builds into its own temp dir (removed at exit), so no
+    process deletes a state another one is reading."""
+    import atexit
     import os
     import shutil
+    import tempfile
 
-    from mwas_rfam_spark.operators.evaluation import per_score_counts
+    from mwas_rfam_spark.operators.evaluation import grouped_per_score_counts
     from mwas_rfam_spark.streaming.requests import compact_eval_state
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    state_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "spark-warehouse", "eval_state", tag,
-    )
-    if state_dir not in _EVAL_STATE_CACHE:
-        shutil.rmtree(state_dir, ignore_errors=True)
+    key = (os.path.abspath(sf_dir), tuple(group_cols))
+    if key not in _EVAL_STATES:
+        state_dir = tempfile.mkdtemp(prefix="eval_state_")
+        atexit.register(shutil.rmtree, state_dir, True)
         scored = _model_eval_scored(spark, sf_dir)
+        if group_cols:
+            scored = scored.withColumn("grp", (F.col("vec_id") % 4).cast("int"))
         for b in range(3):
-            per_score_counts(
-                scored.where(F.col("vec_id") % 3 == b), "score", "label"
+            grouped_per_score_counts(
+                scored.where(F.col("vec_id") % 3 == b), list(group_cols), "score", "label"
             ).write.mode("overwrite").parquet(f"{state_dir}/ingest_batch={b}")
         compact_eval_state(spark, state_dir, up_to_batch=1)
-        _EVAL_STATE_CACHE.add(state_dir)
-    return state_dir
+        _EVAL_STATES[key] = state_dir
+    return _EVAL_STATES[key]
 
 
 def q_eval_state_auc(spark, sf_dir):
@@ -1833,51 +1837,13 @@ def q_eval_state_calibration(spark, sf_dir):
     )
 
 
-_GROUPED_EVAL_STATE_CACHE: set[str] = set()
-
-
-def _ensure_grouped_eval_state(spark, sf_dir):
-    """GROUPED twin of :func:`_ensure_eval_state` (memoized per
-    process): the scored embeddings sliced by grp = vec_id % 4, split
-    into three ingest batches (vec_id % 3) and reduced to per-(grp,
-    DISTINCT score) (v, cnt_a, cnt_b, cnt_null) counts per batch —
-    exactly the foreachBatch body of
-    ``streaming_eval_counts(group_cols=["grp"])`` — then batches 0..1
-    crash-safely compacted into a frozen negative partition, so the
-    grouped readers answer over a MIXED frozen+raw layout with the
-    group column folded per (grp, v)."""
-    import os
-    import shutil
-
-    from mwas_rfam_spark.operators.evaluation import grouped_per_score_counts
-    from mwas_rfam_spark.streaming.requests import compact_eval_state
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    state_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "spark-warehouse", "eval_state_grouped", tag,
-    )
-    if state_dir not in _GROUPED_EVAL_STATE_CACHE:
-        shutil.rmtree(state_dir, ignore_errors=True)
-        scored = _model_eval_scored(spark, sf_dir).withColumn(
-            "grp", (F.col("vec_id") % 4).cast("int")
-        )
-        for b in range(3):
-            grouped_per_score_counts(
-                scored.where(F.col("vec_id") % 3 == b), ["grp"], "score", "label"
-            ).write.mode("overwrite").parquet(f"{state_dir}/ingest_batch={b}")
-        compact_eval_state(spark, state_dir, up_to_batch=1)
-        _GROUPED_EVAL_STATE_CACHE.add(state_dir)
-    return state_dir
-
-
 def q_eval_state_grouped_auc(spark, sf_dir):
     """Streaming eval-counts state → PER-SLICE read-side AUC
     (registered correctness entry since r13 — driver-gated DuckDB
     oracle; stream==batch parity, layout derivation/pinning, the
     all-invalid-slice row, and compaction slice-intactness in
     tests/test_streaming.py): reads a GROUPED mixed frozen+raw state
-    dir (grp = vec_id % 4, memoized via _ensure_grouped_eval_state).
+    dir (grp = vec_id % 4, memoized via _ensure_eval_state).
     Per-(grp, score) counts are LINEAR, so each slice's state AUC
     equals the midrank AUC over that slice of the full scored relation
     — which is what the oracle computes in plain SQL (same midrank
@@ -1889,7 +1855,7 @@ def q_eval_state_grouped_auc(spark, sf_dir):
     grouped_auc — no unpartitioned window, no scored-row rescan."""
     from mwas_rfam_spark.streaming.requests import eval_state_grouped_auc
 
-    state_dir = _ensure_grouped_eval_state(spark, sf_dir)
+    state_dir = _ensure_eval_state(spark, sf_dir, ("grp",))
     return eval_state_grouped_auc(spark, state_dir).select(
         "grp", F.round("auc", 6).alias("auc"), "n_pos", "n_neg", "n_null"
     )
@@ -1904,7 +1870,7 @@ def q_eval_state_threshold_report(spark, sf_dir):
     NULL semantics, and the sklearn-parity f1-zero rule in
     tests/test_streaming.py / tests/test_evaluation.py): reads the
     SAME grouped mixed frozen+raw state dir q_eval_state_grouped_auc
-    answers over (memoized, _ensure_grouped_eval_state). ``score >= t``
+    answers over (memoized, _ensure_eval_state). ``score >= t``
     is a pure score function, so every confusion cell is an exact
     weighted sum over the per-(grp, score) counts — equal to the
     row-level threshold report over each slice of the scored relation,
@@ -1915,7 +1881,7 @@ def q_eval_state_threshold_report(spark, sf_dir):
     aggregate, no scored-row rescan."""
     from mwas_rfam_spark.streaming.requests import eval_state_threshold_report
 
-    state_dir = _ensure_grouped_eval_state(spark, sf_dir)
+    state_dir = _ensure_eval_state(spark, sf_dir, ("grp",))
     return eval_state_threshold_report(
         spark, state_dir, thresholds=[0.3, 0.5, 0.7]
     ).select(

@@ -52,20 +52,20 @@ class MwasConfig:
     max_group_observations: int | None = 5_000_000
     # bioprojects excluded from processing (reference conv:11-14, mg:77)
     blacklist: tuple[str, ...] = field(default=())
-    # multiply-consumed subplans: localCheckpoint (default) materializes
-    # eagerly AND truncates lineage, so the deep condense+cohort plan is
-    # analyzed/optimized once per stage instead of re-planned at every
-    # consumer — measured 25-40% off the relational core's wall time at
-    # sf0.1 (driver-side planning gaps, SCALE.md). The checkpointed
-    # blocks are NOT fault-tolerant: on a cluster where executor loss
-    # must not fail the job, set False to fall back to persist+settle
-    # (recomputable lineage), or call sc.setCheckpointDir and swap in
-    # reliable checkpoints. The policy is applied in `pinning.pin`
-    # (False = keep_lineage=True). Scope: only the MWAS pipeline passes
-    # this flag (`operators.mwas.run_mwas` and the steps it runs, and
-    # `finalize_results`). Dedup, drift, evaluation, retrieval,
-    # quantization, sinks, streaming and the `curate` CLI pin with
-    # localCheckpoint whatever it is set to.
+    # pin policy for multiply-consumed subplans. True (default): each pin
+    # is a localCheckpoint, materialized once with its lineage cut, so a
+    # deep plan is analyzed once instead of at every consumer (25-40% of
+    # the relational core's wall at sf0.1, SCALE.md); the blocks die
+    # with their executor. False: pins persist (MEMORY_AND_DISK) and keep
+    # a recomputable lineage, for clusters where executor loss must not
+    # fail the job. The HTTP handler, run_mwas_cached and
+    # run_mwas_resume open a pinning.scope from this flag, so it reaches
+    # every pin made inside that request, and the scope unpersists them
+    # on exit; a library caller of dedup, drift, evaluation, retrieval
+    # etc. gets the same policy inside a keep_lineage pinning.scope.
+    # run_mwas refuses False outside such a scope. Five pins whose
+    # source path is overwritten afterwards checkpoint whatever it says
+    # (pinning.checkpoint).
     use_local_checkpoint: bool = True
 
 

@@ -39,6 +39,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import pinning
 from ..config import DEFAULT_CONFIG, MwasConfig
 from ..sources import storage
 
@@ -135,7 +136,7 @@ def run_mwas_cached(
     call silently recomputing and rewriting, a cache that is pure
     overhead. The sentinel is written like every
     stamp, through ``storage.write_bytes``."""
-    from .mwas import release_mwas_persists, run_mwas
+    from .mwas import run_mwas
 
     key = mwas_cache_key(input_df, cfg, catalog_df, sets_df, ref_df)
     path = f"{cache_dir.rstrip('/')}/{key}"
@@ -144,17 +145,11 @@ def run_mwas_cached(
         hit = storage.missing_ok(lambda: spark.read.parquet(path))
         if hit is not None:
             return hit
-    try:
+    # the result is re-read from disk below, so run_mwas's pins end
+    # with the write, failed or not
+    with pinning.scope(not cfg.use_local_checkpoint):
         out = run_mwas(input_df, catalog_df, sets_df, ref_df, cfg)
         out.write.mode("overwrite").parquet(path)
-    finally:
-        # the result is re-read from disk below (or the write failed),
-        # so the subplans run_mwas pinned are pure leak — release them
-        # like every other disk-writing caller (__main__, http_server)
-        # does; a long-lived driver cache-missing on changing inputs
-        # used to grow executor storage without bound (r13 review
-        # finding)
-        release_mwas_persists()
     # self-written completion marker, AFTER the job returned — a torn
     # write never has it, a marker-disabled committer still gets hits
     storage.write_bytes(spark, sentinel, b"ok")
@@ -239,7 +234,7 @@ def run_mwas_resume(
     for it) never appears on disk, so rows-on-disk done-ness re-ran the
     FULL pipeline for it on every invocation forever — the same defect
     class as the r12 catalog-unmapped-runs fix this docstring cites."""
-    from .mwas import release_mwas_persists, run_mwas
+    from .mwas import run_mwas
     from ..sources.sinks import write_results_partitioned
 
     _check_resume_config(spark, output_dir, cfg)
@@ -270,15 +265,11 @@ def run_mwas_resume(
             .distinct()
             .collect()
         }
-        try:
+        # the output is re-read from disk below, so run_mwas's pins end
+        # with the write, failed or not
+        with pinning.scope(not cfg.use_local_checkpoint):
             out = run_mwas(todo, catalog_df, sets_df, ref_df, cfg)
             write_results_partitioned(out, output_dir, fmt="parquet", mode="append")
-        finally:
-            # output is on disk and re-read below (or the write failed)
-            # — free run_mwas's pinned subplans like every other
-            # disk-writing caller (r13 review finding: repeated resume
-            # calls leaked ~7 persists each)
-            release_mwas_persists()
         storage.write_bytes(
             spark,
             done_stamp_path,
@@ -288,5 +279,6 @@ def run_mwas_resume(
     if result is None:
         # fresh dir + empty input: nothing was ever written — an empty
         # relation with the right schema, not a missing-path error
-        return run_mwas(input_df.limit(0), catalog_df, sets_df, ref_df, cfg)
+        with pinning.scope(not cfg.use_local_checkpoint):
+            return run_mwas(input_df.limit(0), catalog_df, sets_df, ref_df, cfg)
     return result

@@ -627,7 +627,7 @@ def _auc_finish(
         per = per.withColumn("cnt_null", F.lit(0).cast("long"))
     if not assume_folded:
         # the folded parameter-sized relation is consumed by the cumsum
-        # input and the nulls aggregate — without the lazy checkpoint
+        # input and the null tally — without the lazy pin
         # each re-runs the upstream scan+fold (the same reason
         # binary_auc checkpoints its counts — r12 review finding)
         per = pin(per.groupBy(*group_cols, "v").agg(
@@ -641,6 +641,11 @@ def _auc_finish(
     cums = _two_level_cumsum(
         valid_per, "v", partitions, group_cols, max_offset_groups=max_offset_groups
     )
+    if include_null_counts:
+        # the invalid tally joins the same aggregate, so an ALL-invalid
+        # group still surfaces (auc NULL, counts 0) and a NULL group
+        # value stays its own group
+        cums = cums.unionByName(per.select(*group_cols, "cnt_null"), allowMissingColumns=True)
     # AUC = Σ_s pos(s)·(neg_below(s) + ½·neg_at(s)) / (n⁺·n⁻); the
     # inclusive cum_b minus half the at-score negatives is exactly
     # neg_below + ½·neg_at (the midrank identity)
@@ -650,26 +655,8 @@ def _auc_finish(
         ).alias("__u"),
         F.sum("cnt_a").alias("n_pos"),
         F.sum("cnt_b").alias("n_neg"),
+        *([F.sum("cnt_null").alias("n_null")] if include_null_counts else []),
     )
-    if include_null_counts:
-        # the invalid tally per group; ≤ n_groups rows, parameter-sized
-        nulls = per.groupBy(*group_cols).agg(
-            F.coalesce(F.sum("cnt_null"), F.lit(0)).alias("n_null")
-        )
-        if group_cols:
-            # FULL OUTER + null-safe keys so an ALL-invalid group still
-            # surfaces (auc NULL, counts 0) and a NULL group value stays
-            # a real slice
-            nulls = nulls.withColumnsRenamed({c: f"__n_{c}" for c in group_cols})
-            cond = F.lit(True)
-            for c in group_cols:
-                cond = cond & F.col(c).eqNullSafe(F.col(f"__n_{c}"))
-            rel = rel.join(nulls, cond, "full_outer").select(
-                *[F.coalesce(c, f"__n_{c}").alias(c) for c in group_cols],
-                "__u", "n_pos", "n_neg", "n_null",
-            )
-        else:
-            rel = rel.crossJoin(F.broadcast(nulls))
     return rel.select(
         *group_cols,
         F.when(

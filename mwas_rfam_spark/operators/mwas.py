@@ -43,10 +43,10 @@ from ..functions.stattests import (
 )
 
 def release_mwas_persists() -> int:
-    """Release every subplan run_mwas / finalize_results pinned with the
-    persist policy (``use_local_checkpoint=False``) and return how many
-    were dropped; see :func:`..pinning.release`. Call after the result
-    has been materialized (written / collected)."""
+    """Alias of :func:`..pinning.release`: unpersist the current pin
+    scope's persisted pins and return how many were dropped. The scope's
+    own exit releases them too; the HTTP handler calls this once its
+    reply is built, which marks where a request's server-side work ends."""
     return pinning.release()
 
 
@@ -429,7 +429,7 @@ def run_tests(
     # the kernel input, the pooled-vector eligibility and the final join
     # all consume `base`; without pinning, each re-executes the full
     # upstream pipeline (catalog join → rollup → cohort stats)
-    base = pinning.pin(base, "run_tests:base", keep_lineage=not cfg.use_local_checkpoint)
+    base = pinning.pin(base, "run_tests:base")
 
     use_t_test = (
         F.least(F.col("n_true"), F.col("n_false")) < cfg.min_cohort_for_permutation
@@ -617,7 +617,7 @@ def finalize_results(
 
     # two-branch fanout over `rows` — pin so the shared upstream
     # (including the permutation kernel) runs once
-    rows = pinning.pin(rows, "finalize_results:rows", keep_lineage=not cfg.use_local_checkpoint)
+    rows = pinning.pin(rows, "finalize_results:rows")
 
     too_many = F.lit("too many biosamples to list")
     complement = F.array_except(F.col("biosamples_ref"), F.col("members"))
@@ -696,14 +696,13 @@ def _pin_inputs(
     """Pin the rollup, sets and ref relations, overlapping the three
     independent jobs (the rollup reads input+catalog; sets/ref read the
     metadata relation)."""
-    keep = not cfg.use_local_checkpoint
     rollup = biosample_rollup(resolve_and_normalize(input_df, catalog_df, cfg))
     return tuple(
         pinning.overlap(
             [
-                lambda: pinning.pin(rollup, "run_mwas:rollup", keep_lineage=keep),
-                lambda: pinning.pin(sets_df, "run_mwas:sets", keep_lineage=keep),
-                lambda: pinning.pin(ref_df, "run_mwas:ref", keep_lineage=keep),
+                lambda: pinning.pin(rollup, "run_mwas:rollup"),
+                lambda: pinning.pin(sets_df, "run_mwas:sets"),
+                lambda: pinning.pin(ref_df, "run_mwas:ref"),
             ]
         )
     )
@@ -726,14 +725,18 @@ def run_mwas(
 
     EAGER: constructing the result executes the pipeline (including the
     test kernel) — each shared subplan is materialized before its
-    fan-out. Plan inspection: use the stage functions directly, or set
-    ``use_local_checkpoint=False``, whose persisted pins keep the full
-    lineage in the plan. The pins stay materialized so the returned
-    DataFrame can be re-queried cheaply; under that persist policy call
-    :func:`release_mwas_persists` once the output is written to free
-    them (checkpoint blocks are freed by the ContextCleaner once the
-    result is garbage-collected).
+    fan-out. The pins follow the innermost :func:`..pinning.scope`.
+    ``use_local_checkpoint=False`` must run inside a ``keep_lineage``
+    scope, which persists the pins (the full lineage stays in the plan)
+    and unpersists them when it exits; outside one it raises
+    ValueError instead of silently checkpointing. Checkpoint blocks are
+    freed by the ContextCleaner once the result is garbage-collected.
     """
+    if not cfg.use_local_checkpoint and not pinning.keeps_lineage():
+        raise ValueError(
+            "use_local_checkpoint=False persists run_mwas's pins: run it "
+            "inside pinning.scope(True), which owns and releases them"
+        )
     rollup, sets_df, ref_df = _pin_inputs(input_df, catalog_df, sets_df, ref_df, cfg)
     skip_flags = group_skip_flags(rollup, cfg)
     # stats_df has exactly ONE consumer — run_tests' `base`, which is

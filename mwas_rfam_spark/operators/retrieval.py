@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..pinning import pin
+from ..pinning import checkpoint, pin
 from ..sources import storage
 
 
@@ -419,7 +419,7 @@ def remove_from_text_index(
         postings = spark.read.parquet(f"{path}/postings").where(
             F.col("bucket").isin(buckets)  # partition pruning
         )
-        kept = pin(postings.join(
+        kept = checkpoint(postings.join(
             gone.withColumnRenamed("id", "__gone"),
             postings["id"] == F.col("__gone"),
             "left_anti",

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..pinning import pin
+from ..pinning import checkpoint, pin
 
 
 def _validate_unique_q_ids(queries: DataFrame, q_id_col: str, caller: str) -> None:
@@ -602,7 +602,7 @@ def prune_partitioned_rows(
     rows = spark.read.parquet(table_path).where(
         F.col(part_col).isin(cells)  # partition pruning
     )
-    kept = pin(rows.join(
+    kept = checkpoint(rows.join(
         gone, rows[id_col] == F.col("__gone"), "left_anti"
     ), "prune_partitioned_rows:kept")  # source == destination: materialize first
     written = {int(r[part_col]) for r in kept.select(part_col).distinct().collect()}

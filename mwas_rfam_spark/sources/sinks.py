@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..pinning import pin
+from ..pinning import checkpoint
 from . import storage
 
 
@@ -269,7 +269,7 @@ def merge_upsert_partitioned(
     kept = base.join(
         F.broadcast(updates.select(key_col)), key_col, "left_anti"
     )
-    merged = pin(kept.unionByName(updates.select(*kept.columns)), "merge_upsert_partitioned:merged")
+    merged = checkpoint(kept.unionByName(updates.select(*kept.columns)), "merge_upsert_partitioned:merged")
     written = {r[0] for r in merged.select(partition_col).distinct().collect()}
     (
         merged.write.mode("overwrite")
@@ -337,7 +337,7 @@ def compact_files(
                 )
         n = df.count()
         n_files = max(1, math.ceil(n / target_rows_per_file))
-        out = pin(df.repartition(n_files), "compact_files:out")
+        out = checkpoint(df.repartition(n_files), "compact_files:out")
         (
             out.write.mode("overwrite")
             .option("maxRecordsPerFile", target_rows_per_file)
@@ -358,7 +358,7 @@ def compact_files(
         "__b",
         F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.greatest(F.col("__k"), F.lit(1))),
     )
-    out = pin(bucketed.repartition(F.col(partition_col), F.col("__b")).drop(
+    out = checkpoint(bucketed.repartition(F.col(partition_col), F.col("__b")).drop(
         "__b", "__k"
     ), "compact_files:out")
     (

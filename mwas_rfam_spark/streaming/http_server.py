@@ -31,15 +31,17 @@ from urllib.parse import parse_qsl, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import pinning
 from ..config import MwasConfig
+from ..operators import mwas
 from ..sources.readers import RequestError
 
 _BOOL_TRUE = {"1", "true", "yes", "on"}
 _BOOL_FALSE = {"0", "false", "no", "off"}
 
-# serializes run_mwas + release_mwas_persists across handler threads —
-# the keep_lineage pin registry (pinning.release) is process-global
-# (see do_POST)
+# MWAS runs are whole-cluster jobs: one at a time per driver. Each
+# request's pins live in its own pinning.scope, so no request's release
+# can touch another's.
 _MWAS_LOCK = threading.Lock()
 
 
@@ -207,60 +209,45 @@ def make_server(
             except (ValueError, KeyError, json.JSONDecodeError) as e:
                 self._reply(400, {"error": str(e)})
                 return
-            reply = None
             try:
-                # _MWAS_LOCK serializes the run AND the release: the
-                # keep_lineage pin registry (pinning._pinned) is
-                # process-global, so releasing after one request would
-                # otherwise unpersist another thread's in-flight
-                # subplans. Without the release every POST under the
-                # persist policy (use_local_checkpoint=0) pinned its
-                # materialized relations (rollup, cohort rows, results)
-                # for the server's lifetime —
-                # the exact leak release_mwas_persists exists to
-                # prevent, and the long-running server is the one
-                # caller that never called it (r11 review finding; the
-                # CLI path always has, __main__.py). MWAS runs are
-                # whole-cluster jobs — serializing them on one driver
-                # costs no real concurrency.
-                with _MWAS_LOCK:
-                    try:
-                        out = serve_request(
-                            spark, rows, catalog_df, sets_df, ref_df, cfg
+                # the scope owns this request's pins and releases them on
+                # every exit
+                with _MWAS_LOCK, pinning.scope(not cfg.use_local_checkpoint):
+                    out = serve_request(
+                        spark, rows, catalog_df, sets_df, ref_df, cfg
+                    )
+                    # bounded collect: one extra row detects overflow
+                    # without ever materializing the unbounded
+                    # relation on the driver
+                    collected = out.limit(max_inline_rows + 1).collect()
+                    if len(collected) > max_inline_rows:
+                        base = results_dir or tempfile.mkdtemp(
+                            prefix="mwas_results_"
                         )
-                        # bounded collect: one extra row detects overflow
-                        # without ever materializing the unbounded
-                        # relation on the driver
-                        collected = out.limit(max_inline_rows + 1).collect()
-                        if len(collected) > max_inline_rows:
-                            base = results_dir or tempfile.mkdtemp(
-                                prefix="mwas_results_"
-                            )
-                            loc = f"{base}/req-{uuid.uuid4().hex}"
-                            out.write.parquet(loc)
-                            # metadata-only job
-                            n_rows = spark.read.parquet(loc).count()
-                            reply = {
-                                "n": n_rows,
-                                "columns": out.columns,
-                                "results_location": loc,
-                            }
-                        else:
-                            reply = {
-                                "n": len(collected),
-                                "columns": out.columns,
-                                "rows": [
-                                    {
-                                        k: _json_safe(v)
-                                        for k, v in r.asDict().items()
-                                    }
-                                    for r in collected
-                                ],
-                            }
-                    finally:
-                        from ..operators.mwas import release_mwas_persists
-
-                        release_mwas_persists()
+                        loc = f"{base}/req-{uuid.uuid4().hex}"
+                        out.write.parquet(loc)
+                        # metadata-only job
+                        n_rows = spark.read.parquet(loc).count()
+                        reply = {
+                            "n": n_rows,
+                            "columns": out.columns,
+                            "results_location": loc,
+                        }
+                    else:
+                        reply = {
+                            "n": len(collected),
+                            "columns": out.columns,
+                            "rows": [
+                                {
+                                    k: _json_safe(v)
+                                    for k, v in r.asDict().items()
+                                }
+                                for r in collected
+                            ],
+                        }
+                    # the reply is built: the request's server-side work
+                    # ends here
+                    mwas.release_mwas_persists()
             except RequestError as e:
                 # client-input errors raised inside the pipeline
                 # (readers.input_from_rows' missing run/group) are the

@@ -36,6 +36,19 @@ def job_descriptions(spark):
     return read
 
 
+@pytest.fixture
+def persisted_rdds(spark):
+    """``persisted_rdds()`` → ids of the JVM's persisted RDDs that are
+    not local checkpoints (those wait for the ContextCleaner; a persist
+    stays until someone unpersists it)."""
+
+    def read() -> set[int]:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(i) for i in rdds if not rdds[i].rdd().isLocallyCheckpointed()}
+
+    return read
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -239,23 +239,21 @@ def _six_sample_mwas_inputs(spark):
 def test_t_only_plan_has_no_permutation_kernel(spark):
     """t_test_only must fold the permutation side away entirely: no
     pooled-vector (obs_rpm) collect_list aggregation in the physical
-    plan. The plan is read under use_local_checkpoint=False, whose lazy
-    persists keep the lineage in the plan (eager checkpoints would cut
-    it, and the check could not fail); the default config's plan is
-    the positive control."""
-    from mwas_rfam_spark.operators.mwas import release_mwas_persists, run_mwas
+    plan. The plan is read in a keep_lineage scope, whose persisted pins
+    keep the lineage in the plan (eager checkpoints would cut it, and
+    the check could not fail); the default config's plan is the
+    positive control."""
+    from mwas_rfam_spark import pinning
+    from mwas_rfam_spark.operators.mwas import run_mwas
 
     input_df, catalog_df, sets_df, ref_df = _six_sample_mwas_inputs(spark)
 
     def plan(**kw):
-        out = run_mwas(
-            input_df, catalog_df, sets_df, ref_df,
-            MwasConfig(use_local_checkpoint=False, **kw),
-        )
-        try:
-            return _physical(out)
-        finally:
-            release_mwas_persists()
+        with pinning.scope(keep_lineage=True):
+            return _physical(run_mwas(
+                input_df, catalog_df, sets_df, ref_df,
+                MwasConfig(use_local_checkpoint=False, **kw),
+            ))
 
     # the one test kernel runs either way (it computes the Welch tail)
     t_only = plan(t_test_only=True)
@@ -298,22 +296,24 @@ def test_run_mwas_does_not_repin_checkpointed_inputs(spark, job_descriptions):
 @pytest.mark.parametrize("t_test_only", [False, True])
 def test_run_mwas_same_rows_under_both_pin_policies(spark, t_test_only):
     """The persist policy (use_local_checkpoint=False) and the default
-    checkpoint policy give the same rows, telemetry columns aside."""
-    from mwas_rfam_spark.operators.mwas import release_mwas_persists, run_mwas
+    checkpoint policy give the same rows, telemetry columns aside; the
+    persist policy outside a keep_lineage scope refuses to run."""
+    from mwas_rfam_spark import pinning
+    from mwas_rfam_spark.operators.mwas import run_mwas
 
     inputs = _six_sample_mwas_inputs(spark)
 
     def rows(use_local_checkpoint):
         cfg = MwasConfig(t_test_only=t_test_only, use_local_checkpoint=use_local_checkpoint)
-        out = run_mwas(*inputs, cfg)
-        try:
+        with pinning.scope(keep_lineage=not use_local_checkpoint):
+            out = run_mwas(*inputs, cfg)
             cols = [c for c in out.columns if c not in ("runtime_seconds", "memory_usage_bytes")]
             return sorted(tuple(r) for r in out.select(*cols).collect())
-        finally:
-            release_mwas_persists()
 
     checkpointed = rows(True)
     assert checkpointed and rows(False) == checkpointed
+    with pytest.raises(ValueError, match="use_local_checkpoint=False"):
+        run_mwas(*inputs, MwasConfig(t_test_only=t_test_only, use_local_checkpoint=False))
 
 
 def test_interval_join_within(spark):
@@ -906,37 +906,37 @@ def _five_run_mwas_inputs(spark):
     return input_df, catalog_df, sets_df, ref_df
 
 
-def test_caching_releases_mwas_persists(spark, tmp_path):
+def test_caching_releases_mwas_persists(spark, persisted_rdds, tmp_path):
     """r13 review finding: run_mwas_cached / run_mwas_resume returned a
     disk re-read but never released run_mwas's pinned subplans — a
     long-lived driver leaked ~7 persisted relations per cache miss.
-    Run under the persist policy: checkpoint pins are never registered."""
-    from mwas_rfam_spark import pinning
+    Run under the persist policy, read from the JVM's persisted RDDs."""
     from mwas_rfam_spark.operators.caching import run_mwas_cached
 
+    before = persisted_rdds()
     run_mwas_cached(
         spark, *_five_run_mwas_inputs(spark),
         str(tmp_path / "rel_cache"),
         MwasConfig(t_test_only=True, use_local_checkpoint=False),
     )
-    assert not pinning._pinned, "cache miss must release pinned subplans"
+    assert persisted_rdds() == before, "cache miss must release pinned subplans"
 
 
-def test_caching_releases_mwas_persists_when_write_fails(spark, tmp_path):
+def test_caching_releases_mwas_persists_when_write_fails(spark, persisted_rdds, tmp_path):
     """A failed cache write must not leak the pins for the session's
     lifetime: the release runs whether or not the write succeeds."""
-    from mwas_rfam_spark import pinning
     from mwas_rfam_spark.operators.caching import run_mwas_cached
 
     blocker = tmp_path / "not_a_dir"
     blocker.write_text("a regular file")
+    before = persisted_rdds()
     with pytest.raises(Exception):
         run_mwas_cached(
             spark, *_five_run_mwas_inputs(spark),
             str(blocker / "rel_cache"),
             MwasConfig(t_test_only=True, use_local_checkpoint=False),
         )
-    assert not pinning._pinned, "failed write must release pinned subplans"
+    assert persisted_rdds() == before, "failed write must release pinned subplans"
 
 
 def test_fingerprint_handles_nested_map_columns(spark):

@@ -152,29 +152,26 @@ def test_config_from_params_coercion():
         config_from_params({"nope": "1"})
 
 
-def test_server_releases_mwas_persists(server_url):
-    """r11 review finding: the long-running server never called
-    release_mwas_persists, pinning every POST's materialized relations
-    (rollup, cohort rows, results) forever; the handler now releases
-    inside the serialized section. Run under the persist policy
-    (use_local_checkpoint=0): checkpoint pins are never registered."""
+def test_server_releases_mwas_persists(server_url, persisted_rdds):
+    """r11 review finding: the long-running server never released a
+    POST's persisted relations (rollup, cohort rows, results). Each
+    request now owns a pin scope. Run under the persist policy
+    (use_local_checkpoint=0) and read from the JVM's persisted RDDs."""
     import json
     import urllib.request
 
-    from mwas_rfam_spark import pinning
-
-    url = server_url
+    before = persisted_rdds()
     body = json.dumps(
         [{"run": f"R{i}", "group": "g1", "quantifier": 10.0 * i} for i in range(1, 7)]
     ).encode()
     req = urllib.request.Request(
-        f"{url}/run_mwas?t_test_only=1&use_local_checkpoint=0", data=body,
+        f"{server_url}/run_mwas?t_test_only=1&use_local_checkpoint=0", data=body,
         headers={"Content-Type": "application/json"},
     )
     with urllib.request.urlopen(req) as resp:
         assert resp.status == 200
-        json.loads(resp.read())
-    assert pinning._pinned == []
+        assert json.loads(resp.read())["n"] > 0
+    assert persisted_rdds() == before
 
 
 def test_http_client_errors_are_400(server_url):

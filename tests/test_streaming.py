@@ -1776,3 +1776,29 @@ def test_resolve_stream_honors_config(spark):
     assert "S3" not in stream  # blacklist honored on the stream path
     assert stream["S1"] == pytest.approx(500.0 / 1_000_000 * 2_000_000)
     assert stream["S2"] == pytest.approx(7.0 / 500_000 * 2_000_000)
+
+
+@pytest.mark.parametrize(
+    "query,shared", [("eval_state_auc", "eval_state"), ("eval_state_grouped_auc", "eval_state_grouped")]
+)
+def test_eval_state_build_leaves_another_process_state_alone(spark, sf_dir, query, shared):
+    """Each process builds the eval_state_* entries' state in a dir of
+    its own: a complete state dir at the checkout's shared path,
+    standing in for another process's, survives this process's build."""
+    import shutil
+
+    import __spark_entry__ as entrymod
+
+    other = os.path.join(
+        os.path.dirname(os.path.abspath(entrymod.__file__)), "spark-warehouse",
+        shared, os.path.basename(os.path.normpath(sf_dir)),
+    )
+    spark.range(3).selectExpr("CAST(id AS DOUBLE) AS v").write.mode("overwrite").parquet(
+        f"{other}/ingest_batch=0"
+    )
+    entrymod._EVAL_STATES.clear()
+    try:
+        assert entrymod.bench_queries()[query](spark, sf_dir).collect()
+        assert spark.read.parquet(f"{other}/ingest_batch=0").count() == 3
+    finally:
+        shutil.rmtree(other, ignore_errors=True)

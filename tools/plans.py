@@ -79,6 +79,7 @@ def dump(outdir: str, names: list[str], sf_dir: str) -> int:
     sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
     import bench as benchmod
+    from mwas_rfam_spark import pinning
     from mwas_rfam_spark.session import get_spark
 
     qs = {
@@ -94,10 +95,12 @@ def dump(outdir: str, names: list[str], sf_dir: str) -> int:
     failed = 0
     for name in names or [*benchmod.HEADLINE, "mwas_full"]:
         try:
-            df = qs[name](spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            # the plan is formatted while the scope's pins are still held
+            with pinning.scope(keep_lineage=name == "mwas_t_only_full_lineage"):
+                df = qs[name](spark, sf_dir)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
         except Exception as e:  # noqa: BLE001 - record the failure in place
             failed += 1
             plan = f"ERROR dumping plan: {type(e).__name__}: {e}\n"
@@ -109,9 +112,11 @@ def dump(outdir: str, names: list[str], sf_dir: str) -> int:
 
 
 def _dump_in_subprocess(root: str, outdir: str, names: list[str], sf_dir: str) -> None:
-    """Run this script's ``dump`` against the tree at ``root``."""
+    """Run the tree's own ``dump`` (this script's, for a tree without
+    one) against the tree at ``root``: each tree builds its queries
+    under its own pinning API."""
     script = os.path.join(root, "tools", "plans.py")
-    if os.path.abspath(script) != os.path.abspath(__file__):
+    if not os.path.exists(script):
         shutil.copy(os.path.abspath(__file__), script)
     env = {**os.environ, "PYTHONPATH": root}
     subprocess.run(

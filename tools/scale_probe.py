@@ -122,9 +122,10 @@ def probe_dedup(spark, sf_dir: str, out: dict):
 
 
 def probe_mwas(spark, sf_dir: str, out: dict):
+    from mwas_rfam_spark import pinning
     from mwas_rfam_spark.config import MwasConfig
     from mwas_rfam_spark.operators.condense import condense_metadata
-    from mwas_rfam_spark.operators.mwas import release_mwas_persists, run_mwas
+    from mwas_rfam_spark.operators.mwas import run_mwas
     from mwas_rfam_spark.plans.testdata_mwas import (
         mwas_catalog_from_orders,
         mwas_input_from_events,
@@ -161,9 +162,9 @@ def probe_mwas(spark, sf_dir: str, out: dict):
             meta = rep(meta, {"biosample_id"}, times)
         sets_df, ref_df = condense_metadata(meta)
         t0 = time.time()
-        _force(run_mwas(inp, cat, sets_df, ref_df, cfg))
-        out[f"mwas_full_{label}"] = round(time.time() - t0, 2)
-        release_mwas_persists()
+        with pinning.scope(keep_lineage=not cfg.use_local_checkpoint):
+            _force(run_mwas(inp, cat, sets_df, ref_df, cfg))
+            out[f"mwas_full_{label}"] = round(time.time() - t0, 2)
         spark.catalog.clearCache()
         print(f"mwas_full_{label}: {out[f'mwas_full_{label}']}", file=sys.stderr)
 
