@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..pinning import held, overlap, pin
+from .text import tokens, word_ngrams
 
 
 def normalize_text(col):
@@ -95,31 +96,13 @@ def word_shingles(docs: DataFrame, n: int = 3, text_col: str = "text", id_col: s
     inflates every downstream df/sz/overlap count; dedupe ids upstream
     (every current caller passes a primary-key id).
 
-    Built with split + transform (higher-order functions, JVM-side); the
-    explode is the scalable long form feeding the inverted index.
-
-    The token array is materialized in its own projection BELOW the
-    explode: inlining the split into the transform lambda makes Catalyst
-    re-evaluate it per element_at (no common-subexpression elimination
-    inside lambda bodies) — n×(tokens-n) splits of the full text per doc,
-    measured 7× slower.
-
-    Documents with fewer than n tokens yield no shingles. The guard must
-    be a `when` on the whole sequence: `sequence(0, size-n)` with a
-    negative end counts DOWN ([0,-1]), and element_at(_, 0) then throws
-    under ANSI mode (on by default in Spark 4).
+    Built from `text.tokens` and `text.word_ngrams` (higher-order
+    functions, JVM-side); the explode is the scalable long form feeding
+    the inverted index. Documents with fewer than n tokens yield no
+    shingles.
     """
-    toked = docs.select(
-        F.col(id_col).alias("id"), _token_array(F.col(text_col)).alias("toks")
-    )
-    toks = F.col("toks")
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    shingle = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)]),
-    )
+    toked = docs.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+    shingle = word_ngrams("toks", n)
     # (id, shingle) is already distinct here: array_distinct dedups
     # WITHIN the doc before the explode, and id is constant per doc —
     # the .distinct() this returned through r13 was a redundant full
@@ -670,7 +653,7 @@ def _simhash_votes(docs, text_col, id_col, token_hash, n_bits, bit, weight):
     of bit g + n_bits/2 in its high lane (see :func:`simhash64`)."""
     toks = docs.select(
         F.col(id_col).alias("id"),
-        F.explode(_token_array(F.col(text_col))).alias("tok"),
+        F.explode(tokens(F.col(text_col))).alias("tok"),
     ).withColumn("h", token_hash)
     half = n_bits // 2
     packed = [
@@ -1577,17 +1560,6 @@ def incremental_minhash_dedup(
     return survivors, updated
 
 
-def _token_array(text_col):
-    """Whitespace tokens with boundary empties REMOVED: `trim` strips
-    only spaces, so 'a b\\n' splits to ['a','b',''] — the phantom empty
-    token would otherwise fabricate n-grams like 'a b ' that match
-    across documents on only n-1 real tokens, breaking the
-    minimum-match-length guarantee. NULL text yields an empty array."""
-    return F.filter(
-        F.split(F.coalesce(text_col, F.lit("")), r"\s+"), lambda t: t != F.lit("")
-    )
-
-
 def _positional_ngrams(
     docs: DataFrame, n: int, text_col: str, id_col: str
 ) -> DataFrame:
@@ -1595,23 +1567,10 @@ def _positional_ngrams(
     token position — positional, not the set-semantics `word_shingles`
     (duplicate-span detection needs each occurrence, not each distinct
     shingle per doc). Case-sensitive: exact substring duplication is.
-    Positions index the NON-EMPTY token sequence (see `_token_array`)."""
-    # project the token array FIRST: slice(expr, i, n) inside the lambda
-    # would inline the split per position — O(tokens²) per document
-    toked = docs.select(
-        F.col(id_col).alias("id"),
-        _token_array(F.col(text_col)).alias("__toks"),
-    )
-    toks = F.col("__toks")
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    Positions index the NON-EMPTY token sequence (see `text.tokens`)."""
+    toked = docs.select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__toks"))
     return toked.select(
-        "id", F.posexplode(grams).alias("pos0", "span")
+        "id", F.posexplode(word_ngrams("__toks", n)).alias("pos0", "span")
     ).select("id", (F.col("pos0") + 1).alias("pos"), "span")
 
 
@@ -1739,7 +1698,7 @@ def strip_duplicate_spans(
     affected = docs.join(cut_ids, id_col, "left_semi")
     toks = affected.select(
         F.col(id_col).alias("id"),
-        F.posexplode(_token_array(F.col(text_col))).alias("tpos0", "tok"),
+        F.posexplode(tokens(F.col(text_col))).alias("tpos0", "tok"),
     ).select("id", (F.col("tpos0") + 1).alias("tpos"), "tok")
     kept = toks.join(covered, ["id", "tpos"], "left_anti")
     rebuilt = kept.groupBy("id").agg(

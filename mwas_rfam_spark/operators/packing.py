@@ -184,8 +184,6 @@ def chunk_documents(
     step = max_tokens - overlap
     toked = docs.select(
         F.col(id_col),
-        # text.tokens itself (r12: this was an inline copy of the
-        # helper it cited — future tokenization fixes must propagate)
         tokens(F.col(text_col)).alias("__toks"),
     )
     n = F.size("__toks")

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..pinning import checkpoint, pin
 from ..sources import storage
+from .text import tokens
 
 
 def with_rank(df: DataFrame, order: list[Column]) -> DataFrame:
@@ -157,18 +158,11 @@ def _normalize_terms(query_terms: list[str], caller: str) -> list[str]:
 
 
 def _lowered_tokens(text_col: str):
-    """The ONE tokenization every BM25 surface shares (scan, index
-    build, probe equivalence depends on it): lowercase, trim,
-    whitespace-split, empty tokens removed. NULL text coalesces to the
-    empty document first — F.size(NULL) is NULL, which would count the
-    row in n_docs but silently exclude it from avgdl, skewing every
-    score. Trimmed ``\\s+`` splits can only produce an empty token for
-    the empty string, but the unconditional filter keeps the invariant
-    independent of that subtlety."""
-    return F.filter(
-        F.split(F.trim(F.lower(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"),
-        lambda tok: tok != "",
-    )
+    """The tokenization every BM25 surface shares (scan, index build,
+    probe equivalence depends on it): lowercased `text.tokens`, whose
+    NULL text is the empty document — F.size(NULL) would count the row
+    in n_docs but silently exclude it from avgdl, skewing every score."""
+    return tokens(F.lower(F.col(text_col)))
 
 
 def _term_bucket_py(term: str, n_buckets: int) -> int:

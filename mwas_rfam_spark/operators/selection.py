@@ -48,21 +48,8 @@ from pyspark.sql import functions as F
 
 from mwas_rfam_spark.functions.scalar import md5_u32 as _md5_u32
 from mwas_rfam_spark.functions.scalar import md5_uniform as _md5_uniform
+from mwas_rfam_spark.operators.text import tokens, word_ngrams
 from mwas_rfam_spark.pinning import overlap, pin
-
-
-def _tokens(text_col: Column) -> Column:
-    """Lowercased whitespace tokens, boundary empties removed — matches
-    the DuckDB oracle's list_filter(string_split_regex(lower(text),
-    '\\s+'), t -> t <> ''). Delegates to text.tokens (lowercased) so
-    the ONE tokenization definition — including its phantom-token and
-    NULL-text hardening — cannot fork between the text family and the
-    selection family (r12 review finding: this was a hand-copy missing
-    the NULL coalesce; behaviorally identical here because NULL
-    propagation and the empty array both explode to zero rows)."""
-    from mwas_rfam_spark.operators.text import tokens as _ws_tokens
-
-    return _ws_tokens(F.lower(text_col))
 
 
 def _nonnull_id_guard(col: Column, caller: str, id_col: str, dtype) -> Column:
@@ -100,26 +87,14 @@ def _bucket_occurrences(
     collapses each partition to ~one row per document."""
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    # materialize the token array as a projected COLUMN before any
-    # expression references it: element_at(expr, i) inside the bigram
-    # lambda would otherwise inline the whole filter(split(...)) per
-    # element — re-tokenizing the text O(tokens²) per document (the same
-    # trap text.text_profile's single-tokenize fix removed)
+    # lowercased tokens, as the DuckDB oracle's list_filter(
+    # string_split_regex(lower(text), '\\s+'), t -> t <> '')
     toked = docs.select(
         F.col(id_col).alias("doc_id"),
-        _tokens(F.col(text_col)).alias("__toks"),
+        tokens(F.lower(F.col(text_col))).alias("__toks"),
     )
     uni = F.col("__toks")
-    big = F.when(
-        F.size(uni) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(uni) - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(uni, i), F.element_at(uni, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = F.concat(uni, big) if bigrams else uni
+    grams = F.concat(uni, word_ngrams("__toks", 2)) if bigrams else uni
     return toked.select("doc_id", F.explode(grams).alias("gram")).select(
         "doc_id", (_md5_u32(F.col("gram")) % n_buckets).cast("int").alias("bucket")
     )

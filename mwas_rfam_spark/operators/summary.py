@@ -265,11 +265,9 @@ def corpus_report(
     never shuffling a vocabulary- or corpus-sized key set — at 100 TB
     the report costs two scans, nothing else.
     """
-    from .dedup import _token_array, normalize_text
+    from .dedup import normalize_text
+    from .text import tokens
 
-    # _token_array drops boundary empties: trim() strips only spaces,
-    # so 'hello world\n' would otherwise count 3 tokens and a '\n'-only
-    # doc would count as 2-token non-empty
     # no id projection: nothing below aggregates per doc, and selecting
     # id_col made the report CLI (which exposes no --id-col flag) crash
     # on any corpus without a 'doc_id' column (r12 review finding).
@@ -282,7 +280,7 @@ def corpus_report(
     # >= 1 NULL doc and >= 1 empty doc reported duplicates dedup_exact
     # will never find.
     profile = docs.select(
-        F.size(_token_array(F.col(text_col))).alias("__n_toks"),
+        F.size(tokens(F.col(text_col))).alias("__n_toks"),
         F.md5(normalize_text(F.col(text_col))).alias("__h"),
     )
     doc_stats = profile.agg(
@@ -309,11 +307,8 @@ def corpus_report(
             4,
         ),
     ).drop("__distinct_docs")
-    # same _token_array definition as the doc-stats arm — two local
-    # tokenizers in one function is exactly the drift class the
-    # boundary-whitespace fix closed
     vocab = (
-        docs.select(F.explode(_token_array(F.lower(F.col(text_col)))).alias("t"))
+        docs.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("t"))
         .agg(F.approx_count_distinct("t").alias("vocab_est"))
     )
     # both sides are 1-row aggregates; the hint keeps the plan visibly

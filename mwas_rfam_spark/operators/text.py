@@ -23,16 +23,36 @@ _LANG_MARKERS = {
 
 
 def tokens(text_col: Column) -> Column:
-    """Whitespace tokens, boundary empties removed: `trim` strips only
-    spaces, so a text ending in \n or \t would otherwise contribute a
-    phantom '' token to every count and ratio (r11 review finding —
-    same fix as dedup._token_array). NULL text coalesces to the empty
-    array — size(NULL) is NULL and every count/ratio/fingerprint built
-    on it silently NULL-propagated, letting NULL-text garbage outscore
-    real prose in quality ranking (r11 review finding, verified)."""
+    """The one whitespace tokenizer: split on ``\\s+`` (ASCII
+    whitespace), boundary empties removed. `trim` strips only spaces,
+    so a text ending in \\n or \\t would otherwise contribute a phantom
+    '' token to every count and ratio, and fabricate n-grams like 'a b '
+    that match across documents on only n-1 real tokens. NULL text
+    coalesces to the empty array: size(NULL) is NULL, and every
+    count/ratio/fingerprint built on it would NULL-propagate, letting
+    NULL-text garbage outscore real prose in quality ranking."""
     return F.filter(
         F.split(F.coalesce(text_col, F.lit("")), r"\s+"),
         lambda t: t != F.lit(""),
+    )
+
+
+def word_ngrams(toks: str, n: int) -> Column:
+    """The one word-n-gram builder: the in-order array of space-joined
+    n-grams of the token array in column ``toks``, empty below n tokens.
+
+    ``toks`` names an already-projected column, never an expression:
+    Catalyst does no common-subexpression elimination inside lambda
+    bodies, so an inlined ``tokens(...)`` would re-split the full text
+    per ``element_at`` (n×(tokens-n) splits per doc, measured 7× slower).
+    The guard is a CASE around the whole sequence: ``sequence(0, size-n)``
+    with a negative end counts DOWN ([0,-1]), and ``element_at(_, 0)``
+    then throws under ANSI mode (on by default in Spark 4)."""
+    t = f"`{toks}`"
+    parts = "".join(f", element_at({t}, i + {j})" for j in range(1, n + 1))
+    return F.expr(
+        f"transform(CASE WHEN size({t}) >= {n} THEN sequence(0, size({t}) - {n}) "
+        f"ELSE CAST(array() AS array<int>) END, i -> concat_ws(' '{parts}))"
     )
 
 
@@ -283,6 +303,22 @@ def redact_pii_docs(
 # ---------------------------------------------------------------------------
 
 
+def _bigrams(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(did, w1, w2): one row per bigram of each document's lowercased
+    whitespace tokens, with a <s> sentinel so the first word is scored
+    too — the one bigram stream the model's counts and its scoring share."""
+    toks = docs.select(
+        F.col(id_col).alias("did"),
+        F.concat(F.array(F.lit("<s>")), tokens(F.lower(F.col(text_col)))).alias("toks"),
+    )
+    return toks.select(
+        "did",
+        F.explode(
+            F.expr("transform(slice(toks, 1, size(toks) - 1), (w, i) -> struct(w as w1, toks[i + 1] as w2))")
+        ).alias("bg"),
+    ).select("did", "bg.w1", "bg.w2")
+
+
 def train_bigram_counts(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
@@ -290,18 +326,9 @@ def train_bigram_counts(
 
     Returns (bigrams, unigrams): (w1, w2, cnt) and (w1, cnt). One
     explode + two groupBys (map-side combine shrinks both exchanges to
-    distinct keys per partition). Tokens are lowercased whitespace
-    tokens with a <s> sentinel so the first word is scored too.
+    distinct keys per partition).
     """
-    toks = docs.select(
-        F.col(id_col).alias("did"),
-        F.concat(F.array(F.lit("<s>")), tokens(F.lower(F.col(text_col)))).alias("toks"),
-    )
-    big = toks.select(
-        F.explode(
-            F.expr("transform(slice(toks, 1, size(toks) - 1), (w, i) -> struct(w as w1, toks[i + 1] as w2))")
-        ).alias("bg")
-    ).select("bg.w1", "bg.w2")
+    big = _bigrams(docs, text_col, id_col)
     bigrams = big.groupBy("w1", "w2").agg(F.count("*").alias("cnt"))
     unigrams = big.groupBy("w1").agg(F.count("*").alias("cnt"))
     return bigrams, unigrams
@@ -328,18 +355,9 @@ def bigram_logprob(
     """
     if vocab_size is None:
         vocab_size = bigrams.select("w2").distinct().count() or 1
-    toks = docs.select(
-        F.col(id_col).alias("did"),
-        F.concat(F.array(F.lit("<s>")), tokens(F.lower(F.col(text_col)))).alias("toks"),
-    )
-    big = toks.select(
-        "did",
-        F.explode(
-            F.expr("transform(slice(toks, 1, size(toks) - 1), (w, i) -> struct(w as w1, toks[i + 1] as w2))")
-        ).alias("bg"),
-    ).select("did", "bg.w1", "bg.w2")
     joined = (
-        big.join(bigrams.withColumnRenamed("cnt", "cnt_bg"), ["w1", "w2"], "left")
+        _bigrams(docs, text_col, id_col)
+        .join(bigrams.withColumnRenamed("cnt", "cnt_bg"), ["w1", "w2"], "left")
         .join(unigrams.withColumnRenamed("cnt", "cnt_u"), ["w1"], "left")
         .select(
             "did",
@@ -406,12 +424,7 @@ def repetition_profile(
     )
     # one unit row per line (n=0) and per n-gram occurrence (n=size)
     gram_arrays = [
-        F.expr(
-            f"CASE WHEN size(__toks) >= {n} THEN "
-            f"transform(sequence(1, size(__toks) - {n} + 1), "
-            f"i -> struct({n} AS n, concat_ws(' ', slice(__toks, i, {n})) AS gram)) "
-            f"ELSE array() END"
-        )
+        F.transform(word_ngrams("__toks", n), lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram")))
         for n in all_ns
     ]
     units = staged.select(

@@ -69,8 +69,7 @@ def _hive_partition_dir(spark, partition_col: str, value) -> str:
     partition value: null → ``__HIVE_DEFAULT_PARTITION__``, unsafe
     chars %-escaped (Hive path escaping). Asks the JVM's own
     ``ExternalCatalogUtils.escapePathName`` so the rule can never drift
-    from the writer; the except branch is a transcription of the same
-    charset for environments where the catalyst class is unreachable.
+    from the writer.
     """
     if value is None:
         return f"{partition_col}=__HIVE_DEFAULT_PARTITION__"
@@ -107,14 +106,7 @@ def _hive_partition_dir(spark, partition_col: str, value) -> str:
                 s += ("." + f"{value.microsecond:06d}").rstrip("0")
         else:
             s = str(value)
-    try:
-        esc = (
-            spark._jvm.org.apache.spark.sql.catalyst.catalog
-            .ExternalCatalogUtils.escapePathName(s)
-        )
-    except Exception:
-        unsafe = set('"#%\'*/:=?\\{[]^') | {chr(c) for c in range(0x20)} | {chr(0x7F)}
-        esc = "".join(f"%{ord(ch):02X}" if ch in unsafe else ch for ch in s)
+    esc = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(s)
     return f"{partition_col}={esc}"
 
 

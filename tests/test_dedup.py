@@ -1,6 +1,8 @@
 """Dedup operator tests: planted duplicates must be found, distinct docs
 must not collide."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -275,15 +277,26 @@ def test_jaccard_pairs_plan_has_no_cartesian(docs):
 
 def test_word_shingles_short_docs(spark):
     """Docs with fewer than n tokens must yield zero shingles — not an
-    ANSI INVALID_ARRAY_INDEX_IN_ELEMENT_AT from sequence(0, -1)."""
-    rows = [(1, "only two"), (2, "one"), (3, ""), (4, "exactly four tokens here")]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    sh = word_shingles(docs, n=3).collect()
-    by_id = {}
-    for r in sh:
-        by_id.setdefault(r["id"], set()).add(r["shingle"])
-    assert set(by_id) == {4}
-    assert by_id[4] == {"exactly four tokens", "four tokens here"}
+    ANSI INVALID_ARRAY_INDEX_IN_ELEMENT_AT from sequence(0, -1). NULL
+    text, a trailing newline and mixed whitespace shingle like the
+    ASCII-whitespace split."""
+    rows = [
+        (1, "only two"), (2, "one"), (3, ""), (4, "exactly four tokens here"),
+        (5, None), (6, "a b\n"), (7, "\tx  y\x0bz\fx y\r\n"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for n in (1, 3):
+        by_id = {}
+        for r in word_shingles(docs, n=n).collect():
+            by_id.setdefault(r["id"], set()).add(r["shingle"])
+        want = {}
+        for i, text in rows:
+            toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", text or "") if t]
+            grams = {" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)}
+            if grams:
+                want[i] = grams
+        assert by_id == want, n
+    assert want[4] == {"exactly four tokens", "four tokens here"}
     # the downstream pipelines must survive a short-doc corpus too
     assert ngram_jaccard_pairs(docs, n=3, threshold=0.5).count() == 0
     assert minhash_lsh_pairs(docs, num_hashes=16, bands=4, n=3).count() == 0

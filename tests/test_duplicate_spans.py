@@ -61,7 +61,7 @@ def test_matches_duckdb(spark, sf_dir):
         for r in con.sql(
             f"""
             WITH toks AS (
-              -- list_filter mirrors _token_array: boundary empties from
+              -- list_filter mirrors text.tokens: boundary empties from
               -- non-space whitespace must not fabricate phantom grams
               SELECT doc_id,
                      list_filter(string_split_regex(trim(text), '\\s+'),

@@ -1,9 +1,16 @@
 """Text-analysis operator unit tests."""
 
+import ast
+import pathlib
+import re
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
-from mwas_rfam_spark.operators.text import text_profile
+from mwas_rfam_spark.operators.text import text_profile, tokens, word_ngrams
+
+PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "mwas_rfam_spark"
 
 ROWS = [
     (1, "the cat and the dog sat in the garden of the house"),  # english
@@ -601,3 +608,126 @@ def test_text_r11_review_guards(spark):
     red = {r["doc_id"]: r for r in redact_pii_docs(pii).collect()}
     assert "[PHONE]" in red[1]["text"] and red[1]["n_redactions"] == 1
     assert red[2]["n_redactions"] == 0
+
+
+# --- the one whitespace tokenizer and the one word-n-gram builder ----------
+
+# NULL, empty, a trailing newline, every ASCII whitespace character, fewer
+# tokens than n, and characters Java's \s does not split on (NBSP, \x1c)
+EDGE_ROWS = [
+    (1, None),
+    (2, ""),
+    (3, "a b\n"),
+    (4, " \t\nx  y\x0bz\fw\r v\n\n"),
+    (5, "One two"),
+    (6, "solo"),
+    (7, "a b a b a b c d e f"),
+    (8, "\u00a0nbsp\u00a0inside p\x1cq r"),
+]
+
+
+def ref_tokens(text):
+    """Pure-Python reference: split on ASCII whitespace, drop empties."""
+    return [t for t in re.split(r"[ \t\n\x0b\f\r]+", text or "") if t]
+
+
+def ref_ngrams(text, n):
+    toks = ref_tokens(text)
+    return [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+
+@pytest.fixture(scope="module")
+def edge_docs(spark):
+    return spark.createDataFrame(EDGE_ROWS, "doc_id long, text string")
+
+
+def test_tokens_and_word_ngrams_match_the_reference(edge_docs):
+    ns = (1, 2, 3, 5)
+    out = edge_docs.select("doc_id", "text", tokens(F.col("text")).alias("toks")).select(
+        "text", "toks", *[word_ngrams("toks", n).alias(f"g{n}") for n in ns]
+    )
+    for r in out.collect():
+        assert r["toks"] == ref_tokens(r["text"]), r["text"]
+        for n in ns:
+            assert r[f"g{n}"] == ref_ngrams(r["text"], n), (r["text"], n)
+
+
+def test_ngram_consumers_match_the_reference(edge_docs):
+    """Positional n-grams, BM25 tokens and the repetition profile's gram
+    statistics, all against the reference."""
+    from mwas_rfam_spark.operators.dedup import _positional_ngrams
+    from mwas_rfam_spark.operators.retrieval import _lowered_tokens
+    from mwas_rfam_spark.operators.text import repetition_profile
+
+    texts = dict(EDGE_ROWS)
+    for n in (1, 3, 5):
+        got = {}
+        for r in _positional_ngrams(edge_docs, n, "text", "doc_id").collect():
+            got.setdefault(r["id"], []).append((r["pos"], r["span"]))
+        want = {i: list(enumerate(ref_ngrams(t, n), 1)) for i, t in texts.items()}
+        assert {i: sorted(v) for i, v in got.items()} == {i: v for i, v in want.items() if v}
+
+    for r in edge_docs.select("doc_id", _lowered_tokens("text").alias("bm25")).collect():
+        assert r["bm25"] == ref_tokens((texts[r["doc_id"]] or "").lower())
+
+    profile = repetition_profile(edge_docs, ngram_sizes=(1, 3), dup_ngram_sizes=(1, 5))
+    for r in profile.collect():
+        text = texts[r["doc_id"]] or ""
+        chars = max(len(text), 1)
+        for n in (1, 3):
+            counts = Counter(ref_ngrams(text, n))
+            top = max(((c, c * len(g)) for g, c in counts.items()), default=(0, 0))[1]
+            assert r[f"top{n}gram_char_frac"] == pytest.approx(top / chars), (text, n)
+        for n in (1, 5):
+            dup = sum(c * len(g) for g, c in Counter(ref_ngrams(text, n)).items() if c >= 2)
+            assert r[f"dup{n}gram_char_frac"] == pytest.approx(dup / chars), (text, n)
+
+
+def _body(path, name):
+    fn = next(
+        node for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.FunctionDef) and node.name == name
+    )
+    return range(fn.lineno, fn.end_lineno + 1)
+
+
+def _called(node):
+    return isinstance(node, ast.Call) and getattr(node.func, "attr", getattr(node.func, "id", None))
+
+
+def test_one_tokenizer_and_one_ngram_builder_in_the_package():
+    """Text is split on ``\\s+`` only in text.tokens (tokenize.py's BPE
+    pre-split on Unicode whitespace is another tokenizer), and word
+    n-grams are rendered only in text.word_ngrams. An n-gram rendering is a
+    concat_ws/array_join over element_at/slice inside a per-position
+    lambda, in Python or in SQL text."""
+    text_py = PACKAGE / "operators" / "text.py"
+    allowed = {(text_py, n) for name in ("tokens", "word_ngrams") for n in _body(text_py, name)}
+    hits = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Constant, ast.JoinedStr)):
+                sql = "".join(
+                    v.value if isinstance(v, ast.Constant) else "{}"
+                    for v in (node.values if isinstance(node, ast.JoinedStr) else [node])
+                    if isinstance(v, ast.FormattedValue) or isinstance(v.value, str)
+                )
+                if re.search(r"\bsplit\(.*'\\+s\+'", sql) or (
+                    "->" in sql
+                    and re.search(r"concat_ws\(\s*' '|array_join\(", sql)
+                    and re.search(r"\b(element_at|slice)\(", sql)
+                ):
+                    hits.append((path, node.lineno))
+            elif _called(node) == "split" and any(
+                isinstance(a, ast.Constant) and a.value == r"\s+" for a in node.args
+            ):
+                hits.append((path, node.lineno))
+            elif isinstance(node, ast.Lambda):
+                hits += [
+                    (path, call.lineno)
+                    for call in ast.walk(node.body)
+                    if _called(call) in ("concat_ws", "array_join")
+                    and any(_called(sub) in ("element_at", "slice") for sub in ast.walk(call))
+                ]
+    assert [f"{p.relative_to(PACKAGE)}:{n}" for p, n in hits if (p, n) not in allowed] == []

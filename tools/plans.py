@@ -15,8 +15,10 @@ broadcasts, no Python operator outside the statistical stages) and
 ``diff`` exports ``<rev>`` with ``git archive`` into a temp dir, dumps it
 and the working tree (each in its own subprocess, so each gets a fresh
 JVM), normalizes what differs from run to run (expression ids, RDD and
-plan ids, temp paths), prints a unified diff per differing plan and
-exits 1 when any plan differs or fails to build.
+plan ids, lambda variable names, temp paths, the plan a persisted pin
+prints under its ``InMemoryRelation``, node numbers), prints a unified
+diff per differing plan and exits 1 when any plan differs or fails to
+build.
 
 Both read the test data from ``--sf-dir`` (default
 ``$SPARK_GRAFT_SF_DIR``).
@@ -39,17 +41,73 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _RUN_SPECIFIC = [
     (re.compile(r"#\d+"), "#N"),  # expression ids: id#123L
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    (re.compile(r"\b([xyz])_\d+(?=#N)"), r"\1_N"),  # PySpark lambda variables: x_15#N
     (re.compile(r"(RDD|Relation)\[\d+\]"), r"\1[N]"),  # MapPartitionsRDD[42]
     (re.compile(r"(file:)?" + re.escape(tempfile.gettempdir()) + r"/[^\s,\]\)]*"), "<tmp>"),
 ]
 
 
+_NODE_ID = re.compile(r"(?<= )\((\d+)\)|^\((\d+)\)(?= )", re.M)
+
+
+def _ids(line: str) -> list[int]:
+    return [int(a or b) for a, b in _NODE_ID.findall(line)]
+
+
+def _drop_cached_plans(plan: str) -> str:
+    """Replace the plan under each ``InMemoryRelation`` with ``<cached
+    plan>`` and drop its detail entries. A persisted pin prints the AQE
+    final plan it ran with, which flips between a shuffle stage and a
+    broadcast join from run to run, and a pin planned over it inherits
+    that choice's partitioning. Under relation (k) whose child is node
+    (m) with k < m, the subtree holds exactly the node ids k+1..m; a
+    later scan of the same relation prints that child (m) again."""
+    lines = plan.split("\n")
+    first_detail = next((i for i, l in enumerate(lines) if re.match(r"\(\d+\) ", l)), len(lines))
+    tree, details = lines[:first_detail], lines[first_detail:]
+    cached = [
+        (i + 1, int(rel[1]), _ids(tree[i + 1])[0])
+        for i in range(len(tree) - 1)
+        if (rel := re.search(r"InMemoryRelation \((\d+)\)$", tree[i])) and _ids(tree[i + 1])
+    ]
+    subtree: dict[int, range] = {}
+    for _, k, m in cached:
+        if k < m:
+            subtree.setdefault(m, range(k + 1, m + 1))
+    kept, end = [], 0
+    for child, _, m in cached:
+        if child < end:
+            continue
+        kept += tree[end:child]
+        kept.append(re.sub(r"\+- .*", "+- <cached plan>", tree[child]))
+        end = child + 1
+        while end < len(tree) and (
+            re.search(r"== (Final|Initial) Plan ==", tree[end])
+            or (_ids(tree[end]) and all(j in subtree.get(m, ()) for j in _ids(tree[end])))
+        ):
+            end += 1
+    kept += tree[end:]
+    drop = False
+    for line in details:
+        if re.match(r"\(\d+\) |=====", line):
+            drop = any(j in r for j in _ids(line) for r in subtree.values())
+        if not drop:
+            kept.append(line)
+    return "\n".join(kept)
+
+
 def normalize(plan: str) -> str:
-    """A plan with its run-specific ids and temp paths replaced, so two
-    dumps of the same query compare equal unless an operator changed."""
+    """A plan with its run-specific ids, temp paths and cached-plan
+    subtrees replaced, and its node ids renumbered in order of first
+    appearance, so two dumps of the same query compare equal unless an
+    operator changed."""
     for pattern, repl in _RUN_SPECIFIC:
         plan = pattern.sub(repl, plan)
-    return plan
+    plan = _drop_cached_plans(plan)
+    order: dict[str, int] = {}
+    return _NODE_ID.sub(
+        lambda mt: f"({order.setdefault(mt[1] or mt[2], len(order) + 1)})", plan
+    )
 
 
 def _mwas_t_only_full_lineage(spark, sf_dir):
