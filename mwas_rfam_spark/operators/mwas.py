@@ -35,12 +35,24 @@ from pyspark.sql import types as T
 
 from .. import pinning
 from ..config import DEFAULT_CONFIG, MwasConfig
-from ..functions.scalar import replace_zero_spots, rpm
+from ..functions.sqlexpr import sql_double
 from ..functions.stattests import (
     grouped_permutation_mean_diff,
     perm_chunk_rows,
     student_t_sf,
 )
+
+
+# Every projection, filter and aggregate list below is parsed SQL text:
+# it costs one py4j round trip per expression, where a Column tree costs
+# one per operator, and a request builds this whole plan on the driver.
+def _exprs(*sql: str) -> list[Column]:
+    return [F.expr(e) for e in sql]
+
+
+def _named_exprs(**sql: str) -> dict[str, Column]:
+    return {name: F.expr(e) for name, e in sql.items()}
+
 
 def release_mwas_persists() -> int:
     """Alias of :func:`..pinning.release`: unpersist the current pin
@@ -69,26 +81,33 @@ def resolve_and_normalize(
     subset, mg:467).
     """
     catalog = catalog_df.withColumn(
-        "spots", replace_zero_spots(F.col("spots"), cfg.zero_spots_replacement)
+        # spots == 0 → the sentinel replacement (mg:180)
+        "spots",
+        F.expr(
+            f"CASE WHEN spots = 0 THEN {sql_double(cfg.zero_spots_replacement)}"
+            " ELSE spots END"
+        ),
     )
     joined = input_df.join(catalog, "run", "left")
-    quantifier = F.coalesce(F.col("quantifier"), F.lit(0.0))  # fillna, mg:577
-    rpm_col = (
+    quantifier = "coalesce(quantifier, 0.0D)"  # fillna, mg:577
+    # reads per million, quantifier / spots * 1e6 (old/mwas_rfam.py:255;
+    # mg:510-511 divides by spots*1e6 in its multi-run branch, a known
+    # quirk, SURVEY.md §2.7 F2); zero spots yields 0
+    rpm = (
         quantifier
         if cfg.already_normalized
-        else rpm(quantifier, F.col("spots"), cfg.normalizing_const)
+        else f"CASE WHEN spots != 0 THEN {quantifier} / spots * "
+        f"{sql_double(cfg.normalizing_const)} ELSE 0.0D END"
     )
     if cfg.blacklist:
         joined = joined.filter(~F.col("bio_project").isin(list(cfg.blacklist)))
-    return joined.filter(
-        F.col("bio_project").isNotNull() & F.col("bio_sample").isNotNull()
-    ).select(
-        "bio_project",
-        "bio_sample",
-        "run",
-        "group",
-        rpm_col.alias("rpm"),
-        *[c for c in input_df.columns if c not in ("run", "group", "quantifier")],
+    rest = [
+        "`" + c.replace("`", "``") + "`"
+        for c in input_df.columns
+        if c not in ("run", "group", "quantifier")
+    ]
+    return joined.where("bio_project IS NOT NULL AND bio_sample IS NOT NULL").selectExpr(
+        "bio_project", "bio_sample", "run", "`group`", f"{rpm} AS rpm", *rest
     )
 
 
@@ -97,7 +116,7 @@ def biosample_rollup(resolved: DataFrame) -> DataFrame:
     (mg:503-518: np.mean of per-run normalized values), plus the run
     count ``n_runs`` the group skip rule sums."""
     return resolved.groupBy("bio_project", "group", "bio_sample").agg(
-        F.avg("rpm").alias("rpm"), F.count("*").alias("n_runs")
+        *_exprs("avg(rpm) AS rpm", "count(*) AS n_runs")
     )
 
 
@@ -113,7 +132,7 @@ def group_skip_flags(rollup: DataFrame, cfg: MwasConfig) -> DataFrame:
         cfg.group_nonzeros_threshold if cfg.implicit_zeros else cfg.min_cohort_for_permutation
     )
     return rollup.groupBy("bio_project", "group").agg(
-        (F.sum("n_runs") < F.lit(threshold)).alias("skip_tests")
+        F.expr(f"sum(n_runs) < {threshold} AS skip_tests")
     )
 
 
@@ -139,104 +158,74 @@ def cohort_stats(
     Output grain: one row per (bio_project, group, set_id) with
     n_true/n_false/mean/sd per side plus labels and membership arrays.
     """
-    ref_long = ref_df.select(
-        "bioproject", F.explode("biosamples_ref").alias("bio_sample")
-    )
+    ref_long = ref_df.selectExpr("bioproject", "explode(biosamples_ref) AS __ref_bs")
     # restrict to biosamples present in the metadata (missing-biosample
     # path, mg:496-499)
     obs = rollup.join(
-        ref_long,
-        (rollup.bio_project == ref_long.bioproject)
-        & (rollup.bio_sample == ref_long.bio_sample),
-        "inner",
-    ).select(rollup.bio_project, rollup.group, rollup.bio_sample, rollup.rpm)
+        ref_long, F.expr("bio_project = bioproject AND bio_sample = __ref_bs")
+    ).selectExpr("bio_project", "`group`", "bio_sample", "rpm")
 
     group_stats = obs.groupBy("bio_project", "group").agg(
-        F.count("*").alias("n_obs"),
-        F.sum("rpm").alias("sum_all"),
-        F.sum(F.col("rpm") * F.col("rpm")).alias("ss_all"),
+        *_exprs("count(*) AS n_obs", "sum(rpm) AS sum_all", "sum(rpm * rpm) AS ss_all")
     )
 
-    sets_meta = sets_df.select(
-        "bioproject",
-        "set_id",
-        "attributes",
-        "values",
-        "include",
-        "members",
-        F.size("members").alias("n_members"),
+    sets_meta = sets_df.selectExpr(
+        "bioproject", "set_id", "attributes", "`values`", "include", "members",
+        "size(members) AS n_members",
     )
 
-    membership = sets_meta.select(
-        "bioproject", "set_id", F.explode("members").alias("bio_sample")
-    )
+    membership = sets_meta.selectExpr("bioproject", "set_id", "explode(members) AS __m_bs")
     member_obs = (
-        membership.join(
-            obs,
-            (membership.bioproject == obs.bio_project)
-            & (membership.bio_sample == obs.bio_sample),
-        )
+        membership.join(obs, F.expr("bioproject = bio_project AND __m_bs = bio_sample"))
         .groupBy("bioproject", "group", "set_id")
-        .agg(
-            F.count("*").alias("n_obs_m"),
-            F.sum("rpm").alias("sum_m"),
-            F.sum(F.col("rpm") * F.col("rpm")).alias("ss_m"),
-        )
+        .agg(*_exprs("count(*) AS n_obs_m", "sum(rpm) AS sum_m", "sum(rpm * rpm) AS ss_m"))
     )
 
-    n_all = F.col("n") if cfg.implicit_zeros else F.col("n_obs")
-    n_m = F.col("n_members") if cfg.implicit_zeros else F.col("n_obs_m")
+    n_all = "n" if cfg.implicit_zeros else "n_obs"
+    n_m = "n_members" if cfg.implicit_zeros else "n_obs_m"
 
     # minority side = the members; the true side is the minority for
-    # include sets and its complement (total − minority) otherwise
+    # include sets and its complement (total − minority) otherwise. The
+    # first projection is `na.fill`'s: a double NaN fills like a NULL.
     pairs = (
         sets_meta.join(ref_df.select("bioproject", "n"), "bioproject")
-        .join(
-            group_stats,
-            sets_meta.bioproject == group_stats.bio_project,
-        )
+        .join(group_stats, F.expr("bioproject = bio_project"))
         .join(member_obs, ["bioproject", "group", "set_id"], "left")
-        .na.fill({"n_obs_m": 0, "sum_m": 0.0, "ss_m": 0.0})
         .withColumns(
-            {
-                "n_true": F.when(F.col("include"), n_m).otherwise(n_all - n_m),
-                "sum_true": F.when(F.col("include"), F.col("sum_m")).otherwise(
-                    F.col("sum_all") - F.col("sum_m")
-                ),
-                "ss_true": F.when(F.col("include"), F.col("ss_m")).otherwise(
-                    F.col("ss_all") - F.col("ss_m")
-                ),
-            }
+            _named_exprs(
+                n_obs_m="coalesce(n_obs_m, 0L)",
+                sum_m="coalesce(nanvl(sum_m, NULL), 0.0D)",
+                ss_m="coalesce(nanvl(ss_m, NULL), 0.0D)",
+            )
+        )
+        .withColumns(
+            _named_exprs(
+                n_true=f"CASE WHEN include THEN {n_m} ELSE {n_all} - {n_m} END",
+                sum_true="CASE WHEN include THEN sum_m ELSE sum_all - sum_m END",
+                ss_true="CASE WHEN include THEN ss_m ELSE ss_all - ss_m END",
+            )
         )
     )
-    n_true, sum_true, ss_true = F.col("n_true"), F.col("sum_true"), F.col("ss_true")
-    n_false = n_all - n_true
-    sum_false = F.col("sum_all") - sum_true
-    ss_false = F.col("ss_all") - ss_true
+    n_false = f"({n_all} - n_true)"
 
-    def _mean(s: Column, n: Column) -> Column:
-        return F.when(n > 0, s / n).otherwise(F.lit(None))
+    def _mean(s: str, n: str) -> str:
+        return f"CASE WHEN {n} > 0 THEN {s} / {n} ELSE NULL END"
 
-    def _sd(ss: Column, s: Column, n: Column) -> Column:
-        mean = s / n
-        var = F.greatest(ss / n - mean * mean, F.lit(0.0))
-        return F.when(n > 0, F.sqrt(var)).otherwise(F.lit(None))
+    def _sd(ss: str, s: str, n: str) -> str:
+        mean = f"({s} / {n})"
+        return (
+            f"CASE WHEN {n} > 0 THEN sqrt(greatest({ss} / {n} - {mean} * {mean}, 0.0D))"
+            " ELSE NULL END"
+        )
 
-    return pairs.select(
-        F.col("bioproject").alias("bio_project"),
-        "group",
-        "set_id",
-        "attributes",
-        "values",
-        "include",
-        "members",
-        "n_obs_m",
-        "n_true",
-        n_false.alias("n_false"),
-        _mean(sum_true, n_true).alias("mean_rpm_true"),
-        _mean(sum_false, n_false).alias("mean_rpm_false"),
-        _sd(ss_true, sum_true, n_true).alias("sd_rpm_true"),
-        _sd(ss_false, sum_false, n_false).alias("sd_rpm_false"),
+    return pairs.selectExpr(
+        "bioproject AS bio_project", "`group`", "set_id", "attributes", "`values`",
+        "include", "members", "n_obs_m", "n_true",
+        f"{n_false} AS n_false",
+        f"{_mean('sum_true', 'n_true')} AS mean_rpm_true",
+        f"{_mean('(sum_all - sum_true)', n_false)} AS mean_rpm_false",
+        f"{_sd('ss_true', 'sum_true', 'n_true')} AS sd_rpm_true",
+        f"{_sd('(ss_all - ss_true)', '(sum_all - sum_true)', n_false)} AS sd_rpm_false",
     )
 
 
@@ -358,33 +347,33 @@ def _welch_columns(df: DataFrame) -> DataFrame:
     * a single-observation cohort (population SD 0 by definition) makes
       its df denominator term 0/0 = NaN in numpy → df 1 here (the NULL
       branch folds through the existing coalesce)."""
-    vn1 = F.col("sd_rpm_true") ** 2 / F.col("n_true")
-    vn2 = F.col("sd_rpm_false") ** 2 / F.col("n_false")
-    vsum = vn1 + vn2
-    md = F.col("mean_rpm_true") - F.col("mean_rpm_false")
-    # Outer isNotNull gate: NULL stats must yield NULL t, never ±inf.
+    vn1 = "(power(sd_rpm_true, 2) / n_true)"
+    vn2 = "(power(sd_rpm_false, 2) / n_false)"
+    vsum = f"({vn1} + {vn2})"
+    md = "(mean_rpm_true - mean_rpm_false)"
+    # Outer IS NOT NULL gate: NULL stats must yield NULL t, never ±inf.
     # Without it, a NULL vsum (any NULL sd) makes `vsum > 0` NULL and
     # the chain falls through to the sign-of-md branches — today NULL
     # sd co-occurs with NULL means so md is NULL too and the branches
     # stay NULL, but an upstream change yielding non-NULL means with
     # NULL sds would silently mint ±inf significance (r12 advice).
-    t = F.when(
-        vsum.isNotNull() & md.isNotNull(),
-        F.when(vsum > 0, md / F.sqrt(vsum))
-        .when(md > 0, F.lit(float("inf")))
-        .when(md < 0, F.lit(float("-inf")))
-        .otherwise(F.lit(float("nan"))),
+    t = (
+        f"CASE WHEN {vsum} IS NOT NULL AND {md} IS NOT NULL THEN "
+        f"CASE WHEN {vsum} > 0 THEN {md} / sqrt({vsum}) "
+        f"WHEN {md} > 0 THEN {sql_double(np.inf)} "
+        f"WHEN {md} < 0 THEN {sql_double(-np.inf)} "
+        f"ELSE {sql_double(np.nan)} END END"
     )
     # n==1 ⟹ population SD 0 ⟹ vn 0 ⟹ numpy 0/0 = NaN term: NULL here,
     # nulling the whole df expression into the coalesce(., 1.0) below —
     # exactly numpy's isnan(df) → 1.0 replacement. When vsum > 0 and
     # both n > 1, the denominator is strictly positive (the nonzero vn
     # contributes a positive term), so the division is ANSI-safe.
-    den1 = F.when(F.col("n_true") > 1, vn1**2 / (F.col("n_true") - 1))
-    den2 = F.when(F.col("n_false") > 1, vn2**2 / (F.col("n_false") - 1))
-    dfree = F.when(vsum > 0, vsum**2 / (den1 + den2))
-    return df.withColumns(
-        {"test_statistic": t, "welch_df": F.coalesce(dfree, F.lit(1.0))}
+    den1 = f"CASE WHEN n_true > 1 THEN power({vn1}, 2) / (n_true - 1) END"
+    den2 = f"CASE WHEN n_false > 1 THEN power({vn2}, 2) / (n_false - 1) END"
+    dfree = f"CASE WHEN {vsum} > 0 THEN power({vsum}, 2) / (({den1}) + ({den2})) END"
+    return df.selectExpr(
+        "*", f"{t} AS test_statistic", f"coalesce({dfree}, 1.0D) AS welch_df"
     )
 
 
@@ -405,26 +394,19 @@ def run_tests(
     buffer's size; Welch and skipped rows carry 0 (SURVEY.md §2.8 T5
     excludes both columns from value comparison).
     """
-    flags = skip_flags.select(
-        F.col("bio_project").alias("sf_bp"),
-        F.col("group").alias("sf_g"),
-        "skip_tests",
-    )
+    flags = skip_flags.selectExpr("bio_project AS sf_bp", "`group` AS sf_g", "skip_tests")
     base = (
-        stats_df.join(
-            flags,
-            (stats_df.bio_project == flags.sf_bp) & (stats_df.group == flags.sf_g),
-            "left",
-        )
+        stats_df.join(flags, F.expr("bio_project = sf_bp AND `group` = sf_g"), "left")
         .drop("sf_bp", "sf_g")
-        .na.fill({"skip_tests": True})
         # row-level skip rules (mg:376-389)
-        .filter(
-            (F.col("n_true") >= cfg.min_cohort_size)
-            & (F.col("n_false") >= cfg.min_cohort_size)
+        .where(
+            f"n_true >= {cfg.min_cohort_size} AND n_false >= {cfg.min_cohort_size}"
+            " AND NOT (mean_rpm_true = 0 AND mean_rpm_false = 0)"
         )
-        .filter(~((F.col("mean_rpm_true") == 0) & (F.col("mean_rpm_false") == 0)))
-        .withColumn("skip_tests", F.col("skip_tests") | F.lit(cfg.skip_tests))
+        .withColumn(
+            "skip_tests",
+            F.expr(f"coalesce(skip_tests, true) OR {str(cfg.skip_tests).lower()}"),
+        )
     )
     # the kernel input, the pooled-vector eligibility and the final join
     # all consume `base`; without pinning, each re-executes the full
@@ -432,24 +414,20 @@ def run_tests(
     base = pinning.pin(base, "run_tests:base")
 
     use_t_test = (
-        F.least(F.col("n_true"), F.col("n_false")) < cfg.min_cohort_for_permutation
-    ) | F.lit(cfg.t_test_only)
+        f"(least(n_true, n_false) < {cfg.min_cohort_for_permutation}"
+        f" OR {str(cfg.t_test_only).lower()})"
+    )
 
     # one row per tested cohort: Welch t/df from SQL for t-test rows, the
     # observed mean difference for permutation rows. The kernel needs only
     # (pooled group values, per-set cohort size, per-set observed mean
     # difference) — the per-set true/false VALUE arrays the reference
     # materializes (mg:365-372) are never built.
-    tested = _welch_columns(base.filter(~F.col("skip_tests"))).select(
-        "bio_project",
-        "group",
-        "set_id",
-        "n_true",
-        "n_false",
-        use_t_test.alias("is_t"),
-        F.when(use_t_test, F.col("test_statistic"))
-        .otherwise(F.col("mean_rpm_true") - F.col("mean_rpm_false"))
-        .alias("stat"),
+    tested = _welch_columns(base.where("NOT skip_tests")).selectExpr(
+        "bio_project", "`group`", "set_id", "n_true", "n_false",
+        f"{use_t_test} AS is_t",
+        f"CASE WHEN {use_t_test} THEN test_statistic"
+        " ELSE mean_rpm_true - mean_rpm_false END AS stat",
         "welch_df",
     )
     # pooled vectors ONLY for permutation-eligible groups: without the
@@ -462,23 +440,21 @@ def run_tests(
     # ambiguous-self-join analyzer when lineage is not checkpoint-cut
     # under t_test_only `is_t` is the literal true, so Catalyst folds
     # this side to an empty relation and never builds the aggregation.
-    eligible = tested.filter(~F.col("is_t")).select(
-        F.col("bio_project").alias("__e_bp"), F.col("group").alias("__e_g")
-    ).distinct()
+    eligible = (
+        tested.where("NOT is_t")
+        .selectExpr("bio_project AS __e_bp", "`group` AS __e_g")
+        .distinct()
+    )
     group_vals = (
         rollup.join(
-            eligible,
-            (rollup.bio_project == F.col("__e_bp"))
-            & (rollup.group == F.col("__e_g")),
-            "left_semi",
+            eligible, F.expr("bio_project = __e_bp AND `group` = __e_g"), "left_semi"
         )
         .join(
-            ref_df.select("bioproject", F.explode("biosamples_ref").alias("bs")),
-            (rollup.bio_project == F.col("bioproject"))
-            & (rollup.bio_sample == F.col("bs")),
+            ref_df.selectExpr("bioproject", "explode(biosamples_ref) AS bs"),
+            F.expr("bio_project = bioproject AND bio_sample = bs"),
         )
         .groupBy("bio_project", "group")
-        .agg(F.collect_list("rpm").alias("obs_rpm"))
+        .agg(F.expr("collect_list(rpm) AS obs_rpm"))
     )
     if cfg.max_group_observations is not None:
         # the pooled vector is the one row bounded by biosamples-per-
@@ -489,26 +465,15 @@ def run_tests(
         # set in an oversized group never trips on a vector the kernel
         # would not consume — and the checked vector is never
         # replicated per set row.
+        cap = cfg.max_group_observations
         group_vals = group_vals.withColumn(
             "obs_rpm",
-            F.when(
-                F.size("obs_rpm") <= cfg.max_group_observations, F.col("obs_rpm")
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("pooled observed-value vector for ("),
-                        F.col("bio_project"),
-                        F.lit(", "),
-                        F.col("group"),
-                        F.lit(") has "),
-                        F.size("obs_rpm").cast("string"),
-                        F.lit(
-                            " elements, over max_group_observations="
-                            f"{cfg.max_group_observations}; raise the cap or "
-                            "pre-aggregate the input"
-                        ),
-                    )
-                ).cast("array<double>")
+            F.expr(
+                f"CASE WHEN size(obs_rpm) <= {cap} THEN obs_rpm ELSE CAST(raise_error("
+                "concat('pooled observed-value vector for (', bio_project, ', ', `group`,"
+                " ') has ', CAST(size(obs_rpm) AS STRING), ' elements, over "
+                f"max_group_observations={cap}; raise the cap or pre-aggregate the "
+                "input')) AS ARRAY<DOUBLE>) END"
             ),
         )
     # one Arrow-native kernel call per (bio_project, group) gives every
@@ -523,11 +488,7 @@ def run_tests(
     # to the rollup, and a cogroup (unlike a name-list join) has no
     # disambiguation rule for shared-lineage columns; cogroup matches
     # keys by POSITION, so the rename is free
-    gv = group_vals.select(
-        F.col("bio_project").alias("__gv_bp"),
-        F.col("group").alias("__gv_g"),
-        "obs_rpm",
-    )
+    gv = group_vals.selectExpr("bio_project AS __gv_bp", "`group` AS __gv_g", "obs_rpm")
     tested_p = (
         tested.repartition(n_part, "bio_project", "group")
         .groupBy("bio_project", "group")
@@ -542,18 +503,16 @@ def run_tests(
 
     # skipped rows (mg:390-394) and permutation rows without a pooled
     # vector find no kernel row: NULL statistic and p, zero telemetry
-    all_rows = base.join(tested_p, ["bio_project", "group", "set_id"], "left").select(
-        "bio_project", "group", "set_id", "attributes", "values", "include",
+    all_rows = base.join(tested_p, ["bio_project", "group", "set_id"], "left").selectExpr(
+        "bio_project", "`group`", "set_id", "attributes", "`values`", "include",
         "members", "n_true", "n_false", "mean_rpm_true", "mean_rpm_false",
         "sd_rpm_true", "sd_rpm_false",
-        F.col("stat").alias("test_statistic"),
-        F.col("p").alias("p_value"),
-        F.when(F.col("skip_tests"), F.lit("skipped_statistical_testing"))
-        .when(use_t_test, F.lit("t_test"))
-        .otherwise(F.lit("permutation_test"))
-        .alias("status"),
-        F.coalesce("kernel_seconds", F.lit(0.0)).alias("runtime_seconds"),
-        F.coalesce("kernel_bytes", F.lit(0)).cast("long").alias("memory_usage_bytes"),
+        "stat AS test_statistic",
+        "p AS p_value",
+        "CASE WHEN skip_tests THEN 'skipped_statistical_testing'"
+        f" WHEN {use_t_test} THEN 't_test' ELSE 'permutation_test' END AS status",
+        "coalesce(kernel_seconds, 0.0D) AS runtime_seconds",
+        "CAST(coalesce(kernel_bytes, 0) AS BIGINT) AS memory_usage_bytes",
     )
     return finalize_results(all_rows, ref_df, cfg)
 
@@ -577,21 +536,31 @@ def finalize_results(
     is gated by num_false and vice versa. We reproduce that pre-swap
     gating exactly.
     """
-    from ..functions.scalar import (
-        clean_csv_field,
-        log2_fold_change,
-        log2_fold_change_numeric,
-    )
-
-    significant = F.col("p_value") < cfg.p_value_threshold
+    significant = f"p_value < {sql_double(cfg.p_value_threshold)}"
     # legacy generation (old/mwas_rfam.py:100-111) emits numeric ±inf fold
-    # change; the main generation emits the sentinel strings (mg:325-336)
+    # change; the main generation emits the sentinel strings (mg:325-336):
+    # (0,0) → 0, true==0 → 'negative inf', false==0 → 'inf', else the
+    # log2 ratio
     legacy = cfg.legacy_output or cfg.legacy_13col
-    fc_fn = log2_fold_change_numeric if legacy else log2_fold_change
-    fc_null = F.lit(None).cast("double" if legacy else "string")
-    fold_change = F.when(
-        F.col("status") == "skipped_statistical_testing", fc_null
-    ).otherwise(fc_fn(F.col("mean_rpm_true"), F.col("mean_rpm_false")))
+    log2_ratio = "log2(mean_rpm_true / mean_rpm_false)"
+    if legacy:
+        zero, neg, pos, ratio = "0.0D", sql_double(-np.inf), sql_double(np.inf), log2_ratio
+    else:
+        zero, neg, pos, ratio = "'0'", "'negative inf'", "'inf'", f"CAST({log2_ratio} AS STRING)"
+    fold_change = (
+        "CASE WHEN status = 'skipped_statistical_testing'"
+        f" THEN CAST(NULL AS {'DOUBLE' if legacy else 'STRING'}) ELSE CASE"
+        f" WHEN mean_rpm_true = 0 AND mean_rpm_false = 0 THEN {zero}"
+        f" WHEN mean_rpm_true = 0 THEN {neg} WHEN mean_rpm_false = 0 THEN {pos}"
+        f" ELSE {ratio} END END"
+    )
+    # commas → spaces in output text fields (mg:441)
+    fields = (
+        "regexp_replace(attributes, ',', ' ') AS metadata_field",
+        "regexp_replace(`values`, ',', ' ') AS metadata_value",
+    )
+    counts = ("CAST(n_true AS INT) AS num_true", "CAST(n_false AS INT) AS num_false")
+    stats = ("mean_rpm_true", "mean_rpm_false", "sd_rpm_true", "sd_rpm_false")
 
     if cfg.legacy_13col:
         # the legacy generation's narrower column set (old/mwas_rfam.py:11-12
@@ -599,79 +568,49 @@ def finalize_results(
         # biosample-list columns — so no significant/rest fanout and no
         # biosamples_ref join are needed at all; this is a single projection
         # over the test results, globally p-sorted (old:369-370)
-        return rows.select(
-            F.col("bio_project").alias("bioproject_id"),
-            F.col("group").alias("family"),
-            clean_csv_field(F.col("attributes")).alias("metadata_field"),
-            clean_csv_field(F.col("values")).alias("metadata_value"),
-            F.col("n_true").cast("int").alias("num_true"),
-            F.col("n_false").cast("int").alias("num_false"),
-            "mean_rpm_true",
-            "mean_rpm_false",
-            "sd_rpm_true",
-            "sd_rpm_false",
-            fold_change.alias("fold_change"),
-            "test_statistic",
-            "p_value",
+        return rows.selectExpr(
+            "bio_project AS bioproject_id", "`group` AS family", *fields, *counts,
+            *stats, f"{fold_change} AS fold_change", "test_statistic", "p_value",
         ).orderBy(F.asc_nulls_last("p_value"))
 
     # two-branch fanout over `rows` — pin so the shared upstream
     # (including the permutation kernel) runs once
     rows = pinning.pin(rows, "finalize_results:rows")
 
-    too_many = F.lit("too many biosamples to list")
-    complement = F.array_except(F.col("biosamples_ref"), F.col("members"))
-    pre_true = F.when(
-        F.col("n_true") < cfg.max_listed_biosamples, F.array_join(F.col("members"), "; ")
-    ).otherwise(too_many)
-    pre_false = F.when(
-        F.col("n_false") < cfg.max_listed_biosamples, F.array_join(complement, "; ")
-    ).otherwise(too_many)
+    too_many = "'too many biosamples to list'"
+    pre_true = (
+        f"CASE WHEN n_true < {cfg.max_listed_biosamples}"
+        f" THEN array_join(members, '; ') ELSE {too_many} END"
+    )
+    pre_false = (
+        f"CASE WHEN n_false < {cfg.max_listed_biosamples}"
+        f" THEN array_join(array_except(biosamples_ref, members), '; ') ELSE {too_many} END"
+    )
 
     sig = (
-        rows.filter(significant)
+        rows.where(significant)
         .join(
-            ref_df.select(F.col("bioproject").alias("bio_project"), "biosamples_ref"),
+            ref_df.selectExpr("bioproject AS bio_project", "biosamples_ref"),
             "bio_project",
             "left",
         )
         .withColumns(
-            {
-                "status": F.concat(F.col("status"), F.lit("; significant")),
-                "fold_change": fold_change,
-                "true_biosamples": F.when(F.col("include"), pre_true).otherwise(pre_false),
-                "false_biosamples": F.when(F.col("include"), pre_false).otherwise(pre_true),
-            }
+            _named_exprs(
+                status="concat(status, '; significant')",
+                fold_change=fold_change,
+                true_biosamples=f"CASE WHEN include THEN {pre_true} ELSE {pre_false} END",
+                false_biosamples=f"CASE WHEN include THEN {pre_false} ELSE {pre_true} END",
+            )
         )
         .drop("biosamples_ref")
     )
-    rest = rows.filter(~significant | F.col("p_value").isNull()).withColumns(
-        {
-            "fold_change": fold_change,
-            "true_biosamples": F.lit(""),
-            "false_biosamples": F.lit(""),
-        }
+    rest = rows.where(f"NOT ({significant}) OR p_value IS NULL").withColumns(
+        _named_exprs(fold_change=fold_change, true_biosamples="''", false_biosamples="''")
     )
-    out = sig.unionByName(rest)
-    selected = out.select(
-        F.col("bio_project").alias("bioproject"),
-        "group",
-        clean_csv_field(F.col("attributes")).alias("metadata_field"),
-        clean_csv_field(F.col("values")).alias("metadata_value"),
-        "status",
-        "runtime_seconds",
-        "memory_usage_bytes",
-        F.col("n_true").cast("int").alias("num_true"),
-        F.col("n_false").cast("int").alias("num_false"),
-        "mean_rpm_true",
-        "mean_rpm_false",
-        "sd_rpm_true",
-        "sd_rpm_false",
-        "fold_change",
-        "test_statistic",
-        "p_value",
-        "true_biosamples",
-        "false_biosamples",
+    selected = sig.unionByName(rest).selectExpr(
+        "bio_project AS bioproject", "`group`", *fields, "status", "runtime_seconds",
+        "memory_usage_bytes", *counts, *stats, "fold_change", "test_statistic",
+        "p_value", "true_biosamples", "false_biosamples",
     )
     if cfg.legacy_output:
         # old/mwas_rfam.py:369-370 sorts the combined output by p-value

@@ -21,6 +21,8 @@ stories (inverted-index broadcast semi-join; codes-only ADC scan).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -141,14 +143,20 @@ def hybrid_search(
     )
 
 
+# the ASCII whitespace Java's \s matches in `text.tokens`; str.split()
+# would also split on NBSP and \x1c-\x1f, which stay inside a document
+# token, so such a query term could never match
+_ASCII_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
 def _normalize_terms(query_terms: list[str], caller: str) -> list[str]:
     """Query terms under the SAME rule documents are tokenized with
-    (lowercase, whitespace-split, empties dropped): a term carrying
+    (lowercase, ASCII-whitespace split, empties dropped): a term carrying
     whitespace ('pipeline ' / 'machine learning') can never equal a
     stored token, so it used to match NOTHING silently (r11 review
     finding) — multi-word inputs now contribute each word (BM25 is
     bag-of-words) and pure-whitespace inputs raise by name."""
-    terms = sorted({w for t in query_terms for w in t.lower().split()})
+    terms = sorted({w for t in query_terms for w in _ASCII_WS.split(t.lower()) if w})
     if not terms:
         raise ValueError(
             f"{caller}: query_terms {query_terms!r} contain no tokens "

@@ -8,6 +8,7 @@ schema normalization (positional rename, wide→long melt).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -70,12 +71,17 @@ def read_input_csv(spark: SparkSession, path: str, validate: bool = True) -> Dat
 
 def input_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """S8 — JSON request ingest (reference server.py:14-55 writes a temp CSV;
-    we build the DataFrame directly). A null or absent ``quantifier``
-    becomes NULL — INPUT_SCHEMA declares it nullable and every consumer
+    we build the DataFrame directly, as ONE Arrow table, so the request
+    plans as a driver-side ``LocalRelation``: a Python-list
+    ``createDataFrame`` plans a scan of a Python RDD, whose first job
+    waits on a Python worker). A null or absent ``quantifier`` becomes
+    NULL — INPUT_SCHEMA declares it nullable and every consumer
     coalesces NULL to 0 (streaming rpm, resolve_and_normalize) — instead
     of the former float(None) TypeError that surfaced as an HTTP 500
-    (r12 review finding); a row missing run/group is a clean RequestError
-    the server maps to a 400."""
+    (r12 review finding). A row missing run/group, or holding anything
+    but a string there (null, number, list, object), is a clean
+    RequestError the server maps to a 400: the Arrow path runs none of
+    Spark's row checks, and pyarrow's own type error would be a 500."""
     def _tup(r: dict):
         try:
             run, group = r["run"], r["group"]
@@ -83,6 +89,11 @@ def input_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
             raise RequestError(
                 f"request row missing required key {e.args[0]!r}: {r!r}"
             ) from None
+        for key, v in (("run", run), ("group", group)):
+            if not isinstance(v, str):
+                raise RequestError(
+                    f"request row key {key!r} must be a string, got {v!r}: {r!r}"
+                )
         q = r.get("quantifier")
         try:
             return (run, group, None if q is None else float(q))
@@ -91,7 +102,15 @@ def input_from_rows(spark: SparkSession, rows: list[dict]) -> DataFrame:
                 f"request row has non-numeric quantifier {q!r}: {r!r}"
             ) from None
 
-    return spark.createDataFrame([_tup(r) for r in rows], INPUT_SCHEMA)
+    runs, groups, quantifiers = zip(*map(_tup, rows)) if rows else ((), (), ())
+    table = pa.table(
+        {
+            "run": pa.array(runs, pa.string()),
+            "group": pa.array(groups, pa.string()),
+            "quantifier": pa.array(quantifiers, pa.float64()),
+        }
+    )
+    return spark.createDataFrame(table, INPUT_SCHEMA)
 
 
 def read_catalog_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -129,6 +129,10 @@ def make_server(
                              "results_location": "<parquet dir>"}
       GET  /healthz   → 200 {"ok": true}
 
+    The request rows enter as one Arrow table
+    (:func:`..sources.readers.input_from_rows`) and the reply rows leave
+    as Arrow batches (``toArrow``), not as pickled ``Row`` objects.
+
     ``max_inline_rows`` bounds the driver-side collect: a pathological
     request (huge input × many sets) must not OOM the server process,
     so past the cap the FULL result is written distributed to a
@@ -216,11 +220,12 @@ def make_server(
                     out = serve_request(
                         spark, rows, catalog_df, sets_df, ref_df, cfg
                     )
-                    # bounded collect: one extra row detects overflow
-                    # without ever materializing the unbounded
-                    # relation on the driver
-                    collected = out.limit(max_inline_rows + 1).collect()
-                    if len(collected) > max_inline_rows:
+                    # bounded Arrow collect: one extra row detects
+                    # overflow without ever materializing the unbounded
+                    # relation on the driver; the rows come back as
+                    # Arrow batches, not pickled Rows
+                    table = out.limit(max_inline_rows + 1).toArrow()
+                    if table.num_rows > max_inline_rows:
                         base = results_dir or tempfile.mkdtemp(
                             prefix="mwas_results_"
                         )
@@ -230,19 +235,16 @@ def make_server(
                         n_rows = spark.read.parquet(loc).count()
                         reply = {
                             "n": n_rows,
-                            "columns": out.columns,
+                            "columns": table.column_names,
                             "results_location": loc,
                         }
                     else:
                         reply = {
-                            "n": len(collected),
-                            "columns": out.columns,
+                            "n": table.num_rows,
+                            "columns": table.column_names,
                             "rows": [
-                                {
-                                    k: _json_safe(v)
-                                    for k, v in r.asDict().items()
-                                }
-                                for r in collected
+                                {k: _json_safe(v) for k, v in r.items()}
+                                for r in table.to_pylist()
                             ],
                         }
                     # the reply is built: the request's server-side work

@@ -1,4 +1,6 @@
 import os
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import pytest
 
@@ -47,6 +49,32 @@ def persisted_rdds(spark):
         return {int(i) for i in rdds if not rdds[i].rdd().isLocallyCheckpointed()}
 
     return read
+
+
+@pytest.fixture
+def py4j_round_trips(monkeypatch):
+    """``with py4j_round_trips() as n:`` counts the commands the driver
+    sends to the JVM inside the block, from every thread and including
+    py4j's proxy-delete messages; ``n.count`` holds the count."""
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+
+    @contextmanager
+    def counting():
+        n = SimpleNamespace(count=0)
+
+        def counted(self, command):
+            n.count += 1
+            return send(self, command)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+        try:
+            yield n
+        finally:
+            monkeypatch.setattr(ClientServerConnection, "send_command", send)
+
+    return counting
 
 
 @pytest.fixture(scope="session")

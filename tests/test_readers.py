@@ -5,6 +5,7 @@ query, so each hostile-input behavior is pinned here)."""
 import pytest
 from pyspark.sql import functions as F
 
+from mwas_rfam_spark.schemas import INPUT_SCHEMA
 from mwas_rfam_spark.sources.readers import (
     derive_spots_if_missing,
     input_from_rows,
@@ -68,6 +69,34 @@ def test_input_from_rows_null_and_missing_quantifier(spark):
     assert got == {"R1": None, "R2": None, "R3": 2.5}
     with pytest.raises(ValueError, match="missing required key 'group'"):
         input_from_rows(spark, [{"run": "R1", "quantifier": 1.0}])
+
+
+@pytest.mark.parametrize("key", ["run", "group"])
+@pytest.mark.parametrize("value", [None, 7, 2.5, True, ["x"], {"a": 1}])
+def test_input_from_rows_run_and_group_must_be_strings(spark, key, value):
+    """`run` and `group` are JSON strings: a null, number, list or object
+    is a RequestError (HTTP 400). Before, a null failed Spark's schema
+    check as a PySparkValueError (HTTP 500), 7 was stored as '7' and
+    ["x"] as "['x']"."""
+    from mwas_rfam_spark.sources.readers import RequestError
+
+    row = {"run": "R1", "group": "g", "quantifier": 1.0, key: value}
+    with pytest.raises(RequestError, match=f"{key!r} must be a string"):
+        input_from_rows(spark, [row])
+
+
+def test_input_from_rows_plans_as_a_local_relation(spark):
+    """The request is one Arrow table: its optimized plan is a
+    driver-side LocalRelation, not a scan of a Python RDD whose first
+    job waits on a Python worker."""
+    df = input_from_rows(
+        spark,
+        [{"run": "R1", "group": "g", "quantifier": 1.0}, {"run": "R2", "group": "g"}],
+    )
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert df.schema == INPUT_SCHEMA
+    assert [tuple(r) for r in df.collect()] == [("R1", "g", 1.0), ("R2", "g", None)]
 
 
 def test_input_csv_non_numeric_quantifier_clean_error(spark, tmp_path):

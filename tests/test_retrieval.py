@@ -458,3 +458,20 @@ def test_retrieval_r11_review_guards(spark, tmp_path):
     out = hybrid_search(docs, emb, "hi", [1.0, 0.0], k=3, n=3).collect()
     # semantic-only fusion; the zero-norm vector earns no RRF credit
     assert {r["doc_id"] for r in out} == {1, 2}
+
+
+def test_bm25_query_terms_split_like_document_tokens(spark):
+    """Query terms split on ASCII whitespace only, as `text.tokens`
+    splits documents: NBSP and the \\x1c-\\x1f separators stay inside a
+    token on both sides, so a query for a token holding one matches it
+    (``str.split()`` cut it in two and matched nothing)."""
+    from mwas_rfam_spark.operators.retrieval import _normalize_terms, bm25_topk
+
+    docs = spark.createDataFrame(
+        [(1, "café\xa0bar menu"), (2, "café bar"), (3, "x\x1cy")],
+        "doc_id long, text string",
+    )
+    got = {r["doc_id"] for r in bm25_topk(docs, ["café\xa0bar"], k=3).collect()}
+    assert got == {1}
+    assert {r["doc_id"] for r in bm25_topk(docs, ["X\x1cY"], k=3).collect()} == {3}
+    assert _normalize_terms([" A\tb\x0bc\x0cd\re\n"], "t") == ["a", "b", "c", "d", "e"]

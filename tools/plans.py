@@ -9,7 +9,9 @@ Usage:
 ``bench.HEADLINE`` entry plus ``mwas_full``; any ``bench_queries()`` name
 works, and so do ``mwas_t_only_full_lineage`` (``run_mwas`` without
 checkpoints, so the plan shows the whole relational spine: pushdown,
-broadcasts, no Python operator outside the statistical stages) and
+broadcasts, no Python operator outside the statistical stages),
+``mwas_serve_request`` (a fixed 200-row request body from the events,
+through ``serve_request`` under the HTTP server's default pin scope) and
 ``opq_encode_replay`` (the registry's form of ``opq_encode``).
 
 ``diff`` exports ``<rev>`` with ``git archive`` into a temp dir, dumps it
@@ -131,6 +133,28 @@ def _mwas_t_only_full_lineage(spark, sf_dir):
     )
 
 
+def _mwas_serve_request(spark, sf_dir):
+    from mwas_rfam_spark.config import MwasConfig
+    from mwas_rfam_spark.operators.condense import condense_metadata
+    from mwas_rfam_spark.plans.testdata_mwas import (
+        mwas_catalog_from_orders,
+        mwas_input_from_events,
+        mwas_metadata_long_from_customer,
+    )
+    from mwas_rfam_spark.streaming.requests import serve_request
+
+    body = mwas_input_from_events(spark, sf_dir).orderBy("run", "group", "quantifier").limit(200)
+    sets_df, ref_df = condense_metadata(mwas_metadata_long_from_customer(spark, sf_dir))
+    return serve_request(
+        spark,
+        [r.asDict() for r in body.collect()],
+        mwas_catalog_from_orders(spark, sf_dir),
+        sets_df,
+        ref_df,
+        MwasConfig(),
+    )
+
+
 def dump(outdir: str, names: list[str], sf_dir: str) -> int:
     """Write one formatted plan per query; a query that fails to build
     records its error in place. Returns the number of failures."""
@@ -144,6 +168,7 @@ def dump(outdir: str, names: list[str], sf_dir: str) -> int:
         **entrymod.bench_queries(),
         "mwas_full": benchmod._mwas_full,
         "mwas_t_only_full_lineage": _mwas_t_only_full_lineage,
+        "mwas_serve_request": _mwas_serve_request,
         "opq_encode_replay": entrymod.q_opq_encode_replay,
     }
     os.makedirs(outdir, exist_ok=True)
