@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from mwas_rfam_spark.config import MwasConfig
-from mwas_rfam_spark.session import get_spark
+from mwas_rfam_spark.session import codegen_compiles, get_spark
 
 HEADLINE = [
     "mwas_cohort_welch",
@@ -225,36 +225,44 @@ CHUNK_SIZE = 8
 # PER-QUERY codegen/JIT, so each query's first timed run paid its own
 # compilation debt and min-of-3 didn't fully clear it. Fix: one UNTIMED
 # pre-run of each query inside its chunk before the timed min-of-3, so the
-# timed minimum is post-codegen. The A/B on chunk 1 (the dedup chunk) is
-# recorded in SCALE.md §"r9 warm-debt forensics". Env knob
-# SPARK_GRAFT_BENCH_PRERUN=0 reproduces the r8 protocol for forensics.
+# timed minimum is post-codegen — as long as the query's generated classes
+# fit Spark's codegen cache (spark.sql.codegen.cache.maxEntries, sized in
+# session.get_spark); a working set past the cache recompiles on every run,
+# which the per-run compile counts (`codegen_compiles`) show. The A/B on
+# chunk 1 (the dedup chunk) is recorded in SCALE.md §"r9 warm-debt
+# forensics". Env knob SPARK_GRAFT_BENCH_PRERUN=0 reproduces the r8
+# protocol for forensics.
 PRERUN = os.environ.get("SPARK_GRAFT_BENCH_PRERUN", "1") != "0"
 
 
-def _timed(spark, raw_runs, name, fn, n=3, prerun=None) -> float:
+def _timed(spark, raw_runs, raw_compiles, name, fn, n=3, prerun=None) -> float:
     """min of n runs: single-shot numbers on this box vary up to 4×
     (GC / scheduler / co-tenant noise); the minimum is the steady-state
     cost. Caches are cleared between runs so each timing is cold-plan.
-    Every raw run is recorded in the output's `runs` field so a drift
-    can be diagnosed from the artifact instead of re-measured.
+    Every raw run is recorded in the output's `runs` field, and the
+    classes it compiled in `codegen_compiles`, so a drift can be
+    diagnosed from the artifact instead of re-measured.
     min-of-3, not 2: the r5 forensics on the four r3→r4 'movers'
     (SCALE.md) traced their +25-40% swings entirely to first-run
     codegen/JIT/GC debt that one retry doesn't reliably clear."""
     import gc
 
-    runs = []
+    runs, compiles = [], []
     # PRERUN: one untimed pre-run pays this query's own codegen/JIT debt
-    # so the timed min below is post-codegen. It is still recorded in
-    # raw_runs (always runs[0] of the n+1) for forensics, but excluded
-    # from the reported min. Callers whose metric IS first-run behavior
+    # so the timed min below is post-codegen while its generated classes
+    # stay in the codegen cache (a nonzero compile count on a timed run
+    # means they did not). It is still recorded in raw_runs (always
+    # runs[0] of the n+1) for forensics, but excluded from the reported
+    # min. Callers whose metric IS first-run behavior
     # (mwas_full_first) override with prerun=False.
     if prerun is None:
         prerun = PRERUN
     total_runs = (n + 1) if prerun else n
     for _ in range(total_runs):
-        t0 = time.time()
+        c0, t0 = codegen_compiles(spark), time.time()
         _force(fn())
         runs.append(round(time.time() - t0, 3))
+        compiles.append(codegen_compiles(spark) - c0)
         spark.catalog.clearCache()
         # untimed GC between runs, BOTH sides of the gateway:
         # localCheckpoint blocks from prior queries are only freed when
@@ -269,6 +277,7 @@ def _timed(spark, raw_runs, name, fn, n=3, prerun=None) -> float:
         except Exception:
             pass
     raw_runs.setdefault(name, []).extend(runs)
+    raw_compiles.setdefault(name, []).extend(compiles)
     return min(runs[1:] if prerun else runs)
 
 
@@ -419,6 +428,7 @@ def _chunk_worker(spec_path: str) -> None:
     _warmup(spark, sf_dir)
     qs = entrymod.bench_queries()
     raw_runs: dict[str, list[float]] = {}
+    raw_compiles: dict[str, list[int]] = {}
     timings: dict[str, float] = {}
     for name in spec["names"]:
         if name == "mwas_full":
@@ -433,19 +443,19 @@ def _chunk_worker(spec_path: str) -> None:
             # identical query three times — its min is post-codegen
             # without burning two extra 10k-resample kernels.
             timings["mwas_full_first"] = _timed(
-                spark, raw_runs, "mwas_full_first",
+                spark, raw_runs, raw_compiles, "mwas_full_first",
                 lambda: _mwas_full(spark, sf_dir), n=3, prerun=False,
             )
             timings[name] = _timed(
-                spark, raw_runs, name, lambda: _mwas_full(spark, sf_dir),
+                spark, raw_runs, raw_compiles, name, lambda: _mwas_full(spark, sf_dir),
                 n=3, prerun=False,
             )
         else:
             timings[name] = _timed(
-                spark, raw_runs, name, lambda: qs[name](spark, sf_dir)
+                spark, raw_runs, raw_compiles, name, lambda: qs[name](spark, sf_dir)
             )
     with open(spec["out"], "w") as f:
-        json.dump({"timings": timings, "runs": raw_runs}, f)
+        json.dump({"timings": timings, "runs": raw_runs, "codegen_compiles": raw_compiles}, f)
     spark.stop()
 
 
@@ -470,6 +480,7 @@ def main():
 
     timings: dict[str, float] = {}
     raw_runs: dict[str, list[float]] = {}
+    raw_compiles: dict[str, list[int]] = {}
     mwas_full_first = None
     cached_gb_start = _meminfo_cached_gb()
     loadavg_start = _loadavg()
@@ -530,6 +541,7 @@ def main():
             )
             timings.update(res["timings"])
             raw_runs.update(res["runs"])
+            raw_compiles.update(res["codegen_compiles"])
 
     # `value`/`queries` stay round-over-round comparable; every number
     # is now a fresh-JVM min-of-3 (see the CHUNK_SIZE note), and every
@@ -588,7 +600,7 @@ def main():
     # matters: the blob goes to a FILE (and stdout first, where head
     # truncation is harmless), and the compact machine-parsable headline
     # is the LAST line printed so any tail window captures it whole.
-    full = dict(headline, runs=raw_runs)
+    full = dict(headline, runs=raw_runs, codegen_compiles=raw_compiles)
     try:
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_runs_last.json"),

@@ -31,10 +31,7 @@ def tokens(text_col: Column) -> Column:
     coalesces to the empty array: size(NULL) is NULL, and every
     count/ratio/fingerprint built on it would NULL-propagate, letting
     NULL-text garbage outscore real prose in quality ranking."""
-    return F.filter(
-        F.split(F.coalesce(text_col, F.lit("")), r"\s+"),
-        lambda t: t != F.lit(""),
-    )
+    return F.array_remove(F.split(F.coalesce(text_col, F.lit("")), r"\s+"), "")
 
 
 def word_ngrams(toks: str, n: int) -> Column:

@@ -111,6 +111,9 @@ def shuffle_shard(
         (hex_prefix_u32(F.col("_shuffle_key")) % n_shards).cast("int"),
     )
     if with_seq:
+        # the window's exchange is the writer's (n_shards, shard) layout,
+        # so write_training_shards' repartition adds no second shuffle
+        out = out.repartition(n_shards, "shard")
         w = Window.partitionBy("shard").orderBy(F.col("_shuffle_key"), F.col(id_col))
         out = out.withColumn("seq", F.row_number().over(w).cast("long"))
     return out.drop("_shuffle_key")

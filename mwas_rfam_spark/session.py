@@ -29,6 +29,15 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Janino-compiled classes are cached by generated source in an LRU
+        # of this many entries (static conf; default 100). One op cycles
+        # through its classes in the same order every time, so a working
+        # set past the cache size hits 0%: a warm curate_docs op (dedup
+        # pipeline, md5 MinHash LSH, curation, sharded write) needs about
+        # 160 classes and at 150 entries still compiled 80 per op, at 200
+        # or more none; a mwas_serve request needs about 80. Each class is
+        # a few KB of metaspace.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -47,3 +56,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """How many classes the JVM's Janino compiler has compiled so far. A
+    generated class found in the codegen cache compiles nothing, so the
+    difference across a block of work is that block's cache misses."""
+    metrics = getattr(
+        getattr(spark.sparkContext._jvm.org.apache.spark.metrics.source, "CodegenMetrics$"),
+        "MODULE$",
+    )
+    return metrics.METRIC_COMPILATION_TIME().getCount()

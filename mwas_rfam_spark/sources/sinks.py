@@ -44,11 +44,14 @@ def write_training_shards(
     (plans/sampling.shuffle_shard's shard/seq — reproducible across
     engines and cluster layouts, unlike rand(seed)).
 
-    One repartition keyed on shard aligns tasks with output directories,
-    and sortWithinPartitions pins the in-file row order to `seq`, so a
-    reader streaming any shard file sees the epoch order directly — no
-    shuffle at training time. At 100 TB pick n_shards = the file
-    parallelism the trainer wants; each shard sorts independently.
+    One repartition keyed on shard aligns tasks with output directories;
+    shuffle_shard's seq window already runs on that same
+    (n_shards, shard) layout, so the planner drops this repartition and
+    the write shuffles once. sortWithinPartitions pins the in-file row
+    order to `seq`, so a reader streaming any shard file sees the epoch
+    order directly — no shuffle at training time. At 100 TB pick
+    n_shards = the file parallelism the trainer wants; each shard sorts
+    independently.
     """
     from pyspark.sql import functions as F
 

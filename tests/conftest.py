@@ -39,6 +39,16 @@ def job_descriptions(spark):
 
 
 @pytest.fixture
+def codegen_compiles(spark):
+    """``codegen_compiles()`` → how many classes the JVM's Janino
+    compiler has compiled so far; the difference across a block is its
+    codegen cache misses."""
+    from mwas_rfam_spark.session import codegen_compiles
+
+    return lambda: codegen_compiles(spark)
+
+
+@pytest.fixture
 def persisted_rdds(spark):
     """``persisted_rdds()`` → ids of the JVM's persisted RDDs that are
     not local checkpoints (those wait for the ContextCleaner; a persist

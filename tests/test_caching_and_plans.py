@@ -672,6 +672,12 @@ def test_write_training_shards_order_and_coverage(spark, tmp_path):
             for r in shuffle_shard(docs, 4, seed=9).collect()}
     got = {(r["doc_id"], r["shard"], r["seq"]) for r in back.collect()}
     assert got == want
+    # the writer's repartition lands on the seq window's own (4, shard)
+    # exchange, so the planner drops it: one shuffle per write
+    plan = (shuffle_shard(docs, 4, seed=9).repartition(4, F.col("shard"))
+            .sortWithinPartitions("shard", "seq")._jdf.queryExecution()
+            .executedPlan().toString())
+    assert plan.count("Exchange") == 1, plan
 
 
 def test_token_budget_mix_prefix_and_crossing(spark):
